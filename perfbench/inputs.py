@@ -3,8 +3,8 @@
 Everything here is plain Python + numpy + pyarrow: the program under test
 receives only the parquet files this module writes, never the seed.
 
-Job workloads (a transcripts table ``conv_id, turn_idx, role, text, tool,
-ts``):
+``job_unique`` writes a transcripts table ``conv_id, turn_idx, role,
+text, tool, ts`` whose ``text`` values are all distinct:
 
 - valid lines are the reference's golden ALB / Classic vectors with seeded
   field values substituted (time, client ip:port, received/sent bytes and,
@@ -14,11 +14,8 @@ ts``):
 - malformed rows are planted variants of generated valid lines: truncated
   after a few tokens, or with a five-digit year in the timestamp (both
   grammars reject either);
-- ``job_unique``: every ``text`` is distinct (timestamps strictly increase
-  with the row index);
-- ``job_redundant``: rows draw Zipf-like from a small seeded pool of such
-  lines (plus the golden malformed vectors), and 20% of the rows land on
-  two hot conversations.
+- timestamps strictly increase with the row index, so no two lines are
+  equal.
 
 ``turn_idx`` is the global row index, so a sampled row can be found in the
 written output by ``turn_idx`` alone, and ``expected_row(i)`` rebuilds any
@@ -44,7 +41,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from elb_pipeline.enrich import ROLES, TOOLS
-from elb_pipeline.goldens import ALB_GOLDENS, CLASSIC_GOLDENS, MALFORMED_POOL
+from elb_pipeline.goldens import ALB_GOLDENS, CLASSIC_GOLDENS
 
 SINK_ALB, SINK_CLASSIC, SINK_MALFORMED = "alb", "classic_lb", "malformed"
 N_FILES = 8  # input parquet files: enough splits for every local core
@@ -53,9 +50,6 @@ DAY_US = 86_400_000_000
 # planted shares, as in the repo's synthesized transcripts mix
 SHARE_ALB, SHARE_CLASSIC = 0.63, 0.185
 MALFORMED_KINDS = ("truncated", "bad_year")
-HOT_SHARE = 0.2  # job_redundant: rows on the two hot conversations
-POOL_LINES = 4096  # job_redundant: distinct lines before Zipf draws
-ZIPF_S = 1.1
 URL_SEGS = ("api", "v1/items", "static", "login", "search", "assets/img")
 
 # token index of each substituted field in a golden line's space-split
@@ -104,25 +98,18 @@ TEMPLATES = ALB_TEMPLATES + CLASSIC_TEMPLATES
 # ---------------------------------------------------------------------------
 
 
-def _variant_arrays(
-    rng: np.random.Generator, n: int, strict_time: bool, u: np.ndarray | None = None
-) -> dict:
-    """Per-line seeded fields for ``n`` lines. ``u`` in [0, 1) picks each
-    line's kind (ALB, Classic, malformed) by the planted shares; it is
-    seeded unless given. With ``strict_time`` the timestamps strictly
-    increase with the line index, so no two lines can be equal."""
-    u = rng.random(n) if u is None else u
+def _variant_arrays(rng: np.random.Generator, n: int) -> dict:
+    """Per-line seeded fields for ``n`` lines. Each line's kind (ALB,
+    Classic, malformed) is drawn by the planted shares; the timestamps
+    strictly increase with the line index, so no two lines can be equal."""
+    u = rng.random(n)
     tmpl = np.where(
         u < SHARE_ALB,
         rng.integers(0, len(ALB_TEMPLATES), n),
         len(ALB_TEMPLATES) + rng.integers(0, len(CLASSIC_TEMPLATES), n),
     )
     jitter = rng.integers(0, 1000, n)
-    time_us = EPOCH_US + (
-        np.arange(n, dtype=np.int64) * 1000 + jitter
-        if strict_time
-        else rng.integers(0, 3 * DAY_US, n)
-    )
+    time_us = EPOCH_US + np.arange(n, dtype=np.int64) * 1000 + jitter
     mal = u >= SHARE_ALB + SHARE_CLASSIC
     return {
         "tmpl": tmpl.astype(np.int16),
@@ -198,7 +185,7 @@ def _lines(a: dict) -> tuple[list[str], list[str]]:
 
 
 # ---------------------------------------------------------------------------
-# job workloads
+# job_unique
 # ---------------------------------------------------------------------------
 
 
@@ -207,48 +194,16 @@ class JobInput:
     path: str  # parquet directory the program reads
     rows: int
     sink_counts: dict[str, int]
-    variants: dict  # seeded field arrays of the distinct lines
-    line_of_row: np.ndarray | None  # row → variant index (None: identity)
+    variants: dict  # seeded field arrays, one line per row
 
     def expected_row(self, i: int) -> tuple[str, str, dict | None]:
         """(text, sink, expected field dict) of row ``i`` (its turn_idx)."""
-        v = i if self.line_of_row is None else int(self.line_of_row[i])
-        n_generated = len(self.variants["tmpl"])
-        if v >= n_generated:  # a golden malformed vector of the pool
-            return MALFORMED_POOL[v - n_generated], SINK_MALFORMED, None
-        ts = _time_strings(self.variants["time_us"][v : v + 1])[0]
-        return _line(self.variants, v, ts)
+        ts = _time_strings(self.variants["time_us"][i : i + 1])[0]
+        return _line(self.variants, i, ts)
 
     def malformed_rows(self) -> np.ndarray:
         """Row indices whose planted sink is ``malformed``."""
-        mal = self.variants["mal"] >= 0
-        if self.line_of_row is None:
-            return np.flatnonzero(mal)
-        mal = np.concatenate([mal, np.ones(len(MALFORMED_POOL), dtype=bool)])
-        return np.flatnonzero(mal[self.line_of_row])
-
-
-def _zipf_ranks(rng: np.random.Generator, n: int, k: int) -> np.ndarray:
-    w = 1.0 / np.arange(1, k + 1) ** ZIPF_S
-    return rng.choice(k, size=n, p=w / w.sum())
-
-
-def _job_arrays(workload: str, seed: int, rows: int) -> tuple[dict, np.ndarray | None, np.ndarray]:
-    """(variant arrays, row → variant index or None, conv number per row)."""
-    rng = np.random.default_rng([seed, 1 if workload == "job_unique" else 2])
-    n_convs = max(rows // 50, 4)
-    if workload == "job_unique":
-        a = _variant_arrays(rng, rows, strict_time=True)
-        return a, None, rng.integers(0, n_convs, rows)
-    # pool line k is the k-th most frequent; its kind follows a fixed
-    # cycle, so every seed plants the same sink shares (up to draw noise)
-    cycle = np.random.default_rng(0).random(27)
-    a = _variant_arrays(rng, POOL_LINES, False, u=cycle[np.arange(POOL_LINES) % 27])
-    # the golden malformed vectors join the pool as its rarest lines
-    line_of_row = _zipf_ranks(rng, rows, POOL_LINES + len(MALFORMED_POOL))
-    hot = rng.random(rows) < HOT_SHARE
-    conv = np.where(hot, rng.integers(0, 2, rows), rng.integers(2, n_convs, rows))
-    return a, line_of_row, conv
+        return np.flatnonzero(self.variants["mal"] >= 0)
 
 
 def prune(cache_dir: str, keep: int) -> None:
@@ -285,20 +240,17 @@ def _write_table(table: pa.Table, path: str) -> None:
     os.rename(tmp, path)
 
 
-def job_input(cache_dir: str, workload: str, seed: int, rows: int) -> JobInput:
-    """Generate (or reuse the cached) transcripts table for a job workload."""
-    a, line_of_row, conv = _job_arrays(workload, seed, rows)
-    path = os.path.join(cache_dir, f"{workload}-s{seed}-n{rows}")
+def job_input(cache_dir: str, seed: int, rows: int) -> JobInput:
+    """Generate (or reuse the cached) transcripts table for ``job_unique``."""
+    rng = np.random.default_rng([seed, 1])
+    a = _variant_arrays(rng, rows)
+    conv = rng.integers(0, max(rows // 50, 4), rows)
+    path = os.path.join(cache_dir, f"job_unique-s{seed}-n{rows}")
     meta = _cached(path)
     if meta is not None:
-        return JobInput(path, rows, meta["sink_counts"], a, line_of_row)
+        return JobInput(path, rows, meta["sink_counts"], a)
 
     texts, sinks = _lines(a)
-    if line_of_row is not None:
-        texts += MALFORMED_POOL
-        sinks += [SINK_MALFORMED] * len(MALFORMED_POOL)
-        pool_text, pool_sink = np.array(texts, dtype=object), np.array(sinks, dtype=object)
-        texts, sinks = pool_text[line_of_row].tolist(), pool_sink[line_of_row].tolist()
     rng = np.random.default_rng([seed, 3])
     idx = np.arange(rows)
     ts_us = EPOCH_US + (idx % 3) * DAY_US + rng.integers(0, DAY_US, rows)
@@ -318,7 +270,7 @@ def job_input(cache_dir: str, workload: str, seed: int, rows: int) -> JobInput:
         counts[s] += 1
     with open(os.path.join(path, "_bench_meta.json"), "w") as fh:
         json.dump({"sink_counts": counts}, fh)
-    return JobInput(path, rows, counts, a, line_of_row)
+    return JobInput(path, rows, counts, a)
 
 
 

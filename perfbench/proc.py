@@ -8,7 +8,9 @@ import os
 import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
-# command-line markers of a Spark driver JVM and of PySpark's worker daemon
+# command-line arguments of a Spark driver JVM and of PySpark's worker
+# daemon; matched against whole arguments, so a shell command that merely
+# mentions them does not count
 SPARK_MARKERS = (b"org.apache.spark.deploy.SparkSubmit", b"pyspark.daemon")
 
 
@@ -92,7 +94,7 @@ def foreign_spark_pids() -> list[int]:
                 cmd = fh.read()
         except OSError:
             continue
-        if any(m in cmd for m in SPARK_MARKERS):
+        if any(m in cmd.split(b"\0") for m in SPARK_MARKERS):
             out.append(int(name))
     return out
 

@@ -1,16 +1,21 @@
 #!/usr/bin/env python3
 """Benchmark of the elb_pipeline ETL job and dedup chain.
 
-    python3 perfbench/run.py --workload job_unique --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload job_unique --seed 1 --seconds 16 --trace 0
 
 Run from the root of a checkout. One process: it generates the seeded
 input (cached under perfbench/_work), starts one Spark session on
-local[nproc] through ``session.get_spark`` + ``session.perf_conf``, runs one
-untimed warm-up pass, then timed passes until their summed wall time
-reaches ``--seconds``, and at least two of them; the end-to-end timings
-are medians over the timed passes. Each pass reads its input afresh, writes into a
-fresh output directory and a fresh ``ELB_MAT_CACHE``, and is checked by
-a correctness gate outside the timed window. The last stdout line is one
+local[nproc] through ``session.get_spark`` + ``session.perf_conf``, runs
+untimed warm-up passes (two for job_unique, three for dedup_corpus), then
+a fixed number of timed passes:
+``--seconds`` divided by the workload's nominal pass time, rounded, and
+at least two. The count never depends on how fast the passes run, so a
+faster program is timed over the same passes. The end-to-end timings are
+medians over the timed passes. Each pass reads its input afresh, writes
+into a fresh output directory and a fresh ``ELB_MAT_CACHE``, and is
+checked by a correctness gate outside the timed window. With
+``--trace 1`` the run makes one traced cycle instead (a timed pass and
+its traced variant, about three passes long). The last stdout line is one
 JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``
 (end-to-end metrics with ``--trace 0``, per-layer metrics with
 ``--trace 1``). Spans of a traced run go to perfbench/_work/spans-*.jsonl.
@@ -18,7 +23,7 @@ JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``
 Exit codes: 0 done (the JSON says whether outputs were correct), 2 the
 program is not in the checkout, 3 another Spark JVM or PySpark worker is
 alive (it would skew every timing), 4 a child process outlived the
-session.
+session, 5 a traced run's pass raised, so it has no layer values.
 """
 
 from __future__ import annotations
@@ -35,9 +40,16 @@ T_START = time.monotonic()
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, "perfbench", "_work")
 
-# input size per workload: input rows for the job workloads, base
-# documents for dedup_corpus (the pool adds the program's planted copies)
-SIZES = {"job_unique": 120_000, "job_redundant": 600_000, "dedup_corpus": 2_000}
+# input size per workload: input rows for job_unique, base documents for
+# dedup_corpus (the pool adds the program's planted copies)
+SIZES = {"job_unique": 120_000, "dedup_corpus": 2_000}
+# seconds of a warm pass on 4 vCPUs; a constant, it only turns --seconds
+# into a pass count
+NOMINAL_PASS_S = {"job_unique": 9.5, "dedup_corpus": 7.0}
+# untimed passes before the first timed one. The first pass in a session
+# starts the Python workers and compiles the pass's code; on dedup_corpus
+# the third still takes 15-30% more CPU than the later ones.
+WARMUP_PASSES = {"job_unique": 2, "dedup_corpus": 3}
 MIN_PASSES = 2  # timed passes per run, at the least
 INPUTS_KEPT = 6  # cached inputs kept, most recently used first
 KERNEL_MAX_ROWS = 50_000  # rows the single-thread kernel profile covers
@@ -166,7 +178,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.workload == "dedup_corpus":
         inp = inputs.dedup_input(f"{WORK}/inputs", args.seed, size)
     else:
-        inp = inputs.job_input(f"{WORK}/inputs", args.workload, args.seed, size)
+        inp = inputs.job_input(f"{WORK}/inputs", args.seed, size)
     inputs.prune(f"{WORK}/inputs", keep=INPUTS_KEPT)
     calib_before = proc.calib_s()
     own_s = time.monotonic() - t_gen  # input generation and the host probe
@@ -175,25 +187,18 @@ def main(argv: list[str] | None = None) -> None:
     n_cpu = len(os.sched_getaffinity(0))
     t0 = time.monotonic()
     spark = _start_session(n_cpu)
-    bench.layer["session.start_s"] = [time.monotonic() - t0]
+    bench.layer["session.start_s"] = time.monotonic() - t0
     try:
         t0 = time.monotonic()
-        bench.warm(spark)
-        bench.layer["session.warmup_s"] = [time.monotonic() - t0]
+        warm_walls = [bench.warm(spark, k) for k in range(WARMUP_PASSES[args.workload])]
+        bench.layer["session.warmup_s"] = time.monotonic() - t0
         # process start → first timed pass, less the benchmark's own input
         # generation (a cache hit or miss is not the program's set-up)
         setup_s = time.monotonic() - T_START - own_s
         proc.reset_peak_rss()
-        spent = last = 0.0
-        if args.trace:
-            # a traced cycle is several passes long: start one only if it
-            # should end within the window (the first always runs)
-            while not spent or spent + last <= args.seconds:
-                last = bench.run_pass(spark)
-                spent += last
-        else:
-            while spent < args.seconds or bench.attempted < MIN_PASSES:
-                spent += bench.run_pass(spark)
+        n_passes = max(MIN_PASSES, round(args.seconds / NOMINAL_PASS_S[args.workload]))
+        for _ in range(1 if args.trace else n_passes):
+            bench.run_pass(spark)
         peak_rss_mb = proc.tree_peak_rss_mb()
         if args.trace:
             bench.trace_once(spark)
@@ -202,10 +207,13 @@ def main(argv: list[str] | None = None) -> None:
     calib = statistics.median([calib_before, proc.calib_s()])
 
     if args.trace:
-        bench.layer["host.calib_s"] = [calib]
+        bench.layer["host.calib_s"] = calib
+        missing = sorted(PER_LAYER.keys() - bench.layer.keys())
+        if missing:  # the traced pass raised before its variant ran
+            _die(5, f"no traced values for {missing}: {bench.errors[:3]}")
         bench.recorder.write(f"{WORK}/spans-{args.workload}-s{args.seed}.jsonl")
         metrics = {
-            name: {"value": bench.layer_value(name), "unit": unit}
+            name: {"value": bench.layer[name], "unit": unit}
             for name, unit in PER_LAYER.items()
         }
     else:
@@ -222,8 +230,9 @@ def main(argv: list[str] | None = None) -> None:
     print(json.dumps({
         "detail": {
             "workload": args.workload, "seed": args.seed, "size": size,
-            "walls": bench.walls, "cpus": bench.cpus, "errors": bench.errors[:5],
-            "session_start_s": bench.layer["session.start_s"][0],
+            "warm_walls": warm_walls, "walls": bench.walls, "cpus": bench.cpus,
+            "errors": bench.errors[:5],
+            "session_start_s": bench.layer["session.start_s"],
             "own_s": own_s, "host.calib_s": calib, "total_s": time.monotonic() - T_START,
         }
     }))
@@ -254,15 +263,7 @@ class Bench:
         self.errors: list[str] = []
         self.attempted = self.failed = 0
         self.n_pass = 0
-        self.layer: dict[str, list[float]] = {}
-
-    def layer_value(self, name: str) -> float:
-        """Median of a per-layer metric over the traced passes."""
-        return statistics.median(self.layer[name])
-
-    def _add_layers(self, values: dict[str, float]) -> None:
-        for k, v in values.items():
-            self.layer.setdefault(k, []).append(v)
+        self.layer: dict[str, float] = {}
 
     def _pass(self, spark, path: str, out_dir: str, key: str):
         from perfbench import passes
@@ -271,19 +272,23 @@ class Bench:
             return passes.dedup_pass(spark, path, key)
         return passes.job_pass(spark, path, out_dir)
 
-    def warm(self, spark) -> None:
+    def warm(self, spark, k: int) -> float:
         """One untimed, ungated pass: it starts the Python workers and
-        compiles the pass's code paths before anything is timed."""
-        out_dir = _fresh(f"{WORK}/out/warm")
-        cache_dir = _fresh(f"{WORK}/matcache/warm")
+        compiles the pass's code paths before anything is timed. Returns
+        its wall seconds, for the run's detail line."""
+        out_dir = _fresh(f"{WORK}/out/warm-{k}")
+        cache_dir = _fresh(f"{WORK}/matcache/warm-{k}")
         os.environ["ELB_MAT_CACHE"] = cache_dir
-        self._pass(spark, self.inp.path, out_dir, "warm")
+        t0 = time.perf_counter()
+        self._pass(spark, self.inp.path, out_dir, f"warm{k}")
+        wall = time.perf_counter() - t0
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(cache_dir, ignore_errors=True)
+        return wall
 
-    def run_pass(self, spark) -> float:
+    def run_pass(self, spark) -> None:
         """One timed and gated pass, followed by its traced variant when
-        --trace 1; returns the seconds both took."""
+        --trace 1."""
         from perfbench import passes, proc
 
         self.n_pass += 1
@@ -317,16 +322,13 @@ class Bench:
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(cache_dir, ignore_errors=True)
         if self.args.trace and result is not None:
-            t1 = time.perf_counter()
             self._trace(spark, wall)
-            wall += time.perf_counter() - t1
-        return wall
 
     def _trace(self, spark, untraced_wall: float) -> None:
         """The traced variant of the pass just run."""
         values, span = self._trace_chain(spark, self.inp, self.n_pass)
         values["trace.overhead_frac"] = span / untraced_wall - 1
-        self._add_layers(values)
+        self.layer.update(values)
 
     def _trace_chain(self, spark, inp, n: int) -> tuple[dict[str, float], float]:
         """Traced job prefixes or dedup chain over ``inp``, in fresh
@@ -364,7 +366,7 @@ class Bench:
         from perfbench import inputs, passes
 
         if self.dedup:
-            other = inputs.job_input(f"{WORK}/inputs", "job_unique", self.args.seed, COMPANION_ROWS)
+            other = inputs.job_input(f"{WORK}/inputs", self.args.seed, COMPANION_ROWS)
         else:
             other = inputs.dedup_input(f"{WORK}/inputs", self.args.seed, COMPANION_DOCS)
         with self.recorder.span("companion", 0):
@@ -372,7 +374,7 @@ class Bench:
         del values["sources.scan_s"]  # the workload's own scan is the one reported
         batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
         values.update(passes.kernel_profile(other if self.dedup else self.inp, batch, KERNEL_MAX_ROWS))
-        self._add_layers(values)
+        self.layer.update(values)
 
 
 if __name__ == "__main__":

@@ -2,9 +2,11 @@
 """Run the benchmark on several seeds and report each metric's median and
 quartile spread (IQR / median), as the acceptance check computes it.
 
-    python3 perfbench/spread.py --workload job_unique --seeds 1-10 --seconds 24
+    python3 perfbench/spread.py --workload job_unique --seeds 1-10
 
-Runs are sequential; each run's result line is appended to ``--log``.
+Each run measures ``run_seconds`` from BENCHMARK.json, as the benchmark's
+runs do. Runs are sequential; each run's result line is appended to
+``--log``.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
 
 
 def seeds(spec: str) -> list[int]:
@@ -36,16 +39,17 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--seconds", type=int, default=24)
     ap.add_argument("--trace", type=int, default=0)
     ap.add_argument("--log", default=os.path.join(HERE, "_work", "spread.jsonl"))
     args = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        seconds = json.load(fh)["run_seconds"]
     os.makedirs(os.path.dirname(args.log), exist_ok=True)
     results = []
     for seed in seeds(args.seeds):
         t0 = time.monotonic()
         cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", args.workload,
-               "--seed", str(seed), "--seconds", str(args.seconds), "--trace", str(args.trace)]
+               "--seed", str(seed), "--seconds", str(seconds), "--trace", str(args.trace)]
         out = subprocess.run(cmd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
         lines = out.stdout.strip().splitlines()
         if out.returncode or not lines:

@@ -1,4 +1,5 @@
-"""Tests of the benchmark's own parts: generator, gates and trace split.
+"""Tests of the benchmark's own parts: generator, gates, trace split and
+process hygiene.
 
     python3 -m pytest perfbench/test_perfbench.py -q
 
@@ -11,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 
 import numpy as np
@@ -20,7 +22,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from elb_pipeline.dialects import ALB_PATTERN, CLASSIC_PATTERN  # noqa: E402
-from perfbench import inputs, passes  # noqa: E402
+from perfbench import inputs, passes, proc  # noqa: E402
 from perfbench.trace import JOB_PREFIXES, Recorder, prefix_layers  # noqa: E402
 
 ROWS = 20_000
@@ -38,25 +40,23 @@ def _texts(inp) -> list[str]:
     return pq.read_table(inp.path).column("text").to_pylist()
 
 
-@pytest.mark.parametrize("workload", ["job_unique", "job_redundant"])
-def test_job_input_same_seed_same_bytes(tmp_path, workload):
-    a = inputs.job_input(str(tmp_path / "a"), workload, 7, ROWS)
-    b = inputs.job_input(str(tmp_path / "b"), workload, 7, ROWS)
+def test_job_input_same_seed_same_bytes(tmp_path):
+    a = inputs.job_input(str(tmp_path / "a"), 7, ROWS)
+    b = inputs.job_input(str(tmp_path / "b"), 7, ROWS)
     assert _bytes(a.path) == _bytes(b.path)
     assert a.sink_counts == b.sink_counts
 
 
-@pytest.mark.parametrize("workload", ["job_unique", "job_redundant"])
-def test_job_input_other_seed_other_lines_same_shares(tmp_path, workload):
-    a = inputs.job_input(str(tmp_path), workload, 7, ROWS)
-    b = inputs.job_input(str(tmp_path), workload, 8, ROWS)
+def test_job_input_other_seed_other_lines_same_shares(tmp_path):
+    a = inputs.job_input(str(tmp_path), 7, ROWS)
+    b = inputs.job_input(str(tmp_path), 8, ROWS)
     assert _texts(a) != _texts(b)
     for sink in a.sink_counts:
         assert abs(a.sink_counts[sink] - b.sink_counts[sink]) / ROWS < 0.03
 
 
 def test_job_unique_lines_distinct_and_shares_planted(tmp_path):
-    inp = inputs.job_input(str(tmp_path), "job_unique", 3, ROWS)
+    inp = inputs.job_input(str(tmp_path), 3, ROWS)
     texts = _texts(inp)
     assert len(set(texts)) == ROWS
     shares = {k: v / ROWS for k, v in inp.sink_counts.items()}
@@ -64,21 +64,11 @@ def test_job_unique_lines_distinct_and_shares_planted(tmp_path):
     assert abs(shares["classic_lb"] - inputs.SHARE_CLASSIC) < 0.02
 
 
-def test_job_redundant_repeats_lines_and_hot_convs(tmp_path):
-    inp = inputs.job_input(str(tmp_path), "job_redundant", 3, ROWS)
-    table = pq.read_table(inp.path)
-    assert len(set(table.column("text").to_pylist())) < ROWS // 4
-    convs = table.column("conv_id").to_pylist()
-    hot = sum(c in ("conv-000000", "conv-000001") for c in convs) / ROWS
-    assert abs(hot - inputs.HOT_SHARE) < 0.02
-
-
-@pytest.mark.parametrize("workload", ["job_unique", "job_redundant"])
-def test_expected_rows_agree_with_grammars(tmp_path, workload):
+def test_expected_rows_agree_with_grammars(tmp_path):
     """The planted sink of every sampled row is the one the grammars give,
     and the expected JSON of a valid row is its golden JSON with the
     substituted values."""
-    inp = inputs.job_input(str(tmp_path), workload, 5, ROWS)
+    inp = inputs.job_input(str(tmp_path), 5, ROWS)
     texts = _texts(inp)
     alb, clb = re.compile(ALB_PATTERN), re.compile(CLASSIC_PATTERN)
     for i in range(0, ROWS, 13):
@@ -122,14 +112,14 @@ def _written(inp, sample):
 
 
 def test_job_gate_passes_correct_output_and_fails_wrong_count(tmp_path):
-    inp = inputs.job_input(str(tmp_path), "job_unique", 2, ROWS)
+    inp = inputs.job_input(str(tmp_path), 2, ROWS)
     assert passes.check_counts(inp, dict(inp.sink_counts)) == []
     wrong = dict(inp.sink_counts, alb=inp.sink_counts["alb"] + 1)
     assert passes.check_counts(inp, wrong)
 
 
 def test_job_gate_fails_wrong_rows(tmp_path):
-    inp = inputs.job_input(str(tmp_path), "job_unique", 2, ROWS)
+    inp = inputs.job_input(str(tmp_path), 2, ROWS)
     mal = inp.malformed_rows()[:4].tolist()
     sample = sorted(set(range(0, ROWS, 997)) | set(mal))
     rows = _written(inp, sample)
@@ -187,3 +177,28 @@ def test_spans_record_parent():
     pool, chain = rec.spans
     assert (pool.name, pool.parent, pool.pass_no) == ("pool", "chain", 2)
     assert chain.parent is None and chain.start <= pool.start <= pool.end <= chain.end
+
+
+# ---------------------------------------------------------------------------
+# process hygiene
+# ---------------------------------------------------------------------------
+
+
+def _outside_tree(argv: list[str]) -> int:
+    """Start ``argv`` as a grandchild whose parent exits at once, so it runs
+    outside this process's tree, as another run's processes do."""
+    child = subprocess.run(
+        [sys.executable, "-c", "import subprocess; print(subprocess.Popen("
+         f"{argv!r}, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL).pid)"],
+        capture_output=True, text=True, check=True,
+    )
+    return int(child.stdout)
+
+
+def test_foreign_spark_pids_matches_whole_arguments_only():
+    sleep = "import time; time.sleep(3)"
+    daemon = _outside_tree([sys.executable, "-c", sleep, "pyspark.daemon"])
+    mention = _outside_tree(["sh", "-c", "sleep 3; : SparkSubmit pyspark.daemon"])
+    found = proc.foreign_spark_pids()
+    assert daemon in found
+    assert mention not in found
