@@ -113,15 +113,6 @@ def training_corpus(
     )
 
 
-def bench_shingles(documents: DataFrame) -> DataFrame:
-    """Distinct shingles of the held-out benchmark docs (raw table form)."""
-    return (
-        documents.where(F.col("doc_id") < N_BENCH_DOCS)
-        .select(F.explode(D._shingles()).alias("s"))
-        .distinct()
-    )
-
-
 def en_base_ids(documents: DataFrame) -> DataFrame:
     return (
         documents.where(F.col("lang") == "en")

@@ -311,11 +311,6 @@ def _band_key(b: int):
     return F.md5(F.concat(*cols))
 
 
-def _band_key_sql(b: int) -> str:
-    cols = " || ".join(f"sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
-    return f"md5({cols})"
-
-
 def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Distinct (a_id, b_id) candidate pairs: two docs agreeing on ALL
     rows of at least one band.

@@ -6,8 +6,9 @@ Observable semantics mirror the reference CLI (main.rs:67-212):
   routed to three sinks instead of stdout/stderr;
 - error policy = the ``--skip-parse-errors`` flag (main.rs:53-54,
   194-203), three modes: ``skip`` routes malformed lines to the
-  dead-letter sink and continues; ``strict`` raises after the group
-  commits if ANY line was malformed (counts come from disk); and
+  dead-letter sink and continues; ``strict`` raises after the pass
+  commits its clean groups if ANY line was malformed (counts come from
+  disk; the error names the lowest malformed group); and
   ``strict-fast`` reproduces the reference exactly — the fused parse
   operator aborts the task at the FIRST malformed line with the
   reference's error text (parse.rs:8). Like the CLI, both strict modes
@@ -17,18 +18,20 @@ Observable semantics mirror the reference CLI (main.rs:67-212):
 
 Scale design (the parts the reference cannot express):
 
-- the input is processed in ``n_groups`` conv_id bucket groups
-  (crc32-based — version-stable so resume survives upgrades); each group
-  commits independently with a manifest (checkpoint.py), so a failed run
-  resumes at group granularity. On a real cluster the transcripts Iceberg
-  table is bucket-partitioned by conv_id, making each group's scan prune
-  to its own files; in local tests the filter is evaluated post-scan.
-- within a group the data is read ONCE and crosses the Python boundary
-  ONCE: a single fused Arrow operator (parse.routed_json_both) routes,
-  extracts, serializes NDJSON, and diagnoses dead letters, and all three
-  sinks land in one dynamic-partition write (``partitionBy(sink,
-  ts_day)``). No persist: caching the routed frame measured pathological
-  at scale (Spark's columnar cache builder crawls on wide text columns).
+- rows fall into ``n_groups`` conv_id bucket groups (crc32-based —
+  version-stable so resume survives upgrades). The group is the resume
+  unit: each has its own manifest (checkpoint.py) and a restart skips
+  the committed ones. A run commits all its pending groups in ONE pass,
+  so a failed run re-runs all of them. On a real cluster the transcripts
+  Iceberg table is bucket-partitioned by conv_id, so a resumed run's
+  pending-group filter prunes files; in local tests it runs post-scan.
+- the pending rows are read ONCE and cross the Python boundary ONCE: a
+  single fused Arrow operator (parse.routed_json_both) routes, extracts,
+  serializes NDJSON, and diagnoses dead letters, and every group and
+  sink lands in one dynamic-partition write (``partitionBy(group, sink,
+  ts_day)``). A pending group's old output is deleted first. No persist:
+  caching the routed frame measured pathological at scale (Spark's
+  columnar cache builder crawls on wide text columns).
 - failed-position diagnosis (byte-exact, reference parse.rs:22-41
   semantics) runs only on the malformed minority inside that same pass —
   the reference's error fast-path asymmetry (alb.rs:199-203 allocates
@@ -40,6 +43,8 @@ Scale design (the parts the reference cannot express):
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -51,7 +56,10 @@ from elb_pipeline import checkpoint
 from elb_pipeline.aggregate import conv_bucket
 from elb_pipeline.dialects import SINK_ALB, SINK_CLASSIC, SINK_MALFORMED
 from elb_pipeline.enrich import enrich
-from elb_pipeline.parse import routed_json_both
+from elb_pipeline.parse import PARSE_ABORT_SENTINEL, routed_json_both
+
+
+_SINKS = (SINK_ALB, SINK_CLASSIC, SINK_MALFORMED)
 
 
 class StrictModeError(RuntimeError):
@@ -64,12 +72,6 @@ class JobResult:
     groups_skipped: list[int] = field(default_factory=list)
     sink_counts: dict[str, int] = field(default_factory=dict)
     wall_seconds: float = 0.0
-
-
-def _group_filter(n_groups: int, group: int) -> F.Column:
-    # crc32 is stable across Spark versions (unlike hash/xxhash64 seeds in
-    # principle) — resume manifests stay valid across upgrades.
-    return F.pmod(F.crc32(F.col("conv_id").cast("binary")), F.lit(n_groups)) == group
 
 
 def run_job(
@@ -94,19 +96,15 @@ def run_job(
         raise ValueError(f"mode must be skip|strict|strict-fast, got {mode!r}")
     t0 = time.monotonic()
     result = JobResult()
-
     for g in range(n_groups):
-        if resume and checkpoint.is_done(output_dir, g):
-            result.groups_skipped.append(g)
-            continue
-        _run_group(
-            spark, transcripts, output_dir, mode, n_groups, g,
-            diag_positions=diag_positions,
-        )
-        result.groups_run.append(g)
+        done = resume and checkpoint.is_done(output_dir, g)
+        (result.groups_skipped if done else result.groups_run).append(g)
+    if result.groups_run:
+        _commit(spark, transcripts, output_dir, mode, n_groups, result.groups_run,
+                diag_positions)
 
     # roll up job-level sink totals from the manifests
-    totals: dict[str, int] = {s: 0 for s in (SINK_ALB, SINK_CLASSIC, SINK_MALFORMED)}
+    totals: dict[str, int] = dict.fromkeys(_SINKS, 0)
     for g in checkpoint.completed_groups(output_dir):
         for sink, n in checkpoint.read_manifest(output_dir, g)["sink_counts"].items():
             totals[sink] = totals.get(sink, 0) + n
@@ -134,6 +132,7 @@ _WRITTEN_SCHEMA = T.StructType(
         T.StructField("failed_position", T.IntegerType()),
         T.StructField("sink", T.StringType()),
         T.StructField("ts_day", T.DateType()),
+        T.StructField("group", T.IntegerType()),
     ]
 )
 
@@ -209,26 +208,39 @@ def export_ndjson_sharded(
     return path
 
 
-def _run_group(
+def _commit(
     spark: SparkSession,
     transcripts: DataFrame,
     output_dir: str,
     mode: str,
     n_groups: int,
-    group: int,
-    diag_positions: bool = True,
+    pending: list[int],
+    diag_positions: bool,
 ) -> None:
-    rows = transcripts.where(_group_filter(n_groups, group))
+    """Commit every pending group in one pass: a data write, an aggregate
+    write and a lineage collect, then one manifest per group."""
+    # crc32 is stable across Spark versions (unlike hash/xxhash64 seeds in
+    # principle) — resume manifests stay valid across upgrades.
+    group = F.pmod(F.crc32(F.col("conv_id").cast("binary")), F.lit(n_groups))
+    if len(pending) < n_groups:
+        transcripts = transcripts.where(group.isin(pending))
 
-    # ONE fused Arrow operator routes every line, extracts+serializes both
-    # valid dialects, keeps the raw text + byte-exact failed-position
-    # diagnosis for ONLY the malformed minority — a single Python-worker
-    # wave — then broadcast-enrich and a single dynamic-partition write
-    # fans all three sinks out by (sink, ts_day). No persist: caching the
-    # routed frame measured pathological at scale (Spark's columnar cache
-    # builder crawls on wide text columns).
+    # A pending group may hold a half-written earlier attempt; the writes
+    # below append, so clear it first. The manifest goes first: a group
+    # must never claim output that is no longer on disk.
+    for g in pending:
+        if checkpoint.is_done(output_dir, g):
+            os.remove(checkpoint.manifest_path(output_dir, g))
+        for d in (f"{output_dir}/data/group={g}", f"{output_dir}/aggregates/group={g}"):
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+
+    # ONE fused Arrow operator (route, extract+serialize, diagnose the
+    # malformed minority) — a single Python-worker wave for all pending
+    # groups — then broadcast-enrich and a single dynamic-partition write
+    # that fans every group and sink out by (group, sink, ts_day).
     routed = routed_json_both(
-        rows,
+        transcripts,
         with_diag=True,
         fail_fast=(mode == "strict-fast"),
         diag_positions=diag_positions,
@@ -237,27 +249,23 @@ def _run_group(
         enrich(routed, spark)
         .withColumn("ts_day", F.to_date("ts"))
         .withColumn("src_partition", F.spark_partition_id())
+        .withColumn("group", group)
     )
     try:
         (
             out.select(*[f.name for f in _WRITTEN_SCHEMA.fields])
-            .write.mode("overwrite")
-            .partitionBy("sink", "ts_day")
-            .parquet(f"{output_dir}/data/group={group}")
+            .write.mode("append")
+            .partitionBy("group", "sink", "ts_day")
+            .parquet(f"{output_dir}/data")
         )
     except Exception as exc:  # noqa: BLE001 — py4j wraps the task failure
         # strict-fast: the fused operator aborted the task at the first
         # malformed line (reference main.rs:194-203); surface it as the
-        # job-level strict error with the reference's message.
-        from elb_pipeline.parse import PARSE_ABORT_SENTINEL
-
-        # Match on the sentinel token the operator embeds in its message —
-        # stable against py4j/Spark traceback-formatting changes — not on
-        # the human-readable class-name prefix.
+        # job-level strict error with the reference's message. The sentinel
+        # token is stable against py4j/Spark traceback formatting; the line
+        # after it is the exception itself, not the quoted UDF source.
         msg = str(exc)
         if mode == "strict-fast" and PARSE_ABORT_SENTINEL in msg:
-            # take the exception line itself, not the quoted UDF source
-            # that py4j also embeds in the traceback text
             line = msg.rsplit(PARSE_ABORT_SENTINEL, 1)[1].splitlines()[0].strip()
             if line.startswith("Invalid log line:"):
                 line = line[len("Invalid log line:"):].strip()
@@ -265,46 +273,38 @@ def _run_group(
         raise
 
     # ---- metrics from what actually landed on disk (footer-cheap counts).
-    # Explicit schema: a group whose input was empty writes no part files,
-    # and a schema-less read of that directory would raise
+    # Explicit schema: with no part files a schema-less read would raise
     # UNABLE_TO_INFER_SCHEMA — with the schema it is just an empty frame.
-    written = spark.read.schema(_WRITTEN_SCHEMA).parquet(
-        f"{output_dir}/data/group={group}"
-    ).select("sink", "conv_id", "ts_day", "src_partition")
-
-    agg = written.groupBy("sink", conv_bucket(), "ts_day").agg(
+    written = (
+        spark.read.schema(_WRITTEN_SCHEMA)
+        .parquet(f"{output_dir}/data")
+        .where(F.col("group").isin(pending))
+        .select("group", "sink", "conv_id", "ts_day", "src_partition")
+    )
+    agg = written.groupBy("group", "sink", conv_bucket(), "ts_day").agg(
         F.count("*").alias("n")
     )
-    agg.write.mode("overwrite").parquet(f"{output_dir}/aggregates/group={group}")
+    agg.write.mode("append").partitionBy("group").parquet(f"{output_dir}/aggregates")
 
-    lineage_rows = (
-        written.groupBy(F.col("src_partition").alias("partition_id"), "sink")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    sink_counts = {s: 0 for s in (SINK_ALB, SINK_CLASSIC, SINK_MALFORMED)}
-    for r in lineage_rows:
-        sink_counts[r["sink"]] = sink_counts.get(r["sink"], 0) + r["n"]
+    lineage_rows = written.groupBy(
+        "group", F.col("src_partition").alias("partition_id"), "sink"
+    ).agg(F.count("*").alias("n")).collect()
+    counts = {g: dict.fromkeys(_SINKS, 0) for g in pending}
+    lineage: dict[int, list[dict]] = {g: [] for g in pending}
+    for r in sorted(lineage_rows, key=lambda r: (r["partition_id"], r["sink"])):
+        counts[r["group"]][r["sink"]] += r["n"]
+        lineage[r["group"]].append({k: r[k] for k in ("partition_id", "sink", "n")})
 
-    if mode == "strict" and sink_counts.get(SINK_MALFORMED, 0) > 0:
+    malformed = [g for g in pending if mode == "strict" and counts[g][SINK_MALFORMED]]
+    for g in pending:
+        if g not in malformed:
+            checkpoint.write_manifest(output_dir, g, {
+                "group": g, "n_groups": n_groups, "mode": mode,
+                "sink_counts": counts[g], "lineage": lineage[g],
+            })
+    if malformed:
+        g = malformed[0]
         raise StrictModeError(
-            f"strict mode: {sink_counts[SINK_MALFORMED]} malformed line(s) "
-            f"in bucket group {group}"
+            f"strict mode: {counts[g][SINK_MALFORMED]} malformed line(s) "
+            f"in bucket group {g}"
         )
-
-    checkpoint.write_manifest(
-        output_dir,
-        group,
-        {
-            "group": group,
-            "n_groups": n_groups,
-            "mode": mode,
-            "sink_counts": sink_counts,
-            "lineage": [
-                {"partition_id": r["partition_id"], "sink": r["sink"], "n": r["n"]}
-                for r in sorted(
-                    lineage_rows, key=lambda r: (r["partition_id"], r["sink"])
-                )
-            ],
-        },
-    )

@@ -15,9 +15,6 @@ operator                          wall (8M)    use
 ================================  ==========  =============================
 ``with_sink``                       ~3 s      routing only (match, no
                                               captures → RE2 DFA path)
-``with_dialect_struct``            ~11 s      per-sink field extraction,
-                                              applied post-filter so each
-                                              row is extracted once
 ``with_parsed`` (52-col struct)    ~68 s      full both-dialect struct;
                                               golden tests / wide queries
 ================================  ==========  =============================
@@ -38,6 +35,7 @@ the reference (it never converts types — README.md:28).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import numpy as np
@@ -66,14 +64,10 @@ PARSED_FIELDS = ["sink", *ALB_COLS, *CLB_COLS]
 PARSED_SCHEMA = T.StructType(
     [T.StructField(name, T.StringType(), True) for name in PARSED_FIELDS]
 )
-ALB_STRUCT_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name in ALB_COLS]
-)
-CLB_STRUCT_SCHEMA = T.StructType(
-    [T.StructField(name, T.StringType(), True) for name in CLB_COLS]
-)
 
 _NULL_STR = pa.scalar(None, pa.string())
+
+_log = logging.getLogger(__name__)
 
 
 class ParseAbort(RuntimeError):
@@ -106,8 +100,8 @@ def _pin_worker_pools() -> None:
     try:
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
-    except Exception:
-        pass
+    except Exception as exc:
+        _log.warning("arrow thread pools not pinned: %s: %s", type(exc).__name__, exc)
     try:
         # Keep jemalloc from handing freed batch memory back to the kernel
         # between Arrow batches: with 32 workers munmap'ing ~30MB per batch,
@@ -115,8 +109,8 @@ def _pin_worker_pools() -> None:
         # (measured via vmstat on this box). Retaining the pool turns that
         # into cheap in-process reuse.
         pa.jemalloc_set_decay_ms(-1)
-    except Exception:
-        pass
+    except Exception as exc:
+        _log.warning("jemalloc decay not disabled: %s: %s", type(exc).__name__, exc)
     import os
 
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -281,7 +275,7 @@ def routed_struct(
     text_col: str = "text",
 ) -> DataFrame:
     """Fused route → keep only ``dialect`` rows → extract fields, in ONE
-    Arrow pass: replaces the with_sink → JVM filter → with_dialect_struct
+    Arrow pass: replaces a with_sink → JVM filter → per-dialect extract
     chain (two Python-worker waves, with the text and every other column
     crossing back to the JVM between them) for queries that read parsed
     fields. Emits ``passthrough + parsed`` where ``parsed`` holds the
@@ -619,41 +613,6 @@ def _extract_clb_children(text: pa.Array) -> list[pa.Array]:
     if idx is None:
         return children
     return [c.take(idx) for c in children]
-
-
-def with_dialect_struct(
-    df: DataFrame, dialect: str, text_col: str = "text"
-) -> DataFrame:
-    """Add ``parsed`` struct holding ONE dialect's fields (alb_* or clb_*).
-
-    Intended for rows already routed to that sink (each row is then
-    extracted exactly once across the whole pipeline). Rows that don't
-    match simply get null fields. ``jsonout.alb_json/classic_json`` read
-    ``parsed.alb_*`` / ``parsed.clb_*`` and work with either this struct
-    or the full one from :func:`with_parsed`.
-    """
-    if dialect == SINK_ALB:
-        struct_schema, names, extract = ALB_STRUCT_SCHEMA, ALB_COLS, _extract_alb_children
-    elif dialect == SINK_CLASSIC:
-        struct_schema, names, extract = CLB_STRUCT_SCHEMA, CLB_COLS, _extract_clb_children
-    else:
-        raise ValueError(f"no extractable fields for dialect {dialect!r}")
-
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("parsed", struct_schema, True)]
-    )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_pools()
-        for batch in batches:
-            idx = batch.schema.get_field_index(text_col)
-            children = extract(_as_string_array(batch.column(idx)))
-            parsed = pa.StructArray.from_arrays(children, names=names)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, parsed], names=[*batch.schema.names, "parsed"]
-            )
-
-    return df.mapInArrow(gen, out_schema)
 
 
 # ---------------------------------------------------------------------------

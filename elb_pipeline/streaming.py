@@ -103,30 +103,6 @@ def dedup_stream(
     )
 
 
-def run_dedup_stream_to_memory(
-    spark: SparkSession,
-    input_path: str,
-    watermark: str = "2 hours",
-    query_name: str = "dedup_stream",
-) -> DataFrame:
-    """Drive the streaming dedup over the files currently in
-    ``input_path`` (memory sink; test/smoke harness)."""
-    deduped = dedup_stream(
-        read_transcripts_stream(spark, input_path), watermark=watermark
-    )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def run_json_stream_to_memory(
     spark: SparkSession,
     input_path: str,

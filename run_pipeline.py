@@ -5,7 +5,7 @@ Usage (cluster):
     zip -r elb_pipeline.zip elb_pipeline
     spark-submit --py-files elb_pipeline.zip run_pipeline.py \
         --input  <parquet path | table name with --table> \
-        --output <dir> [--mode skip|strict] [--groups 8] [--no-resume]
+        --output <dir> [--mode skip|strict|strict-fast] [--groups 8] [--no-resume]
 
 Usage (local smoke, synthesized input):
     python run_pipeline.py --synth-rows 100000 --output /tmp/elb_out

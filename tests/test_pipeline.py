@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import collections
 import glob
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from elb_pipeline import checkpoint
+from elb_pipeline.aggregate import sink_day_bucket_counts
 from elb_pipeline.dialects import parse_line
 from elb_pipeline.job import StrictModeError, run_job
 from elb_pipeline.parse import with_parsed, with_parsed_pandas, with_sink
@@ -100,6 +103,83 @@ def test_job_end_to_end_and_resume(spark, transcripts, oracle_rows, tmp_path):
     res3 = run_job(spark, transcripts, out, mode="skip", n_groups=3)
     assert res3.groups_run == [1] and sorted(res3.groups_skipped) == [0, 2]
     assert res3.sink_counts == dict(want)
+
+
+def test_aggregates_and_lineage_match_written_data(spark, transcripts, tmp_path):
+    """Each group's aggregates/group=G equals the aggregate recomputed over
+    its data/group=G, and each manifest's lineage sums to its sink_counts."""
+    out = str(tmp_path / "agg")
+    res = run_job(spark, transcripts, out, mode="skip", n_groups=3)
+    assert sorted(res.groups_run) == [0, 1, 2]
+
+    cols = ["sink", "conv_bucket", "ts_day", "n"]
+    for g in range(3):
+        data = spark.read.parquet(f"{out}/data/group={g}")
+        want = {tuple(r) for r in sink_day_bucket_counts(data).select(*cols).collect()}
+        aggs = spark.read.parquet(f"{out}/aggregates/group={g}")
+        got = {tuple(r) for r in aggs.select(*cols).collect()}
+        assert got == want and len(got) > 0
+
+        manifest = checkpoint.read_manifest(out, g)
+        lineage = collections.Counter()
+        for entry in manifest["lineage"]:
+            lineage[entry["sink"]] += entry["n"]
+        assert lineage == collections.Counter(manifest["sink_counts"])
+        assert sum(manifest["sink_counts"].values()) == data.count()
+
+
+def test_resume_rewrites_half_written_group(spark, transcripts, tmp_path):
+    """A pending group's leftover output is replaced, not added to: a stale
+    part file under data/group=1 must not survive the re-run of group 1."""
+    out = str(tmp_path / "stale")
+    run_job(spark, transcripts, out, mode="skip", n_groups=3)
+    total = spark.read.parquet(f"{out}/data").count()
+
+    part = sorted(glob.glob(f"{out}/data/group=1/sink=*/ts_day=*/part-*.parquet"))[0]
+    shutil.copyfile(part, part.replace("/part-", "/part-stale-"))
+    os.remove(checkpoint.manifest_path(out, 1))
+
+    res = run_job(spark, transcripts, out, mode="skip", n_groups=3)
+    assert res.groups_run == [1] and res.groups_skipped == [0, 2]
+    assert spark.read.parquet(f"{out}/data").count() == total
+    assert not glob.glob(f"{out}/data/group=1/**/part-stale-*", recursive=True)
+
+
+def test_strict_mode_commits_clean_groups_and_names_lowest_malformed(
+    spark, transcripts, tmp_path
+):
+    """strict with several groups: clean groups commit, malformed ones do
+    not, and the error names the lowest malformed group."""
+    # each row's bucket group, as the job computes it for n_groups=3
+    group = F.pmod(F.crc32(F.col("conv_id").cast("binary")), F.lit(3))
+    routed = with_sink(transcripts).withColumn("g", group)
+    # group 0 clean; groups 1 and 2 keep their malformed lines
+    rows = routed.where((F.col("g") != 0) | (F.col("sink") != "malformed"))
+    mal = rows.where(F.col("sink") == "malformed").select("g").distinct().collect()
+    assert {r["g"] for r in mal} == {1, 2}
+
+    out = str(tmp_path / "strict3")
+    with pytest.raises(StrictModeError, match=r"in bucket group 1$"):
+        run_job(spark, rows.drop("sink", "g"), out, mode="strict", n_groups=3)
+    assert checkpoint.completed_groups(out) == [0]
+    assert checkpoint.read_manifest(out, 0)["sink_counts"]["malformed"] == 0
+
+
+def test_job_count_independent_of_n_groups(spark, transcripts, tmp_path):
+    """All pending groups commit in one pass, so a run_job call submits the
+    same Spark jobs whether it has one bucket group or four."""
+    sc = spark.sparkContext
+    counts = {}
+    for n_groups in (1, 4):
+        sc.setLocalProperty("spark.jobGroup.id", f"run_job-{n_groups}")
+        try:
+            out = str(tmp_path / f"n{n_groups}")
+            run_job(spark, transcripts, out, n_groups=n_groups)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"run_job-{n_groups}")
+        counts[n_groups] = len(jobs)
+    assert counts[1] == counts[4] > 0
 
 
 def test_ndjson_export_matches_parquet_json(spark, transcripts, tmp_path):
