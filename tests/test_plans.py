@@ -5,12 +5,16 @@
 - parquet scans prune columns (ReadSchema) and push filters
 - aggregations are partial-first (two HashAggregate levels)
 - the fused Arrow operator receives only the columns it was given
+- every parse-family query keeps the Arrow-boundary shape pinned in
+  plans/r06/ (MapInArrow count, scan columns, Arrow input/output columns)
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,12 +22,54 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_DIR
 
+PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), "plans", "r06")
+
+PARSE_FAMILY = [
+    "parse_route_counts",
+    "route_sets",
+    "parse_alb_fields",
+    "parse_classic_fields",
+    "latency_percentiles",
+    "url_domain_topk",
+    "alb_json_lines",
+    "classic_json_lines",
+    "enrich_rollup",
+    "agg_sink_day_bucket",
+    "agg_salted",
+    "dead_letter_rows",
+    "dead_letter_diag",
+    "ndjson_ordered_lines",
+    "ndjson_sharded_lines",
+]
+
 
 def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def arrow_boundary(plan: str) -> tuple[int, list[str], list[str]]:
+    """(MapInArrow count, ReadSchema lines, MapInArrow Arguments lines) of a
+    formatted plan, with expression ids stripped so plans captured at any
+    scale or session compare equal."""
+    plan = re.sub(r"#\d+", "", plan)
+    nodes = [n for n in plan.split("\n\n") if re.match(r"\(\d+\) MapInArrow\b", n)]
+    args = [l for n in nodes for l in n.splitlines() if l.startswith("Arguments:")]
+    schemas = [l for l in plan.splitlines() if l.startswith("ReadSchema:")]
+    return len(nodes), schemas, args
+
+
+@pytest.mark.parametrize("name", PARSE_FAMILY)
+def test_parse_family_plan_matches_r06(spark, name):
+    """No parse-family query gains or loses a MapInArrow, widens its scan,
+    or changes the columns that cross the Arrow boundary either way."""
+    with open(os.path.join(PLANS_DIR, f"{name}_after.txt")) as fh:
+        want = arrow_boundary(fh.read())
+    got = arrow_boundary(plan_of(entry_mod.queries()[name](spark, SF_DIR)))
+    assert want[0] > 0
+    assert got == want
 
 
 def test_enrich_joins_are_broadcast(spark):
