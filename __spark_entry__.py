@@ -178,7 +178,7 @@ def q_url_domain_topk(spark, sf_dir):
 
 def q_alb_json_lines(spark, sf_dir):
     # fused route+extract+NDJSON in one Arrow pass (byte parity with the
-    # JVM to_json path is golden-vector- and oracle-asserted); only
+    # reference is golden-vector- and oracle-asserted); only
     # (conv_id, turn_idx, json) cross back
     return routed_dialect_json(
         transcripts_cached(spark, sf_dir),

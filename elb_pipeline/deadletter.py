@@ -37,10 +37,17 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import regex as _regex
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from elb_pipeline.dialects import ALB, CLASSIC, Dialect
+from elb_pipeline.parse import _arrow_map, _per_distinct
 
-DIAG_FIELDS = ["nearest_dialect", "fields_ok", "failed_position"]
+DIAG_SCHEMA = [
+    T.StructField("nearest_dialect", T.StringType(), True),
+    T.StructField("fields_ok", T.IntegerType(), True),
+    T.StructField("failed_position", T.IntegerType(), True),
+]
 
 _PARTIAL_CACHE: dict[str, "_regex.Pattern[bytes]"] = {}
 _PREFIX_CACHE: dict[tuple[str, int], str] = {}
@@ -182,19 +189,18 @@ def diagnose_arrow(text: pa.Array, positions: bool = True) -> list[pa.Array]:
     the reference renders positions as stderr underline art
     (main.rs:230-245), so at 100 TB they are a diagnostic to sample, not a
     column to materialize for every dead letter.
+
+    Diagnosis is a pure per-line function: repeated dead-letter lines
+    (retried requests, templated probes, the deterministic fixtures) are
+    diagnosed once per batch (``parse._per_distinct``); null lines get
+    null results.
     """
     if not isinstance(text, pa.Array):
         text = pa.array(text, pa.string())
-    # Diagnosis is a pure per-line function: repeated dead-letter lines
-    # (retried requests, templated probes, the deterministic fixtures) are
-    # diagnosed once per batch and the three result columns scattered
-    # back (same hash-consing as parse._dict_unique; null lines keep
-    # their null results through the null take index).
-    from elb_pipeline.parse import _dict_unique
+    return _per_distinct(lambda u: _diagnose_unique(u, positions), text)
 
-    take_idx, uniq = _dict_unique(text)
-    if take_idx is not None:
-        return [c.take(take_idx) for c in diagnose_arrow(uniq, positions)]
+
+def _diagnose_unique(text: pa.Array, positions: bool) -> list[pa.Array]:
     n = len(text)
     alb_k = fields_ok_arrow(text, ALB)
     clb_k = fields_ok_arrow(text, CLASSIC)
@@ -233,7 +239,7 @@ def diagnose_arrow(text: pa.Array, positions: bool = True) -> list[pa.Array]:
     ]
 
 
-def with_diagnosis(df, text_col: str = "text", positions: bool = True):
+def with_diagnosis(df: DataFrame, positions: bool = True) -> DataFrame:
     """Append (nearest_dialect, fields_ok, failed_position) to a frame of
     (presumed malformed) lines — standalone variant of the diagnosis that
     ``parse.routed_json_both(with_diag=True)`` fuses into the hot path.
@@ -243,29 +249,6 @@ def with_diagnosis(df, text_col: str = "text", positions: bool = True):
     ``diag_positions`` gate) — use it whenever the consumer only needs
     nearest_dialect/fields_ok, otherwise the most expensive diagnosis step
     runs for a column that is immediately discarded."""
-    from collections.abc import Iterator
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("nearest_dialect", T.StringType(), True),
-            T.StructField("fields_ok", T.IntegerType(), True),
-            T.StructField("failed_position", T.IntegerType(), True),
-        ]
+    return _arrow_map(
+        df, None, DIAG_SCHEMA, lambda text: (None, diagnose_arrow(text, positions))
     )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            idx = batch.schema.get_field_index(text_col)
-            text = batch.column(idx)
-            if isinstance(text, pa.ChunkedArray):
-                text = text.combine_chunks()
-            diag = diagnose_arrow(text.cast(pa.string()), positions=positions)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, *diag],
-                names=[*batch.schema.names, *DIAG_FIELDS],
-            )
-
-    return df.mapInArrow(gen, out_schema)

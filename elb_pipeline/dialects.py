@@ -297,9 +297,9 @@ def parse_line(text: str) -> tuple[str, dict[str, str | None] | None]:
     """Pure-Python single-line parse → (sink, fields dict | None).
 
     This is the row-at-a-time oracle used by tests, mirroring the
-    reference's parse-or-reject (alb.rs:199-203, classic_lb.rs:109-113).
-    The Spark path never calls this per row — it uses the vectorized
-    pandas UDF in parse.py.
+    reference's parse-or-reject (alb.rs:199-203, classic_lb.rs:109-113):
+    Python ``re`` over the same patterns and dialect order that the Arrow
+    operators in parse.py run through RE2. The Spark path never calls it.
     """
     for d in DIALECTS:
         # fullmatch, not match: Python's $ also matches just before a

@@ -2,13 +2,10 @@
 
 The reference emits one compact JSON object per parsed line with keys in
 struct declaration order (serde derive, alb.rs:8-86 / classic_lb.rs:8-46)
-and omits the optional ``tid`` key when absent (alb.rs:81-85). Spark's
-``to_json(struct(...))`` (Jackson) produces the same compact form with the
-same standard JSON string escaping (``\\`` → ``\\\\``, ``"`` → ``\\"``),
-verified byte-for-byte against every reference golden vector in
-tests/test_golden_vectors.py. ``ignoreNullFields`` handles the tid
-omission — safe because every other ALB field is non-null by construction
-whenever the line routed to the alb sink.
+and omits the optional ``tid`` key when absent (alb.rs:81-85). Byte
+equality with the reference is asserted on every golden vector through the
+production operator (tests/test_golden_vectors_spark.py) and against the
+DuckDB ``to_json`` oracle twins (oracle.alb_json_expr/classic_json_expr).
 """
 
 from __future__ import annotations
@@ -17,22 +14,6 @@ import json
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from elb_pipeline.dialects import ALB_FIELDS, CLASSIC_FIELDS
-
-
-def alb_json(parsed_col: str = "parsed") -> Column:
-    """Compact JSON for an alb-routed row (33 keys, tid omitted if null)."""
-    cols = [F.col(f"{parsed_col}.alb_{f}").alias(f) for f in ALB_FIELDS]
-    return F.to_json(F.struct(*cols), {"ignoreNullFields": "true"})
-
-
-def classic_json(parsed_col: str = "parsed") -> Column:
-    """Compact JSON for a classic_lb-routed row (18 keys, never null)."""
-    cols = [F.col(f"{parsed_col}.clb_{f}").alias(f) for f in CLASSIC_FIELDS]
-    return F.to_json(F.struct(*cols), {"ignoreNullFields": "true"})
 
 
 # ---------------------------------------------------------------------------

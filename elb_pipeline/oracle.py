@@ -134,7 +134,8 @@ def classic_field_select() -> str:
 
 
 def alb_json_expr() -> str:
-    """DuckDB to_json twin of jsonout.alb_json (key order + tid omission)."""
+    """DuckDB to_json twin of jsonout.arrow_ndjson for ALB rows (key order +
+    tid omission)."""
     base = ", ".join(f'"{f}" := x."{f}"' for f in ALB_FIELDS if f != "tid")
     with_tid = base + ", tid := x.tid"
     return (

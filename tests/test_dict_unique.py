@@ -1,9 +1,8 @@
-"""Round-6 optimization guard: batch-level hash-consing (_dict_unique)
-must be a pure evaluation-strategy change — every kernel's output on a
-REDUNDANT batch (where the dictionary path engages) must equal its output
-on the same rows evaluated one-by-one (where the 2× guard disables it).
-Covers the null-line scatter slots explicitly (null take-index ->
-fill_null with the operator's malformed/None value).
+"""Batch-level hash-consing (``parse._per_distinct``) must be a pure
+evaluation-strategy change: every kernel that goes through it gives, on a
+REDUNDANT batch (where the dictionary path engages), the same output as on
+the same rows evaluated one-by-one (where the 2× guard disables it) —
+including the null-line slots (null take-index, then the operator's fill).
 """
 
 from __future__ import annotations
@@ -15,9 +14,9 @@ from elb_pipeline.deadletter import diagnose_arrow
 from elb_pipeline.dialects import SINK_ALB, SINK_CLASSIC, SINK_MALFORMED
 from elb_pipeline.goldens import TEXT_POOL
 from elb_pipeline.parse import (
-    _dict_unique,
-    _extract_alb_children,
-    _extract_clb_children,
+    _extract_alb_children_u,
+    _extract_clb_children_u,
+    _per_distinct,
     _sink_mask,
     route_json_arrow,
     route_sink_arrow,
@@ -26,81 +25,62 @@ from elb_pipeline.parse import (
 # 6 distinct lines (valid ALB + classic + malformed mix) repeated 50x,
 # plus nulls sprinkled in -> redundancy far past the 2x engage threshold
 _LINES = [TEXT_POOL[(i * 7 + 3) % len(TEXT_POOL)] for i in range(6)]
-_BATCH = ([None] + _LINES * 50 + [None, _LINES[0]])
+_BATCH = [None] + _LINES * 50 + [None, _LINES[0]]
+# dead letters: corrupt the digits every valid line contains
+_MALFORMED = [None] + [l.replace("3", "#").replace("7", "@") for l in _LINES] * 40
 
 
-def _redundant() -> pa.Array:
-    return pa.array(_BATCH, pa.string())
+def _routed(sink: str) -> list[str]:
+    """Extraction kernels run on routed (valid, non-null) rows only."""
+    return [l for l in _LINES if _sink_mask(pa.array([l]), sink)[0].as_py()] * 40
 
 
-def _one_by_one(fn, outputs=1):
-    """Evaluate fn on each row alone (singleton batches never engage the
-    dictionary path: 1 unique * 2 >= 1 row)."""
-    per_row = [fn(pa.array([v], pa.string())) for v in _BATCH]
-    if outputs == 1:
-        return [r.to_pylist()[0] if hasattr(r, "to_pylist") else r[0] for r in per_row]
-    return [
-        [col.to_pylist()[0] for col in r] for r in per_row
-    ]
+def _extract(extract_u):
+    return lambda text: _per_distinct(extract_u, text)
+
+
+# name -> (kernel: string array -> list of aligned arrays, batch rows,
+#          the kernel's outputs for a null line or None if rows has none)
+KERNELS = {
+    "route_sink": (lambda t: [route_sink_arrow(t)], _BATCH, [SINK_MALFORMED]),
+    "route_json": (
+        lambda t: list(route_json_arrow(t)), _BATCH, [SINK_MALFORMED, None]
+    ),
+    **{
+        f"sink_mask_{s}": (
+            lambda t, s=s: [_sink_mask(t, s)], _BATCH, [s == SINK_MALFORMED]
+        )
+        for s in (SINK_ALB, SINK_CLASSIC, SINK_MALFORMED)
+    },
+    "extract_alb": (_extract(_extract_alb_children_u), _routed(SINK_ALB), None),
+    "extract_classic": (_extract(_extract_clb_children_u), _routed(SINK_CLASSIC), None),
+    "diagnose": (diagnose_arrow, _MALFORMED, [None, None, None]),
+}
 
 
 def test_dict_unique_engages_on_redundant_batch():
-    idx, uniq = _dict_unique(_redundant())
-    assert idx is not None
-    assert len(uniq) == 6  # nulls get null indices, not dictionary slots
+    seen = []
+    _per_distinct(lambda u: seen.append(u) or [u], pa.array(_BATCH, pa.string()))
+    assert len(seen[0]) == 6  # nulls get null indices, not dictionary slots
 
 
 def test_dict_unique_disengages_on_unique_batch():
-    idx, uniq = _dict_unique(pa.array([f"line-{i}" for i in range(100)]))
-    assert idx is None
+    batch = pa.array([f"line-{i}" for i in range(100)])
+    seen = []
+    _per_distinct(lambda u: seen.append(u) or [u], batch)
+    assert seen[0] is batch
 
 
-def test_route_sink_hash_consed_equals_per_row():
-    batched = route_sink_arrow(_redundant()).to_pylist()
-    assert batched == _one_by_one(route_sink_arrow)
-    assert batched[0] == SINK_MALFORMED  # null line
-
-
-def test_route_json_hash_consed_equals_per_row():
-    sink, js = route_json_arrow(_redundant())
-    per_row = _one_by_one(lambda a: route_json_arrow(a)[1])
-    assert js.to_pylist() == per_row
-    assert sink.to_pylist() == _one_by_one(lambda a: route_json_arrow(a)[0])
-
-
-@pytest.mark.parametrize("sink", [SINK_ALB, SINK_CLASSIC, SINK_MALFORMED])
-def test_sink_mask_hash_consed_equals_per_row(sink):
-    batched = _sink_mask(_redundant(), sink).to_pylist()
-    assert batched == _one_by_one(lambda a: _sink_mask(a, sink))
-    # null line: malformed True, dialect masks False — never null
-    assert batched[0] is (sink == SINK_MALFORMED)
-
-
-def test_extract_children_hash_consed_equal_per_row():
-    # extraction helpers run on routed (valid, non-null) rows only
-    for extract, sink in (
-        (_extract_alb_children, SINK_ALB),
-        (_extract_clb_children, SINK_CLASSIC),
-    ):
-        rows = pa.array(
-            [l for l in _LINES if _sink_mask(pa.array([l]), sink)[0].as_py()] * 40
-        )
-        batched = [c.to_pylist() for c in extract(rows)]
-        singles = [
-            [c.to_pylist()[0] for c in extract(rows.slice(i, 1))]
-            for i in range(len(rows))
-        ]
-        assert [list(col) for col in zip(*singles)] == batched
-
-
-def test_diagnose_hash_consed_equals_per_row():
-    mal = pa.array(
-        [None] + [l.replace("3", "#").replace("7", "@") for l in _LINES] * 40
-    )
-    batched = [c.to_pylist() for c in diagnose_arrow(mal, positions=True)]
+@pytest.mark.parametrize("name", list(KERNELS))
+def test_hash_consed_equals_per_row(name):
+    kernel, rows, null_out = KERNELS[name]
+    batch = pa.array(rows, pa.string())
+    batched = [c.to_pylist() for c in kernel(batch)]
+    # singleton batches never engage the dictionary path (1 unique * 2 >= 1)
     singles = [
-        [c.to_pylist()[0] for c in diagnose_arrow(mal.slice(i, 1), positions=True)]
-        for i in range(len(mal))
+        [c.to_pylist()[0] for c in kernel(batch.slice(i, 1))]
+        for i in range(len(rows))
     ]
     assert [list(col) for col in zip(*singles)] == batched
-    assert batched[0][0] is None and batched[1][0] is None  # null line row
+    if null_out is not None:
+        assert rows[0] is None and [col[0] for col in batched] == null_out

@@ -14,9 +14,15 @@ from pyspark.sql import functions as F
 
 from elb_pipeline import checkpoint
 from elb_pipeline.aggregate import sink_day_bucket_counts
-from elb_pipeline.dialects import parse_line
+from elb_pipeline.dialects import (
+    ALB_FIELDS,
+    CLASSIC_FIELDS,
+    SINK_ALB,
+    SINK_CLASSIC,
+    parse_line,
+)
 from elb_pipeline.job import StrictModeError, run_job
-from elb_pipeline.parse import with_parsed, with_parsed_pandas, with_sink
+from elb_pipeline.parse import routed_struct, with_sink
 from elb_pipeline.synth import transcripts_from_events
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -259,24 +265,32 @@ def test_strict_mode_clean_input_passes(spark, transcripts, tmp_path):
 
 
 def test_parse_paths_equivalent(spark, transcripts):
-    """The three parse implementations (Arrow match-only routing, Arrow
-    full-struct extraction, pandas/``re`` UDF) must agree row-for-row."""
+    """The Arrow/RE2 operators agree row-for-row with the engine-independent
+    ``re`` reference (``dialects.parse_line``): routing, and every field of
+    both dialects' extraction."""
     key = ["conv_id", "turn_idx"]
-    a = {tuple(r[k] for k in key): r["sink"]
-         for r in with_sink(transcripts).select(*key, "sink").collect()}
-    b = {tuple(r[k] for k in key): r["sink"]
-         for r in with_parsed(transcripts).select(*key, "sink").collect()}
-    c = {tuple(r[k] for k in key): r["sink"]
-         for r in with_parsed_pandas(transcripts).select(*key, "sink").collect()}
-    assert a == b == c
+    want = {
+        (r["conv_id"], r["turn_idx"]): parse_line(r["text"])
+        for r in transcripts.select(*key, "text").collect()
+    }
+    sinks = {
+        (r["conv_id"], r["turn_idx"]): r["sink"]
+        for r in with_sink(transcripts).select(*key, "sink").collect()
+    }
+    assert sinks == {k: sink for k, (sink, _) in want.items()}
 
-    # and full-struct field values: arrow vs pandas
-    cols = ["parsed.alb_url", "parsed.alb_tid", "parsed.clb_http_version"]
-    b2 = {tuple(r[k] for k in key): tuple(r[i] for i in range(2, 5))
-          for r in with_parsed(transcripts).select(*key, *cols).collect()}
-    c2 = {tuple(r[k] for k in key): tuple(r[i] for i in range(2, 5))
-          for r in with_parsed_pandas(transcripts).select(*key, *cols).collect()}
-    assert b2 == c2
+    for dialect, names in ((SINK_ALB, ALB_FIELDS), (SINK_CLASSIC, CLASSIC_FIELDS)):
+        got = {
+            (r["conv_id"], r["turn_idx"]): r["parsed"].asDict()
+            for r in routed_struct(transcripts, dialect, passthrough=key).collect()
+        }
+        prefix = "alb_" if dialect == SINK_ALB else "clb_"
+        assert got == {
+            k: {prefix + f: fields[f] for f in names}
+            for k, (sink, fields) in want.items()
+            if sink == dialect
+        }
+        assert len(got) > 0
 
 
 def test_salted_agg_equals_direct(spark, transcripts):
