@@ -948,20 +948,16 @@ def q_contamination_check(spark, sf_dir):
     shingles shared with the 'benchmark set' (docs 0-9). At scale the
     benchmark shingle set is small → broadcast join; candidate docs are
     whatever overlaps, no all-pairs work."""
-    from elb_pipeline.dedup import (
-        EXACT_OFFSET,
-        materialized_doc_pool,
-        materialized_shingle_rows,
-    )
+    from elb_pipeline.dedup import EXACT_OFFSET, materialized_doc_pool, shingle_tables
 
-    # reuse the shared per-doc distinct shingle rows (the base documents
-    # are exactly the pool rows below the planted-dup offset) instead of
-    # re-exploding the corpus — same (doc_id, s) set by construction
+    # per-doc distinct shingle rows exploded from the materialized
+    # signature table (the base documents are exactly the pool rows below
+    # the planted-dup offset) instead of re-shingling the corpus — same
+    # (doc_id, s) set by construction
     key = _doc_cache_key(sf_dir)
     pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
-    shingled = materialized_shingle_rows(pool, key).where(
-        F.col("doc_id") < EXACT_OFFSET
-    )
+    rows, _ = shingle_tables(pool, key)
+    shingled = rows.where(F.col("doc_id") < EXACT_OFFSET)
     bench = (
         shingled.where(F.col("doc_id") < 10).select("s").distinct()
     )
@@ -1009,11 +1005,11 @@ def q_training_corpus(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     key = _doc_cache_key(sf_dir)
     pool = D.materialized_doc_pool(docs, cache_key=key)
-    # both shingle sides come from the shared materialized rows table:
-    # the benchmark side is its doc_id < 10 slice (the base documents ARE
-    # the pool rows below the planted-dup offset), the contamination side
-    # is the full pool rows — no re-shingling in either screen
-    rows = D.materialized_shingle_rows(pool, key)
+    # both shingle sides are exploded from the materialized signature
+    # table: the benchmark side is its doc_id < 10 slice (the base
+    # documents ARE the pool rows below the planted-dup offset), the
+    # contamination side is the full pool — no re-shingling in either screen
+    rows, _ = D.shingle_tables(pool, key)
     surv = C.training_corpus(
         pool,
         rows.where(F.col("doc_id") < C.N_BENCH_DOCS).select("s").distinct(),

@@ -20,9 +20,12 @@ Scale notes (100 TB):
   construction), and only candidates pay the exact-Jaccard verification.
   No all-pairs block ever forms.
 - connected components uses iterative min-label propagation (a driver
-  loop of self-joins — Pregel shape). Dup components are tiny (dup
-  cliques), so it converges in O(log component-diameter) ≈ 2-3 rounds;
-  each round is one shuffle on doc_id.
+  loop of self-joins — Pregel shape). A seed round labels each node with
+  min(node, min neighbor); each further round is one edge join plus one
+  aggregate on doc_id that also carries the previous label, so the
+  convergence check scans that round's checkpoint with no join. Rounds
+  grow linearly with component diameter; dup components are tiny (dup
+  cliques), so it converges in ≈ 2-3 rounds.
 """
 
 from __future__ import annotations
@@ -162,15 +165,22 @@ def doc_pool_cte() -> str:
 # ---------------------------------------------------------------------------
 
 def _shingles():
-    """Array of word-3-gram strings (engine-portable: 1-based indexing)."""
+    """Array of word-3-gram strings (engine-portable: 1-based indexing).
+
+    The split is bound once outside the lambda: zipping three shifted
+    slices keeps the per-row work linear in the word count, where an
+    ``element_at(split(text), i)`` lambda re-splits the text per shingle."""
     ws = F.split(F.col("text"), " ")
+    n = F.size(ws) - 2
     grams = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(ws, i), F.element_at(ws, i + 1), F.element_at(ws, i + 2)
+        F.arrays_zip(
+            F.slice(ws, 1, n).alias("w0"),
+            F.slice(ws, 2, n).alias("w1"),
+            F.slice(ws, 3, n).alias("w2"),
         ),
+        lambda z: F.concat_ws(" ", z["w0"], z["w1"], z["w2"]),
     )
-    # sequence(1, n) descends when n < 1 — guard short docs to empty
+    # slice() rejects a negative length — guard short docs to empty
     return F.when(F.size(ws) >= 3, grams).otherwise(F.array().cast("array<string>"))
 
 
@@ -568,40 +578,24 @@ def incremental_dedup_sql(split_id: int) -> str:
 RARE_DF_MAX = 4  # doc-frequency cap on blocking shingles
 
 
-def _shingle_rows(pool: DataFrame) -> DataFrame:
-    """(doc_id, s): each doc's DISTINCT word-3-gram shingles, exploded."""
-    return pool.select(
-        "doc_id", F.explode(F.array_distinct(_shingles())).alias("s")
-    )
-
-
-def materialized_shingle_rows(pool: DataFrame, cache_key: str) -> DataFrame:
-    """Exploded shingle rows materialized per input fingerprint — BOTH
-    exact-Jaccard paths (rare-shingle index and AllPairs prefix filter)
-    build their inverted index from the identical rows; each was paying
-    the split+slide+explode recompute (~1.2 s at sf0.1). Derived from the
-    materialized signature table's ``sh`` column (same shingle arrays —
-    with_signatures computes them once), not re-shingled from text."""
-    from elb_pipeline.matcache import materialize
-
-    sigs = materialized_signatures(pool, cache_key=cache_key)
-    rows = sigs.select("doc_id", F.explode(F.array_distinct("sh")).alias("s"))
-    return materialize(rows, f"shingle_rows_{cache_key}", params=algo_params())
-
-
-def materialized_shingle_sets(pool: DataFrame, cache_key: str) -> DataFrame:
-    """(doc_id, hs): the 8-byte-hashed shingle SET per doc (the verify-side
-    operand of _jaccard_verify), materialized per input fingerprint — the
-    rare and prefix paths each verify against the same sets. Also derived
-    from the signature table's shingle arrays."""
-    from elb_pipeline.matcache import materialize
-
-    sigs = materialized_signatures(pool, cache_key=cache_key)
-    hs = F.transform(F.array_distinct("sh"), lambda x: F.xxhash64(x))
-    return materialize(
-        sigs.select("doc_id", hs.alias("hs")),
-        f"shingle_sets_{cache_key}",
-        params=algo_params(),
+def shingle_tables(
+    pool: DataFrame, cache_key: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """``(doc_id, s)`` rows of each doc's DISTINCT word-3-gram shingles and
+    ``(doc_id, hs)`` the same set as 8-byte ``xxhash64`` values (the
+    verify-side operand of _jaccard_verify). With ``cache_key`` both are
+    narrow projections of the materialized signature table's ``sh``
+    column, so the shingles are computed once per input fingerprint and
+    no extra table is written; without one they are shingled from
+    ``pool.text``. Same values either way."""
+    if cache_key is not None:
+        sh = materialized_signatures(pool, cache_key=cache_key)
+    else:
+        sh = pool.select("doc_id", _shingles().alias("sh"))
+    distinct = F.array_distinct("sh")
+    return (
+        sh.select("doc_id", F.explode(distinct).alias("s")),
+        sh.select("doc_id", F.transform(distinct, lambda x: F.xxhash64(x)).alias("hs")),
     )
 
 
@@ -622,14 +616,9 @@ def rare_shingle_pairs(
     dup cliques wider than RARE_DF_MAX are invisible (see module comment;
     prefix_jaccard_pairs is the exact-recall variant).
 
-    ``cache_key``: reuse the materialized shingle rows / verify sets
-    shared with the prefix path (same values either way)."""
-    if cache_key is not None:
-        sh = materialized_shingle_rows(pool, cache_key)
-        sets_ = materialized_shingle_sets(pool, cache_key)
-    else:
-        sh = _shingle_rows(pool)
-        sets_ = None
+    ``cache_key``: take the shingle rows and verify sets from the
+    materialized signature table (``shingle_tables``)."""
+    sh, sets_ = shingle_tables(pool, cache_key)
     rare = (
         sh.groupBy("s")
         .agg(F.count("*").alias("df"))
@@ -644,12 +633,10 @@ def rare_shingle_pairs(
         .select("a_id", "b_id")
         .distinct()
     )
-    return _jaccard_verify(cands, pool, sets_=sets_)
+    return _jaccard_verify(cands, sets_)
 
 
-def _jaccard_verify(
-    cands: DataFrame, pool: DataFrame, sets_: DataFrame | None = None
-) -> DataFrame:
+def _jaccard_verify(cands: DataFrame, sets_: DataFrame) -> DataFrame:
     """Exact-Jaccard verify of ``cands(a_id, b_id)`` against the docs'
     shingle SETS, shipped as 8-byte ``xxhash64`` arrays instead of the raw
     shingle strings. Set sizes (hence Jaccard) are identical to the string
@@ -659,11 +646,8 @@ def _jaccard_verify(
     the candidate join's intermediates carry ~8 B/shingle instead of the
     ~30 B/shingle strings — at 233k docs the string form's verify stage
     spilled >65 GB and died on ENOSPC; the hashed form fits (measured,
-    BENCH/dedup_scaling.py prefix). ``sets_`` overrides the per-call
-    recompute with a shared (materialized) set table."""
-    if sets_ is None:
-        hs = F.transform(F.array_distinct(_shingles()), lambda x: F.xxhash64(x))
-        sets_ = pool.select("doc_id", hs.alias("hs"))
+    BENCH/dedup_scaling.py prefix). ``sets_`` is the ``(doc_id, hs)``
+    table of ``shingle_tables``."""
     a = sets_.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("a_sh"))
     b = sets_.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("b_sh"))
     jac = F.size(F.array_intersect("a_sh", "b_sh")) / F.size(
@@ -755,15 +739,10 @@ def prefix_jaccard_pairs(
     hashed shingle sets. All shuffles are on doc_id or shingle; no
     all-pairs stage exists at any width.
 
-    ``cache_key``: reuse the materialized shingle rows / verify sets
-    shared with the rare-shingle path (same values either way)."""
+    ``cache_key``: take the shingle rows and verify sets from the
+    materialized signature table (``shingle_tables``)."""
     t = JACCARD_THRESHOLD
-    if cache_key is not None:
-        sh = materialized_shingle_rows(pool, cache_key)
-        sets_ = materialized_shingle_sets(pool, cache_key)
-    else:
-        sh = _shingle_rows(pool)
-        sets_ = None
+    sh, sets_ = shingle_tables(pool, cache_key)
     dfs = sh.groupBy("s").agg(F.count("*").alias("df"))
     order_w = Window.partitionBy("doc_id").orderBy("df", "s")
     ranked = (
@@ -815,7 +794,7 @@ def prefix_jaccard_pairs(
         .where(F.col("best_ub") >= alpha)
         .select("a_id", "b_id")
     )
-    return _jaccard_verify(cands, pool, sets_=sets_)
+    return _jaccard_verify(cands, sets_)
 
 
 def prefix_jaccard_pairs_sql() -> str:
@@ -920,7 +899,8 @@ simhash32 = F.pandas_udf(_simhash32_batch, T.LongType())
 def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
     """(doc_id, group_id) for every doc in a verified pair; group_id is the
     min doc_id of its connected component (iterative min-label
-    propagation — converges in O(log diameter) rounds).
+    propagation — one round per hop from a component's min id to its
+    farthest node, plus the round that finds no change).
 
     The converged label table is materialized to parquet
     (matcache.materialize) and EVERY RDD this call persisted — the
@@ -936,7 +916,7 @@ def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
 
     if cache_key is not None:
         # Cache-first: the fixpoint loop below is EAGER driver-side work
-        # (edges.count + one changed-count job per round), so a post-hoc
+        # (one checkpoint + one changed-count job per round), so a post-hoc
         # materialize() can't skip it — every consumer of the same groups
         # table (lsh_groups, leakproof_split, training_corpus,
         # corpus_sequences) was re-running label propagation from scratch.
@@ -971,34 +951,34 @@ def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
         .distinct()
         .persist()  # every iteration joins against edges — compute once
     )
-    edges.count()  # materializes edges; pairs no longer needed
-    pairs.unpersist()
+    # seed = the first round from identity labels, label(node) = min(node,
+    # min neighbor); checkpointing it materializes edges, so pairs is done
     labels = _lc(
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
+        edges.groupBy("src")
+        .agg(F.least("src", F.min("dst")).alias("label"))
+        .withColumnRenamed("src", "node")
     )
+    pairs.unpersist()
     while True:
         # neighbor-min pass: label(node) ← min(label(node), min over
-        # neighbors' labels). localCheckpoint truncates the lineage each
-        # round — otherwise iteration k replays all k-1 previous rounds
-        # (and the whole candidate derivation) from scratch. At scale each
-        # round is one shuffle and the loop is a driver-side fixpoint check.
+        # neighbors' labels), with the node's previous label carried as
+        # min(old) so the fixpoint check is a scan of the checkpoint, not
+        # a join. localCheckpoint truncates the lineage each round —
+        # otherwise iteration k replays all k-1 previous rounds (and the
+        # whole candidate derivation) from scratch. At scale each round is
+        # one shuffle and the loop is a driver-side fixpoint check.
         nbr = (
             edges.join(labels, edges.dst == labels.node)
-            .select(edges.src.alias("node"), "label")
+            .select(edges.src.alias("node"), "label", F.lit(None).alias("old"))
         )
-        new_labels = _lc(
-            labels.select("node", "label").unionByName(nbr)
-            .groupBy("node").agg(F.min("label").alias("label"))
+        labels = _lc(
+            labels.select("node", "label", F.col("label").alias("old"))
+            .unionByName(nbr)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
+        # labels only ever decrease, so "changed" is "decreased"
+        if labels.where(F.col("label") < F.col("old")).limit(1).count() == 0:
             break
     out = labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("group_id")

@@ -15,6 +15,8 @@ This is the test that pins the semantics triangle:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from elb_pipeline.dedup import (
@@ -87,3 +89,21 @@ def test_lsh_path_is_sound_subset(spark, truth):
         for r in entry_mod.queries()["minhash_lsh_pairs"](spark, SF_DIR).collect()
     }
     assert got <= truth, f"LSH emitted false pairs: {sorted(got - truth)[:5]}"
+
+
+def test_cached_paths_equal_uncached(spark, pool, tmp_path, monkeypatch):
+    """With a ``cache_key`` both exact-Jaccard paths take their shingle
+    rows and verify sets from the materialized signature table; they must
+    return the same pairs as the uncached paths and write no shingle table
+    of their own."""
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("ELB_MAT_CACHE", str(cache))
+
+    def rows(df):
+        return {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
+
+    for path in (prefix_jaccard_pairs, rare_shingle_pairs):
+        assert rows(path(pool, cache_key="parity")) == rows(path(pool)), path.__name__
+    entries = sorted(os.listdir(cache))
+    assert any(e.startswith("minhash_sigs_parity") for e in entries), entries
+    assert not [e for e in entries if e.startswith(("shingle_rows_", "shingle_sets_"))]
