@@ -19,16 +19,17 @@ protocol fix):
   nothing to fix. The salted variant exists to prove the pattern correct
   (driver oracle `agg_salted`), not to win here.
 - ``assembly`` — per-conversation document assembly (collect_list →
-  ordered concat), direct vs turn-range-chunked
+  ordered concat), turn-range-chunked
   (aggregate.assemble_conversations_chunked). This is the REAL skew
   victim: aggregation state is O(rows of the key), partial combine cannot
-  shrink it, so the direct form's final stage has one task sorting and
-  concatenating the whole hot conversation while its siblings finish —
-  max-task wall >> median. The chunked form bounds per-task state by the
-  chunk size and spreads the hot key over ceil(hot_turns/chunk) stage-1
-  groups; its stage-2 merges a few pre-built strings. Same output
-  byte-for-byte (tests/test_aggregate_assembly.py; driver oracle
-  `conversation_assembly`).
+  shrink it, so a direct single-stage form's final stage has one task
+  sorting and concatenating the whole hot conversation while its siblings
+  finish — max-task wall >> median. The chunked form bounds per-task
+  state by the chunk size and spreads the hot key over
+  ceil(hot_turns/chunk) stage-1 groups; its stage-2 merges a few
+  pre-built strings. The direct form (and this bench's
+  ``assembly_direct`` arm) was deleted once the chunked form shipped;
+  its measured A/B stays in BENCH/skew_bench_r5.json.
 
 Run:  python BENCH/skew_bench.py           # 8M rows, 3 interleaved rounds
       ELB_SKEW_ROWS=2000000 ELB_SKEW_ROUNDS=2 python BENCH/skew_bench.py
@@ -176,7 +177,6 @@ def main() -> None:
     app_id = sc.applicationId
 
     from elb_pipeline.aggregate import (
-        assemble_conversations,
         assemble_conversations_chunked,
         salted_sink_day_bucket_counts,
         sink_day_bucket_counts,
@@ -190,9 +190,6 @@ def main() -> None:
         variants = {
             "count_direct": lambda: sink_day_bucket_counts(t),
             "count_salted": lambda: salted_sink_day_bucket_counts(t),
-            "assembly_direct": lambda: assemble_conversations(
-                t.select("conv_id", "turn_idx", "text")
-            ),
             "assembly_chunked": lambda: assemble_conversations_chunked(
                 t.select("conv_id", "turn_idx", "text")
             ),
@@ -226,13 +223,6 @@ def main() -> None:
                 "walls_all_runs": [x["wall"] for x in rs],
                 "task_ms_max_all_runs": [x.get("task_ms_max") for x in rs],
             }
-        ad = out["variants"]["assembly_direct"]["best"]
-        ac = out["variants"]["assembly_chunked"]["best"]
-        out["assembly_max_task_reduction"] = (
-            round(ad["task_ms_max"] / ac["task_ms_max"], 2)
-            if ac.get("task_ms_max") and ad.get("task_ms_max")
-            else None
-        )
         print(json.dumps(out))
     finally:
         shutil.rmtree(path, ignore_errors=True)

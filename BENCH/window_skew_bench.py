@@ -4,8 +4,8 @@ packing.lang_quota ships the DIRECT per-language rank window on the
 strength of a plan assertion: Spark 4's `InsertWindowGroupLimit` rule
 plants a Partial (map-side) top-QUOTA prune below the exchange, so a hot
 language never floods one reducer. This bench turns that assertion into
-a measurement with a three-way A/B on a hot-language fixture (90% of
-rows share one lang):
+a measurement with an A/B on a hot-language fixture (90% of rows share
+one lang):
 
 - ``direct``         — the shipped query, rule ON (default threshold).
 - ``direct_no_rule`` — same query with
@@ -13,14 +13,16 @@ rows share one lang):
   what every engine without the rule does — shuffle EVERY row of the hot
   language into one task, sort it there. The ablation isolates the
   rule's contribution on identical code.
-- ``salted``         — packing.lang_quota_salted, the manual two-stage
-  fallback (rank within (lang, input-partition) then re-rank survivors):
-  what we would ship if the plan assertion ever trips.
+
+A third arm, the manual two-stage ``lang_quota_salted`` (rank within
+(lang, input-partition) then re-rank survivors), measured equal to
+``direct`` within noise and was deleted; its numbers stay in
+BENCH/window_skew_r5.json.
 
 Per-variant: wall + the worst stage's per-task duration quantiles and
 shuffle-read rows from Spark's REST API (engine task clock, not wall
 arithmetic), interleaved rounds, pooled best — the r4 sub-bench
-protocol. Expected shape: direct ≈ salted ≪ direct_no_rule on max-task,
+protocol. Expected shape: direct ≪ direct_no_rule on max-task,
 with direct shuffling ≤ QUOTA·P rows of the hot language versus ALL of
 them ablated.
 
@@ -66,7 +68,7 @@ def skewed_docs(spark, n_rows: int):
 
 
 def main() -> None:
-    from elb_pipeline.packing import lang_quota, lang_quota_salted
+    from elb_pipeline.packing import lang_quota
     from elb_pipeline.session import get_spark, perf_conf
 
     spark = get_spark(
@@ -99,21 +101,15 @@ def main() -> None:
             spark.conf.set(thresh_key, "-1")
             return lang_quota(d)
 
-        def run_salted():
-            spark.conf.set(thresh_key, default_thresh)
-            return lang_quota_salted(d)
-
         variants = {
             "direct": run_direct,
             "direct_no_rule": run_no_rule,
-            "salted": run_salted,
         }
 
         # correctness cross-check once, then untimed warm-up
         a = sorted(map(tuple, run_direct().collect()))
         b = sorted(map(tuple, run_no_rule().collect()))
-        c = sorted(map(tuple, run_salted().collect()))
-        assert a == b == c, "variants disagree"
+        assert a == b, "variants disagree"
         spark.conf.set(thresh_key, default_thresh)
         lang_quota(d).write.mode("overwrite").format("noop").save()
 

@@ -616,28 +616,10 @@ def q_embedding_near_dup(spark, sf_dir):
     return near_dup_pairs(_read(spark, sf_dir, "embeddings"))
 
 
-def _word_3grams():
-    """Array of word-3-gram strings (engine-portable: 1-based indexing)."""
-    ws = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(ws, i),
-            F.element_at(ws, i + 1),
-            F.element_at(ws, i + 2),
-        ),
-    )
-    # sequence(1, n) descends when n < 1 — guard short docs to an empty array
-    return F.when(F.size(ws) >= 3, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def q_ngram_profile(spark, sf_dir):
     """Per-document distinct word-3-gram (shingle) counts."""
     d = _read(spark, sf_dir, "documents")
-    g = _word_3grams()
+    g = D._shingles()
     return d.select(
         "doc_id",
         F.size(g).alias("n_shingles"),
@@ -667,7 +649,7 @@ def q_repetition_scores(spark, sf_dir):
             F.max("c").alias("top_word_n"),
         )
     )
-    g = _word_3grams()
+    g = D._shingles()
     gstats = d.select(
         "doc_id",
         F.size(g).alias("n_3grams"),
@@ -729,7 +711,7 @@ def q_doc_fingerprint(spark, sf_dir):
     """Rolling-shingle fingerprint: lexicographic-min md5 over word-3-grams
     (1-min sketch — two docs sharing the fingerprint are near-dup candidates)."""
     d = _read(spark, sf_dir, "documents")
-    g = _word_3grams()
+    g = D._shingles()
     return d.select(
         "doc_id",
         F.array_min(F.transform(g, lambda s: F.md5(s))).alias("fingerprint"),
@@ -765,8 +747,8 @@ def q_lang_quota(spark, sf_dir):
     doc_id). Skew note (measured this round): Spark 4's WindowGroupLimit
     rule plants a PARTIAL map-side top-QUOTA prune below the exchange, so
     the direct window is already skew-resistant — a hand-rolled salted
-    two-stage (packing.lang_quota_salted, kept + pytest-equated) pays an
-    extra (lang, pid) shuffle for pruning the optimizer does for free.
+    two-stage measured equal within noise, paid an extra (lang, pid)
+    shuffle for pruning the optimizer does for free, and was deleted.
     Plan-asserted in tests/test_plans.py."""
     from elb_pipeline.packing import lang_quota
 

@@ -88,28 +88,12 @@ def salted_sink_day_bucket_counts(
 # conversation's sort/assembly work spreads over n_chunks tasks and
 # per-task aggregation state is bounded by the chunk size; stage 2 merges
 # the few pre-assembled chunk strings in chunk order. Results are provably
-# identical to the direct form (ties impossible across chunks: equal
-# turn_idx => same chunk; within a chunk both forms sort by the full
-# (turn_idx, text) struct) — asserted cross-engine by the driver oracle
-# (DuckDB recomputes the DIRECT string_agg) and in-engine by
+# identical to a direct single-stage sort of each conversation (ties
+# impossible across chunks: equal turn_idx => same chunk; within a chunk
+# the sort is by the full (turn_idx, text) struct) — asserted cross-engine
+# by the driver oracle (DuckDB recomputes the DIRECT string_agg) and
+# in-engine against a plain-Python assembly by
 # tests/test_aggregate_assembly.py.
-
-
-def assemble_conversations(t: DataFrame) -> DataFrame:
-    """(conv_id, n_turns, n_chars, doc_md5) — direct single-stage form.
-
-    The reducer owning a conversation sorts ALL its turns; fine at uniform
-    key sizes, degenerate for a hot conversation (one task owns it all)."""
-    agged = t.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list(F.struct("turn_idx", "text"))).alias("parts")
-    )
-    doc = F.concat_ws("\n", F.transform("parts", lambda x: x["text"]))
-    return agged.select(
-        "conv_id",
-        F.size("parts").alias("n_turns"),
-        F.length(doc).alias("n_chars"),
-        F.md5(doc).alias("doc_md5"),
-    )
 
 
 ASSEMBLY_CHUNK = 1024  # turns per stage-1 chunk (bounds per-task agg state)

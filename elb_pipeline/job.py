@@ -22,9 +22,10 @@ Scale design (the parts the reference cannot express):
   version-stable so resume survives upgrades). The group is the resume
   unit: each has its own manifest (checkpoint.py) and a restart skips
   the committed ones. A run commits all its pending groups in ONE pass,
-  so a failed run re-runs all of them. On a real cluster the transcripts
-  Iceberg table is bucket-partitioned by conv_id, so a resumed run's
-  pending-group filter prunes files; in local tests it runs post-scan.
+  so a failed run re-runs all of them. The pending-group filter
+  (``pmod(crc32(conv_id), n_groups)``) runs after the scan: no table
+  layout prunes files by it — Iceberg's ``bucket(N, conv_id)`` transform
+  hashes with murmur3, not crc32.
 - the pending rows are read ONCE and cross the Python boundary ONCE: a
   single fused Arrow operator (parse.routed_json_both) routes, extracts,
   serializes NDJSON, and diagnoses dead letters, and every group and

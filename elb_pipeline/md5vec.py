@@ -193,18 +193,6 @@ def md5_digests_cat(
     return out
 
 
-def md5_digests(msgs: list[bytes]) -> np.ndarray:
-    """(n, 16) uint8 MD5 digests of ``msgs``, hashlib-identical."""
-    n = len(msgs)
-    if n == 0:
-        return np.empty((0, 16), dtype=np.uint8)
-    lens = np.fromiter((len(s) for s in msgs), count=n, dtype=np.int64)
-    cat = np.frombuffer(b"".join(msgs), dtype=np.uint8)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    return md5_digests_cat(cat, starts, lens)
-
-
 def md5_seeded_digests_cat(
     cat: np.ndarray,
     starts: np.ndarray,
@@ -252,18 +240,6 @@ def md5_seeded_digests_cat(
                     buf[rows, glens + j] = sa[j]
                 out[si][sub] = _digest_blocks(_as_words(buf, g, int(nb)))
     return out
-
-
-def md5_seeded_digests(msgs: list[bytes], seeds: list[bytes]) -> np.ndarray:
-    """List-of-bytes face of :func:`md5_seeded_digests_cat`."""
-    n = len(msgs)
-    if n == 0:
-        return np.empty((len(seeds), 0, 16), dtype=np.uint8)
-    lens = np.fromiter((len(s) for s in msgs), count=n, dtype=np.int64)
-    cat = np.frombuffer(b"".join(msgs), dtype=np.uint8)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    return md5_seeded_digests_cat(cat, starts, lens, seeds)
 
 
 def dict_encode_bytes(strings: list):

@@ -34,13 +34,11 @@ PARTIAL WindowGroupLimit below the exchange, pruning each map task to
 its local top QUOTA per language before any shuffle, so at most QUOTA·P
 rows of a hot language ever move. We therefore ship the DIRECT window
 (one shuffle, map-side pruned) and plan-assert the Partial
-WindowGroupLimit is present; ``lang_quota_salted`` keeps the manual
-two-stage decomposition — stage 1 ranks within (lang,
-input-partition-id), whose local top QUOTA provably contains the global
-top QUOTA; stage 2 re-ranks the survivors — as the portable fallback
-(engines without the rule; rank functions it can't push) and is
-pytest-equated to the direct form. Hand-rolling it by default would pay
+WindowGroupLimit is present. A manual two-stage decomposition (rank
+within (lang, input-partition-id), then re-rank the survivors) measured
+equal within noise (BENCH/window_skew_r5.json) and was deleted: it pays
 an EXTRA shuffle on (lang, pid) for pruning the optimizer already does.
+If the plan assertion ever trips, lang_quota needs that two-stage prune.
 
 No reference counterpart (the reference emits one line per input line,
 src/main.rs:103-177; packing/quota are training-pipeline operators).
@@ -229,27 +227,6 @@ def lang_quota(docs: DataFrame, quota: int = LANG_QUOTA) -> DataFrame:
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= quota)
     )
-
-
-def lang_quota_salted(docs: DataFrame, quota: int = LANG_QUOTA) -> DataFrame:
-    """Manual two-stage top-N (portable fallback, module docstring):
-    local top-QUOTA within (lang, input-partition-id) — a superset of the
-    global top QUOTA — then a global re-rank of the ≤ QUOTA·P survivors.
-    Intermediate partition ids are nondeterministic; the result is not
-    (the priority is a total order). Pytest-equated to ``lang_quota``."""
-    pri = [F.col("n_chars").desc(), F.col("doc_id").asc()]
-    w1 = Window.partitionBy("lang", "pid").orderBy(*pri)
-    pruned = (
-        docs.select("lang", "doc_id", "n_chars")
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn("rn1", F.row_number().over(w1))
-        .where(F.col("rn1") <= quota)
-        .drop("pid", "rn1")
-    )
-    w2 = Window.partitionBy("lang").orderBy(*pri)
-    return pruned.withColumn(
-        "rank", F.row_number().over(w2).cast("int")
-    ).where(F.col("rank") <= quota)
 
 
 def lang_quota_sql(quota: int = LANG_QUOTA) -> str:

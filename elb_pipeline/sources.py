@@ -90,10 +90,12 @@ ICEBERG_CONF: dict[str, str] = {
 def read_transcripts_table(spark: SparkSession, table: str) -> DataFrame:
     """Read the transcripts Iceberg table (e.g. ``lake.ai.transcripts``).
 
-    At 100 TB this is the production source: Iceberg partition pruning +
-    file skipping feed the conv_id bucket groups (job.py reads one bucket
-    group per commit unit), and its manifests do the file listing the raw
-    walker above does for loose files. Requires ICEBERG_CONF on the
+    At 100 TB this is the production source: its manifests do the file
+    listing the raw walker above does for loose files. job.py reads every
+    pending conv_id bucket group in one pass and applies the group filter
+    after the scan — Iceberg's ``bucket(N, conv_id)`` hashes with murmur3,
+    not the job's crc32, so the table layout cannot prune by group.
+    Requires ICEBERG_CONF on the
     session; without the runtime jar the error says exactly that instead
     of an opaque ClassNotFound."""
     try:

@@ -1,23 +1,17 @@
-"""Structured Streaming variant of the pipeline.
+"""Structured Streaming operators.
 
 The reference is a bounded batch job over files (SURVEY.md §2.9); our
-parse/route/enrich stages are stateless, so the identical operators run
-under ``readStream`` unchanged — this module wires them up to demonstrate
-that property and to provide the micro-batch entry point a production
-deployment would use (e.g. files or Kafka → per-sink sinks).
-
-Windowed per-sink counts with a watermark handle late-arriving turns; the
-aggregation mirrors aggregate.sink_day_bucket_counts at streaming
-granularity.
+parse/route/enrich stages are stateless, so the batch operators run
+under ``readStream`` unchanged. This module adds the streaming source,
+watermarked per-sink window counts, exact dedup within a watermark
+horizon, and event-time sessionization with its batch replay twin. The
+harnesses that drive a stream into a sink live in tests/test_streaming.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from elb_pipeline.enrich import enrich
-from elb_pipeline.parse import with_sink
 
 TRANSCRIPTS_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -40,11 +34,6 @@ def read_transcripts_stream(
     return r.parquet(path)
 
 
-def routed_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """Stateless parse→route→enrich over a streaming DataFrame."""
-    return enrich(with_sink(stream), spark)
-
-
 def windowed_sink_counts(
     routed: DataFrame,
     window: str = "1 hour",
@@ -62,17 +51,6 @@ def windowed_sink_counts(
             "n",
         )
     )
-
-
-def routed_json_stream(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """The FUSED hot-path operator under readStream: route + extract +
-    NDJSON + dead-letter diagnosis are stateless, so the exact batch
-    operator runs on a streaming frame unchanged — this is the streaming
-    analog of the reference's stdin→stdout mode (main.rs:89-101), emitting
-    one NDJSON line per valid turn as micro-batches arrive."""
-    from elb_pipeline.parse import routed_json_both
-
-    return routed_json_both(stream, with_diag=True)
 
 
 def dedup_stream(
@@ -103,88 +81,11 @@ def dedup_stream(
     )
 
 
-def run_json_stream_to_memory(
-    spark: SparkSession,
-    input_path: str,
-    query_name: str = "routed_json",
-) -> DataFrame:
-    """Drive the fused parse stream over the files currently in
-    ``input_path`` (memory sink; test/smoke harness)."""
-    routed = routed_json_stream(
-        spark, read_transcripts_stream(spark, input_path)
-    )
-    q = (
-        routed.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 SESSION_STATE_SCHEMA = "n_turns long, n_malformed long, last_ts timestamp"
 SESSION_OUTPUT_SCHEMA = (
     "conv_id string, n_turns long, n_malformed long, last_ts timestamp, "
     "closed boolean"
 )
-
-
-def _session_update_fn(idle_timeout_ms: int):
-    """Factory for the per-group state-update function (unit-testable
-    without streaming machinery — see tests/test_streaming.py)."""
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        (conv_id,) = key
-        cols = ["conv_id", "n_turns", "n_malformed", "last_ts", "closed"]
-        if state.hasTimedOut:
-            n_turns, n_mal, last_ts = state.get
-            state.remove()
-            yield pd.DataFrame([[conv_id, n_turns, n_mal, last_ts, True]], columns=cols)
-            return
-        n_turns, n_mal, last_ts = state.get if state.exists else (0, 0, None)
-        for pdf in pdfs:
-            n_turns += len(pdf)
-            n_mal += int((pdf["sink"] == "malformed").sum())
-            mx = pdf["ts"].max()
-            last_ts = mx if last_ts is None else max(last_ts, mx)
-        state.update((n_turns, n_mal, last_ts))
-        state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame([[conv_id, n_turns, n_mal, last_ts, False]], columns=cols)
-
-    return update
-
-
-def conversation_sessions(
-    routed: DataFrame, idle_timeout_ms: int = 30 * 60 * 1000
-) -> DataFrame:
-    """Custom STATEFUL streaming operator (``applyInPandasWithState``):
-    per-conversation running session stats — turn count, malformed count,
-    last activity — emitted on every update and flushed with
-    ``closed=true`` when the conversation goes idle past the processing-
-    time timeout. The reference has no stateful surface (bounded batch);
-    this is the Spark-native sessionization a transcript pipeline needs
-    (e.g. closing a conversation for downstream aggregation once no more
-    turns can arrive). State is one tiny row per open conversation, keyed
-    by conv_id — partitioned by the group key, so state shards scale with
-    executors."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        routed.groupBy("conv_id")
-        .applyInPandasWithState(
-            _session_update_fn(idle_timeout_ms),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
 
 
 def _epoch_ms(t) -> int:
@@ -341,9 +242,9 @@ def conversation_sessions_event_time(
     """EVENT-TIME sessionization (``applyInPandasWithState`` with
     ``EventTimeTimeout``): sessions close when the watermark — driven by
     observed event times, tolerant of ``watermark`` of disorder — passes
-    the session's last event + ``gap``. Unlike the processing-time variant
-    (:func:`conversation_sessions`), replaying a historical stream yields
-    the SAME session boundaries regardless of ingest speed, and a turn
+    the session's last event + ``gap``. Unlike a processing-time timeout,
+    replaying a historical stream yields the SAME session boundaries
+    regardless of ingest speed, and a turn
     older than the watermark cannot reopen a closed session (it is dropped
     by the watermark, the documented late-data contract)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -371,122 +272,3 @@ def _duration_ms(s: str) -> int:
         "hour": 3_600_000,
     }[unit.rstrip("s")]
     return int(n) * mult
-
-
-def run_sessions_to_memory(
-    spark: SparkSession,
-    input_path: str,
-    query_name: str = "conv_sessions",
-    idle_timeout_ms: int = 30 * 60 * 1000,
-) -> DataFrame:
-    """Drive the stateful sessionization over the files currently in
-    ``input_path`` (memory sink; test/smoke harness).
-
-    A processing-time timeout keeps state armed, and Spark services armed
-    timeouts by scheduling zero-row state-cleanup batches — so the query
-    never terminates on its own, even under ``trigger(availableNow)``
-    (measured: endless ~1.4 s empty batches after the data drained).
-    ``awaitTermination`` is therefore the wrong wait; instead poll the
-    stream's progress until every INPUT row has been processed (≥1 data
-    batch seen, latest batch empty, source reports no data available),
-    then stop. Conversations stay open; the timeout/``closed`` path is
-    unit-tested against the update function directly."""
-    routed = routed_stream(spark, read_transcripts_stream(spark, input_path))
-    sessions = conversation_sessions(
-        routed.select("conv_id", "sink", "ts"), idle_timeout_ms=idle_timeout_ms
-    )
-    q = (
-        sessions.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_drained(q, timeout=300.0)
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def _await_drained(q, timeout: float = 300.0) -> None:
-    """Block until the streaming query has processed all currently
-    available input (some data batch committed AND the newest batch was
-    empty with no more data pending), or the query terminated by itself.
-    Raises TimeoutError otherwise — partial session rows must not
-    masquerade as data."""
-    import time
-
-    deadline = time.monotonic() + timeout
-    saw_data = False
-    while time.monotonic() < deadline:
-        if not q.isActive:
-            return  # terminated on its own (e.g. event-time availableNow)
-        progress = q.recentProgress
-        saw_data = saw_data or any(p["numInputRows"] > 0 for p in progress)
-        latest_empty = bool(progress) and progress[-1]["numInputRows"] == 0
-        no_pending = not q.status.get("isDataAvailable", True)
-        if saw_data and latest_empty and no_pending:
-            return
-        time.sleep(0.5)
-    raise TimeoutError(
-        f"streaming query did not drain its input within {timeout}s"
-    )
-
-
-def run_routed_to_files(
-    spark: SparkSession,
-    input_path: str,
-    output_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """CHECKPOINT-RESUMABLE streaming pipeline run: the fused
-    route+extract+NDJSON operator over a file stream, written to a
-    parquet sink with a durable ``checkpointLocation``.
-
-    One call drains the files currently in ``input_path``
-    (``availableNow``) and terminates. Calling it AGAIN with the same
-    checkpoint directory resumes from the committed source offsets:
-    already-processed input files are skipped and the file sink's commit
-    log guarantees each input row lands in the output exactly once, even
-    if a previous run died mid-batch. This is the streaming face of the
-    batch job's bucket-group manifests (job.py) — the reference CLI has
-    no restart story at all (a killed run restarts from scratch)."""
-    routed = routed_json_stream(
-        spark, read_transcripts_stream(spark, input_path)
-    )
-    q = (
-        routed.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("streaming file-sink drain exceeded 300s")
-    finally:
-        q.stop()
-
-
-def run_stream_to_memory(
-    spark: SparkSession,
-    input_path: str,
-    query_name: str = "routed_counts",
-) -> DataFrame:
-    """Drive the streaming pipeline to completion over the files currently
-    in ``input_path`` (memory sink; test/smoke harness)."""
-    routed = routed_stream(spark, read_transcripts_stream(spark, input_path))
-    agg = windowed_sink_counts(routed)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")

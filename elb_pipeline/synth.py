@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from elb_pipeline.enrich import ROLES, TOOLS
 from elb_pipeline.goldens import TEXT_POOL
 
-POOL_N = len(TEXT_POOL)
 EPOCH = "2022-11-01 00:00:00"  # fixed; spans 3+ days via per-row offsets
 
 

@@ -14,7 +14,21 @@ import random
 
 import numpy as np
 
-from elb_pipeline.md5vec import hex32, lex_ranks, md5_digests
+from elb_pipeline.md5vec import (
+    hex32,
+    lex_ranks,
+    md5_digests_cat,
+    md5_seeded_digests_cat,
+)
+
+
+def _layout(msgs):
+    """(cat, starts, lens): the zero-copy message layout both kernels read."""
+    lens = np.fromiter(map(len, msgs), count=len(msgs), dtype=np.int64)
+    cat = np.frombuffer(b"".join(msgs), dtype=np.uint8)
+    starts = np.zeros(len(msgs), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    return cat, starts, lens
 
 
 def _ref(msgs):
@@ -25,7 +39,7 @@ def test_boundary_lengths_match_hashlib():
     msgs = []
     for n in (0, 1, 7, 8, 54, 55, 56, 57, 63, 64, 65, 119, 120, 121, 200):
         msgs.append(bytes((i * 31 + n) % 256 for i in range(n)))
-    got = md5_digests(msgs)
+    got = md5_digests_cat(*_layout(msgs))
     want = _ref(msgs)
     for i, w in enumerate(want):
         assert bytes(got[i]) == w, f"len {len(msgs[i])}"
@@ -37,14 +51,14 @@ def test_random_mixed_batch_matches_hashlib():
         bytes(rng.randrange(256) for _ in range(rng.randrange(0, 200)))
         for _ in range(500)
     ]
-    got = md5_digests(msgs)
+    got = md5_digests_cat(*_layout(msgs))
     want = _ref(msgs)
     assert all(bytes(g) == w for g, w in zip(got, want))
 
 
 def test_hex32_matches_hexdigest():
     msgs = [b"", b"abc", b"the quick brown fox", b"x" * 150]
-    hx = hex32(md5_digests(msgs))
+    hx = hex32(md5_digests_cat(*_layout(msgs)))
     assert [h.decode() for h in hx] == [
         hashlib.md5(m).hexdigest() for m in msgs
     ]
@@ -53,7 +67,7 @@ def test_hex32_matches_hexdigest():
 def test_lex_ranks_order_hexdigest_order():
     rng = random.Random(7)
     msgs = [f"shingle {i} {rng.random()}".encode() for i in range(300)]
-    d = md5_digests(msgs)
+    d = md5_digests_cat(*_layout(msgs))
     ranks = lex_ranks(d)
     hexes = [hashlib.md5(m).hexdigest() for m in msgs]
     by_rank = [h for _, h in sorted(zip(ranks, hexes))]
@@ -61,15 +75,13 @@ def test_lex_ranks_order_hexdigest_order():
 
 
 def test_seeded_digests_match_hashlib():
-    from elb_pipeline.md5vec import md5_seeded_digests
-
     rng = random.Random(99)
     msgs = [
         bytes(rng.randrange(256) for _ in range(rng.randrange(0, 120)))
         for _ in range(200)
     ]
     seeds = [f"#{i}".encode() for i in range(8)]
-    got = md5_seeded_digests(msgs, seeds)
+    got = md5_seeded_digests_cat(*_layout(msgs), seeds)
     for si, seed in enumerate(seeds):
         for mi, m in enumerate(msgs):
             assert bytes(got[si, mi]) == hashlib.md5(m + seed).digest()
@@ -77,5 +89,5 @@ def test_seeded_digests_match_hashlib():
 
 def test_unicode_shingle_round_trip():
     msgs = [s.encode() for s in ["héllo wörld ümlaut", "日本語 の テキスト", "a b c"]]
-    got = md5_digests(msgs)
+    got = md5_digests_cat(*_layout(msgs))
     assert [bytes(g) for g in got] == _ref(msgs)

@@ -150,8 +150,9 @@ def test_lang_quota_window_prunes_map_side(spark):
     """Spark 4's WindowGroupLimit must plant the Partial (map-side)
     top-QUOTA prune BELOW the exchange — the property that makes the
     direct per-lang window skew-resistant (packing.py docstring). If an
-    upgrade ever drops the rule, this trips and lang_quota should switch
-    to packing.lang_quota_salted."""
+    upgrade ever drops the rule, this trips and lang_quota needs a manual
+    two-stage prune (rank within (lang, input partition), then re-rank
+    the survivors)."""
     p = plan_of(entry_mod.q_lang_quota(spark, SF_DIR), mode="simple")
     lines = p.splitlines()
     partial = [i for i, l in enumerate(lines)

@@ -1,11 +1,15 @@
 """``dedup._shingles()`` — the one Spark definition of word-3-gram shingles
-every dedup path uses — against its Python twin, plus a plan guard that
-keeps the per-row work linear in the word count."""
+every dedup path and shingling driver query uses — against its Python
+twin, plus a plan guard that keeps the per-row work linear in the word
+count."""
 
 from __future__ import annotations
 
 import re
 
+import pytest
+
+import __spark_entry__ as entry_mod
 from elb_pipeline.dedup import _shingles, doc_pool, with_signatures
 from tests.conftest import SF_DIR
 
@@ -50,14 +54,27 @@ def _balanced_spans(plan: str, opener: str) -> list[str]:
     return spans
 
 
-def test_signature_plan_splits_outside_lambdas(spark):
+def _assert_splits_outside_lambdas(df):
     """A split inside the transform lambda re-splits the text once per
     shingle, which makes shingling quadratic in the word count."""
-    pool = doc_pool(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
-    plan = with_signatures(pool)._jdf.queryExecution().optimizedPlan().toString()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
     lambdas = _balanced_spans(plan, "lambdafunction(")
-    assert lambdas, "no lambda in the signature plan — guard is vacuous"
+    assert lambdas, "no lambda in the plan — guard is vacuous"
     assert "split(" in plan
     inner = [span for span in lambdas if "split(" in span]
     assert not inner, f"split( inside a lambda: {inner[0][:200]}"
+
+
+def test_signature_plan_splits_outside_lambdas(spark):
+    pool = doc_pool(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+    _assert_splits_outside_lambdas(with_signatures(pool))
+
+
+@pytest.mark.parametrize(
+    "query", ["ngram_profile", "repetition_scores", "doc_fingerprint"]
+)
+def test_query_plan_splits_outside_lambdas(spark, query):
+    """The driver queries that shingle documents use the same linear
+    ``_shingles()``."""
+    _assert_splits_outside_lambdas(entry_mod.queries()[query](spark, SF_DIR))
 

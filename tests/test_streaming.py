@@ -8,10 +8,48 @@ import collections
 from pyspark.sql import functions as F
 
 from elb_pipeline.dialects import parse_line
-from elb_pipeline.streaming import run_stream_to_memory
+from elb_pipeline.enrich import enrich
+from elb_pipeline.parse import routed_json_both, with_sink
+from elb_pipeline.streaming import read_transcripts_stream, windowed_sink_counts
 from elb_pipeline.synth import transcripts_from_events
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _drain(df, name, mode):
+    """Run streaming ``df`` into a memory sink called ``name`` until the
+    files currently in its source are processed; return the sink table."""
+    spark = df.sparkSession
+    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.sql(f"SELECT * FROM {name}")
+
+
+def _run_routed_to_files(spark, input_path, output_dir, checkpoint_dir):
+    """Checkpoint-resumable run: the fused route+extract+NDJSON operator
+    over a file stream into a parquet sink. One call drains the files in
+    ``input_path`` (``availableNow``) and terminates; calling it again
+    with the same checkpoint resumes from the committed source offsets,
+    and the file sink's commit log lands each input row exactly once."""
+    routed = routed_json_both(
+        read_transcripts_stream(spark, input_path), with_diag=True
+    )
+    q = (
+        routed.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        if not q.awaitTermination(300):
+            raise TimeoutError("streaming file-sink drain exceeded 300s")
+    finally:
+        q.stop()
 
 
 def test_streaming_counts_match_batch(spark, tmp_path):
@@ -19,7 +57,8 @@ def test_streaming_counts_match_batch(spark, tmp_path):
     path = str(tmp_path / "stream_in")
     t.write.mode("overwrite").parquet(path)
 
-    out = run_stream_to_memory(spark, path, query_name="t_counts")
+    routed = enrich(with_sink(read_transcripts_stream(spark, path)), spark)
+    out = _drain(windowed_sink_counts(routed), "t_counts", "complete")
     got = collections.Counter()
     for r in out.groupBy("sink").agg(F.sum("n").alias("n")).collect():
         got[r["sink"]] = r["n"]
@@ -33,14 +72,15 @@ def test_streaming_counts_match_batch(spark, tmp_path):
 def test_streaming_fused_json_matches_batch(spark, tmp_path):
     """The fused route+extract+NDJSON+diagnosis operator runs unchanged
     under readStream and emits byte-identical output to the batch path."""
-    from elb_pipeline.parse import routed_json_both
-    from elb_pipeline.streaming import run_json_stream_to_memory
-
     t = transcripts_from_events(spark, SF_DIR)
     path = str(tmp_path / "stream_in_json")
     t.write.mode("overwrite").parquet(path)
 
-    streamed = run_json_stream_to_memory(spark, path, query_name="t_json")
+    streamed = _drain(
+        routed_json_both(read_transcripts_stream(spark, path), with_diag=True),
+        "t_json",
+        "append",
+    )
     batch = routed_json_both(spark.read.parquet(path), with_diag=True)
 
     key = ["conv_id", "turn_idx"]
@@ -57,8 +97,6 @@ def test_streaming_checkpoint_resume(spark, tmp_path):
     resumes from committed offsets: files drained by run 1 are not
     reprocessed, late-added files are, and every turn appears in the
     parquet sink exactly once."""
-    from elb_pipeline.streaming import run_routed_to_files
-
     t = transcripts_from_events(spark, SF_DIR).limit(2000).cache()
     n_total = t.count()
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
@@ -67,14 +105,14 @@ def test_streaming_checkpoint_resume(spark, tmp_path):
     first.write.mode("overwrite").parquet(in_dir)
     n_first = first.count()
 
-    run_routed_to_files(spark, in_dir, out_dir, ckpt)
+    _run_routed_to_files(spark, in_dir, out_dir, ckpt)
     got1 = spark.read.parquet(out_dir)
     assert got1.count() == n_first
 
     # add the remaining rows as a NEW file; resume from the checkpoint
     rest = t.subtract(first)
     rest.coalesce(1).write.mode("append").parquet(in_dir)
-    run_routed_to_files(spark, in_dir, out_dir, ckpt)
+    _run_routed_to_files(spark, in_dir, out_dir, ckpt)
 
     got2 = spark.read.parquet(out_dir)
     assert got2.count() == n_total  # old files skipped, new file processed
@@ -87,53 +125,16 @@ def test_streaming_checkpoint_resume(spark, tmp_path):
     t.unpersist()
 
 
-def test_stateful_sessionization(spark, tmp_path):
-    """applyInPandasWithState sessionization: the LAST update emitted per
-    conversation must carry the full batch-computed totals."""
-    from elb_pipeline.parse import with_sink
-    from elb_pipeline.streaming import run_sessions_to_memory
-
-    t = transcripts_from_events(spark, SF_DIR)
-    path = str(tmp_path / "stream_in_state")
-    t.write.mode("overwrite").parquet(path)
-
-    out = run_sessions_to_memory(spark, path, query_name="t_sessions")
-    # keep the final (highest n_turns) update per conversation
-    latest = {}
-    for r in out.collect():
-        cur = latest.get(r["conv_id"])
-        if cur is None or r["n_turns"] > cur["n_turns"]:
-            latest[r["conv_id"]] = r
-
-    batch = (
-        with_sink(t)
-        .groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum((F.col("sink") == "malformed").cast("long")).alias("n_malformed"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    want = {r["conv_id"]: r for r in batch.collect()}
-    assert set(latest) == set(want)
-    for cid, r in latest.items():
-        w = want[cid]
-        assert (r["n_turns"], r["n_malformed"], r["last_ts"]) == (
-            w["n_turns"], w["n_malformed"], w["last_ts"]
-        ), cid
-
-
 class _FakeState:
     """Minimal GroupState stand-in for unit-testing the update function
-    (the end-to-end streaming run of the timeout path is wall-clock
-    dependent and flaky in CI; the accumulate path is covered end-to-end
-    by test_stateful_sessionization)."""
+    without streaming machinery (the end-to-end runs are
+    test_event_time_sessionization_closes_on_watermark and
+    test_streaming_sessions_equal_batch_replay)."""
 
     def __init__(self, value=None, timed_out=False):
         self._value = value
         self.hasTimedOut = timed_out
         self.removed = False
-        self.timeout_ms = None
 
     @property
     def exists(self):
@@ -149,36 +150,6 @@ class _FakeState:
     def remove(self):
         self.removed = True
         self._value = None
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
-
-def test_session_update_fn_accumulates_and_closes():
-    import pandas as pd
-
-    from elb_pipeline.streaming import _session_update_fn
-
-    fn = _session_update_fn(idle_timeout_ms=1234)
-    ts1 = pd.Timestamp("2024-01-01 10:00:00")
-    ts2 = pd.Timestamp("2024-01-01 11:00:00")
-    pdf = pd.DataFrame({"sink": ["alb", "malformed", "alb"], "ts": [ts2, ts1, ts1]})
-
-    # fresh conversation: accumulate + arm the timeout
-    state = _FakeState()
-    (out,) = list(fn(("conv-x",), iter([pdf]), state))
-    assert out.iloc[0].tolist() == ["conv-x", 3, 1, ts2, False]
-    assert state.get == (3, 1, ts2) and state.timeout_ms == 1234
-
-    # second batch: running totals keep growing
-    (out2,) = list(fn(("conv-x",), iter([pdf]), state))
-    assert out2.iloc[0].tolist() == ["conv-x", 6, 2, ts2, False]
-
-    # idle timeout: closed row emitted, state removed
-    state.hasTimedOut = True
-    (closed,) = list(fn(("conv-x",), iter([]), state))
-    assert closed.iloc[0].tolist() == ["conv-x", 6, 2, ts2, True]
-    assert state.removed
 
 
 class _FakeEventState(_FakeState):
@@ -508,9 +479,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     exactly once when all re-occurrences fall inside the watermark horizon,
     with duplicates split ACROSS micro-batches (max_files_per_trigger=2
     over 8 files), not just within one."""
-    import collections
-
-    from elb_pipeline.streaming import dedup_stream, read_transcripts_stream
+    from elb_pipeline.streaming import dedup_stream
 
     t = transcripts_from_events(spark, SF_DIR)
     path = str(tmp_path / "dedup_in")
@@ -528,20 +497,9 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         read_transcripts_stream(spark, path, max_files_per_trigger=2),
         watermark=f"{span_h} hours",
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = _drain(deduped, "t_dedup", "append")
 
-    got = collections.Counter(
-        r["text"] for r in spark.sql("SELECT text FROM t_dedup").collect()
-    )
+    got = collections.Counter(r["text"] for r in out.select("text").collect())
     want = {r["text"] for r in t.select("text").distinct().collect()}
     assert set(got) == want
     dup_admitted = {s: n for s, n in got.items() if n != 1}
