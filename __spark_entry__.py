@@ -412,13 +412,15 @@ def q_minhash_dup_groups(spark, sf_dir):
     )
 
 
-def _doc_cache_key(sf_dir: str) -> str:
-    """Cache key for per-sf_dir materialized intermediates: sf tag + a
-    content fingerprint of documents.parquet (stale-proof)."""
+def _doc_pool(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
+    """The materialized doc pool of ``sf_dir`` and the cache key every
+    intermediate derived from it is written under: sf tag + a content
+    fingerprint of documents.parquet (stale-proof)."""
     from elb_pipeline.matcache import dir_fingerprint
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return f"{tag}_{dir_fingerprint(f'{sf_dir}/documents.parquet')}"
+    key = f"{tag}_{dir_fingerprint(f'{sf_dir}/documents.parquet')}"
+    return D.materialized_doc_pool(_read(spark, sf_dir, "documents"), key), key
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
@@ -427,37 +429,26 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     exact shingle-set Jaccard — the linear-cost near-dup path for 100 TB
     (dedup.py). Signatures are materialized to a parquet table (computed
     once, no persisted RDDs left behind)."""
-    from elb_pipeline.dedup import (
-        materialized_doc_pool,
-        materialized_signatures,
-        materialized_verified_pairs,
-    )
+    from elb_pipeline.dedup import materialized_signatures, materialized_verified_pairs
 
-    key = _doc_cache_key(sf_dir)
-    sigs = materialized_signatures(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
+    pool, key = _doc_pool(spark, sf_dir)
+    sigs = materialized_signatures(pool, cache_key=key)
     return materialized_verified_pairs(sigs, cache_key=key)
 
 
 def q_minhash_lsh_groups(spark, sf_dir):
     """Duplicate components: connected components over the verified LSH
     pairs via iterative min-label propagation; group_id = min doc_id.
-    dup_groups owns the persist lifecycle of its inputs (pairs/edges are
-    unpersisted once the edge set is materialized)."""
+    dup_groups owns the persist lifecycle of its inputs (pairs/edges and
+    its checkpoints are released once the groups table is written)."""
     from elb_pipeline.dedup import (
         dup_groups,
-        materialized_doc_pool,
         materialized_signatures,
         materialized_verified_pairs,
     )
 
-    key = _doc_cache_key(sf_dir)
-    sigs = materialized_signatures(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
+    pool, key = _doc_pool(spark, sf_dir)
+    sigs = materialized_signatures(pool, cache_key=key)
     return dup_groups(materialized_verified_pairs(sigs, cache_key=key), cache_key=key)
 
 
@@ -478,14 +469,12 @@ def q_leakproof_split(spark, sf_dir):
     control (tests/test_mixture.py)."""
     from elb_pipeline.dedup import (
         dup_groups,
-        materialized_doc_pool,
         materialized_signatures,
         materialized_verified_pairs,
     )
     from elb_pipeline.mixture import hash_frac
 
-    key = _doc_cache_key(sf_dir)
-    pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
+    pool, key = _doc_pool(spark, sf_dir)
     groups = dup_groups(
         materialized_verified_pairs(
             materialized_signatures(pool, cache_key=key), cache_key=key
@@ -519,12 +508,10 @@ def q_dedup_incremental(spark, sf_dir):
     from elb_pipeline.dedup import (
         EXACT_OFFSET,
         incremental_dedup,
-        materialized_doc_pool,
         materialized_signatures,
     )
 
-    key = _doc_cache_key(sf_dir)
-    pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
+    pool, key = _doc_pool(spark, sf_dir)
     sigs = materialized_signatures(pool, cache_key=key)
     return incremental_dedup(pool, sigs, EXACT_OFFSET)
 
@@ -539,13 +526,10 @@ def q_jaccard_rare_pairs(spark, sf_dir):
     the known recall gap (dup cliques wider than the cap have no blocking
     key — measured at sf0.001) is documented at dedup.rare_shingle_pairs,
     and the exact-recall prefix-filter variant is jaccard_prefix_pairs."""
-    from elb_pipeline.dedup import materialized_doc_pool, rare_shingle_pairs
+    from elb_pipeline.dedup import rare_shingle_pairs
 
-    key = _doc_cache_key(sf_dir)
-    return rare_shingle_pairs(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
+    pool, key = _doc_pool(spark, sf_dir)
+    return rare_shingle_pairs(pool, cache_key=key)
 
 
 def q_jaccard_prefix_pairs(spark, sf_dir):
@@ -560,13 +544,10 @@ def q_jaccard_prefix_pairs(spark, sf_dir):
     set arrays (dedup.prefix_jaccard_pairs — see the module comment's
     measured scale lesson: the string-array form spilled >65 GB at 233k
     docs on a bigram-entropy corpus)."""
-    from elb_pipeline.dedup import materialized_doc_pool, prefix_jaccard_pairs
+    from elb_pipeline.dedup import prefix_jaccard_pairs
 
-    key = _doc_cache_key(sf_dir)
-    return prefix_jaccard_pairs(
-        materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key),
-        cache_key=key,
-    )
+    pool, key = _doc_pool(spark, sf_dir)
+    return prefix_jaccard_pairs(pool, cache_key=key)
 
 
 # BPE-ish token classes: letter runs, digit runs, single punctuation
@@ -824,23 +805,19 @@ def q_simhash_near_dup(spark, sf_dir):
     expression tree falls out of codegen, 119 s → ~1 s), materialized to
     parquet so the two join sides don't recompute it and no persisted RDD
     outlives the query."""
-    from elb_pipeline.dedup import materialized_doc_pool, simhash32
-    from elb_pipeline.matcache import materialize
-
     import inspect
 
-    from elb_pipeline.dedup import _simhash32_batch, algo_params
+    from elb_pipeline.dedup import _simhash32_batch, algo_params, simhash32
+    from elb_pipeline.matcache import cached
 
-    pool = materialize(
-        materialized_doc_pool(
-            _read(spark, sf_dir, "documents"), cache_key=_doc_cache_key(sf_dir)
-        ).select(
-            "doc_id", simhash32(F.col("text")).alias("sh")
-        ),
-        f"simhash32_{_doc_cache_key(sf_dir)}",
-        params=algo_params() + (inspect.getsource(_simhash32_batch),),
+    pool, key = _doc_pool(spark, sf_dir)
+    hashed = cached(
+        spark,
+        f"simhash32_{key}",
+        algo_params() + (inspect.getsource(_simhash32_batch),),
+        lambda: pool.select("doc_id", simhash32(F.col("text")).alias("sh")),
     )
-    bands = pool.select(
+    bands = hashed.select(
         "doc_id",
         "sh",
         F.explode(
@@ -930,14 +907,13 @@ def q_contamination_check(spark, sf_dir):
     shingles shared with the 'benchmark set' (docs 0-9). At scale the
     benchmark shingle set is small → broadcast join; candidate docs are
     whatever overlaps, no all-pairs work."""
-    from elb_pipeline.dedup import EXACT_OFFSET, materialized_doc_pool, shingle_tables
+    from elb_pipeline.dedup import EXACT_OFFSET, shingle_tables
 
     # per-doc distinct shingle rows exploded from the materialized
     # signature table (the base documents are exactly the pool rows below
     # the planted-dup offset) instead of re-shingling the corpus — same
     # (doc_id, s) set by construction
-    key = _doc_cache_key(sf_dir)
-    pool = materialized_doc_pool(_read(spark, sf_dir, "documents"), cache_key=key)
+    pool, key = _doc_pool(spark, sf_dir)
     rows, _ = shingle_tables(pool, key)
     shingled = rows.where(F.col("doc_id") < EXACT_OFFSET)
     bench = (
@@ -982,27 +958,29 @@ def q_training_corpus(spark, sf_dir):
     import inspect
 
     from elb_pipeline import curation as C
-    from elb_pipeline.matcache import materialize
+    from elb_pipeline.matcache import cached
 
-    docs = _read(spark, sf_dir, "documents")
-    key = _doc_cache_key(sf_dir)
-    pool = D.materialized_doc_pool(docs, cache_key=key)
-    # both shingle sides are exploded from the materialized signature
-    # table: the benchmark side is its doc_id < 10 slice (the base
-    # documents ARE the pool rows below the planted-dup offset), the
-    # contamination side is the full pool — no re-shingling in either screen
-    rows, _ = D.shingle_tables(pool, key)
-    surv = C.training_corpus(
-        pool,
-        rows.where(F.col("doc_id") < C.N_BENCH_DOCS).select("s").distinct(),
-        C.en_base_ids(docs),
-        cache_key=key,
-        pool_shingles=rows,
-    )
-    return materialize(
-        surv,
-        f"curation_surv_{_doc_cache_key(sf_dir)}",
-        params=D.algo_params()
+    pool, key = _doc_pool(spark, sf_dir)
+
+    def build():
+        # both shingle sides are exploded from the materialized signature
+        # table: the benchmark side is its doc_id < 10 slice (the base
+        # documents ARE the pool rows below the planted-dup offset), the
+        # contamination side is the full pool — no re-shingling in either
+        # screen
+        rows, _ = D.shingle_tables(pool, key)
+        return C.training_corpus(
+            pool,
+            rows.where(F.col("doc_id") < C.N_BENCH_DOCS).select("s").distinct(),
+            C.en_base_ids(_read(spark, sf_dir, "documents")),
+            cache_key=key,
+            pool_shingles=rows,
+        )
+
+    return cached(
+        spark,
+        f"curation_surv_{key}",
+        D.algo_params()
         + (
             C.MIN_TOKENS,
             C.MAX_CHARS_PER_TOKEN_X2,
@@ -1011,6 +989,7 @@ def q_training_corpus(spark, sf_dir):
             tuple(C.EN_STOPWORDS),
             inspect.getsource(C.training_corpus),
         ),
+        build,
     )
 
 

@@ -45,8 +45,8 @@ def training_corpus(
     bench_sh: DataFrame,
     en_base_ids: DataFrame,
     cache_key: str,
+    pool_shingles: DataFrame,
     raw_id: Column | None = None,
-    pool_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Survivors (doc_id, n_tokens) of the five curation screens.
 
@@ -57,19 +57,20 @@ def training_corpus(
     ``en_base_ids`` — one column ``base_id``: ids of docs tagged en (the
                       lang tag lives on the BASE row; planted copies at
                       base_id + offset inherit it through the unwrap).
+    ``pool_shingles`` — (doc_id, s) rows for the contamination screen's
+                      pool side. The driver query projects them from the
+                      materialized signature table; the scaling bench
+                      needs its own because its in-text replica markers
+                      turn every 3-gram into (2 real words + marker) —
+                      matching on MARKED shingles contaminates
+                      ~everything (3-word phrase matching degrades to
+                      2-word, measured 5820 of 5840 docs at sf0.1) — so
+                      it supplies DEMARKED, replica-prefixed shingles
+                      that restore the true 3-original-word semantics per
+                      replica.
     ``raw_id``      — expression recovering the un-replicated id from
                       ``doc_id`` (identity by default; the scaling bench
                       passes ``doc_id % REPLICA_STRIDE``).
-    ``pool_shingles`` — optional (doc_id, s) override for the
-                      contamination screen's pool side. The scaling bench
-                      needs it because its in-text replica markers turn
-                      every 3-gram into (2 real words + marker) — matching
-                      on MARKED shingles contaminates ~everything (3-word
-                      phrase matching degrades to 2-word, measured 5820 of
-                      5840 docs at sf0.1) — so it supplies DEMARKED,
-                      replica-prefixed shingles that restore the true
-                      3-original-word semantics per replica. Default:
-                      shingles of ``pool.text`` (production shape).
     """
     if raw_id is None:
         raw_id = F.col("doc_id")
@@ -87,13 +88,11 @@ def training_corpus(
     near_drop = (
         groups.where(F.col("doc_id") != F.col("group_id")).select("doc_id")
     )
-    pool_sh = (
-        pool_shingles
-        if pool_shingles is not None
-        else pool.select("doc_id", F.explode(D._shingles()).alias("s"))
-    ).distinct()
     contaminated = (
-        pool_sh.join(F.broadcast(bench_sh), "s").select("doc_id").distinct()
+        pool_shingles.distinct()
+        .join(F.broadcast(bench_sh), "s")
+        .select("doc_id")
+        .distinct()
     )
 
     n_tokens = n_tokens_col()

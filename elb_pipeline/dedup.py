@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from elb_pipeline.matcache import cached
+
 EXACT_MOD = 11
 NEAR_MOD = 13
 EXACT_OFFSET = 100_000
@@ -123,23 +125,20 @@ def doc_pool(documents: DataFrame) -> DataFrame:
 
 
 def materialized_doc_pool(documents: DataFrame, cache_key: str) -> DataFrame:
-    """``doc_pool`` materialized once per input fingerprint. Nine registry
-    queries consume the pool; each was re-running the 3-way union +
-    spreading repartition (plus its shuffle) from the single-file test
-    table (~0.4 s each at sf0.1). The parquet read-back keeps the spread
-    partitioning. Production analog: the dedup input IS a real table —
-    the pool only exists to synthesize a dup-bearing corpus from the
-    dup-free driver fixture, so materializing it mirrors the production
-    shape the same way transcripts_cached does for the parse family."""
-    from elb_pipeline.matcache import lookup, materialize
-
-    cached = lookup(
-        documents.sparkSession, f"doc_pool_{cache_key}", params=algo_params()
-    )
-    if cached is not None:
-        return cached
-    return materialize(
-        doc_pool(documents), f"doc_pool_{cache_key}", params=algo_params()
+    """``doc_pool`` materialized once per input fingerprint. The dedup,
+    similarity and curation queries all consume the pool; each was
+    re-running the 3-way union + spreading repartition (plus its shuffle)
+    from the single-file test table (~0.4 s each at sf0.1). The parquet
+    read-back keeps the spread partitioning. Production analog: the dedup
+    input IS a real table — the pool only exists to synthesize a
+    dup-bearing corpus from the dup-free driver fixture, so materializing
+    it mirrors the production shape the same way transcripts_cached does
+    for the parse family."""
+    return cached(
+        documents.sparkSession,
+        f"doc_pool_{cache_key}",
+        algo_params(),
+        lambda: doc_pool(documents),
     )
 
 
@@ -285,22 +284,19 @@ def with_signatures(pool: DataFrame) -> DataFrame:
     )
 
 
-def materialized_signatures(pool: DataFrame, cache_key: str | None = None) -> DataFrame:
+def materialized_signatures(pool: DataFrame, cache_key: str) -> DataFrame:
     """Signatures computed ONCE and materialized — the b band joins and the
     Jaccard verification all reuse this frame, and without materialization
     each branch would re-evaluate the 8 minhash lambda expressions from
-    scratch (measured ~10× recompute, 82 s → ~10 s at sf0.1).
-
-    With ``cache_key`` the frame is written to parquet and read back
-    (matcache.materialize) — the 100-TB shape, and it leaves NO persisted
-    RDDs behind in a long-lived session. Without a key it falls back to
-    ``.persist()``; the caller owns the unpersist."""
-    sigs = with_signatures(pool)
-    if cache_key is not None:
-        from elb_pipeline.matcache import materialize
-
-        return materialize(sigs, f"minhash_sigs_{cache_key}", params=algo_params())
-    return sigs.persist()
+    scratch (measured ~10× recompute, 82 s → ~10 s at sf0.1). The frame is
+    written to parquet and read back (matcache.cached) — the 100-TB shape,
+    and it leaves NO persisted RDDs behind in a long-lived session."""
+    return cached(
+        pool.sparkSession,
+        f"minhash_sigs_{cache_key}",
+        algo_params(),
+        lambda: with_signatures(pool),
+    )
 
 
 def signatures_cte() -> str:
@@ -388,10 +384,11 @@ def materialized_verified_pairs(sigs: DataFrame, cache_key: str) -> DataFrame:
     (measured ~1-2 s per consumer at sf0.1). Same lifecycle as the
     signature table: computed once, written as a real parquet table, no
     persisted RDDs left behind."""
-    from elb_pipeline.matcache import materialize
-
-    return materialize(
-        verified_pairs(sigs), f"verified_pairs_{cache_key}", params=algo_params()
+    return cached(
+        sigs.sparkSession,
+        f"verified_pairs_{cache_key}",
+        algo_params(),
+        lambda: verified_pairs(sigs),
     )
 
 
@@ -896,38 +893,25 @@ simhash32 = F.pandas_udf(_simhash32_batch, T.LongType())
 # connected components → dup groups
 # ---------------------------------------------------------------------------
 
-def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
+def dup_groups(pairs: DataFrame, cache_key: str) -> DataFrame:
     """(doc_id, group_id) for every doc in a verified pair; group_id is the
     min doc_id of its connected component (iterative min-label
     propagation — one round per hop from a component's min id to its
     farthest node, plus the round that finds no change).
 
-    The converged label table is materialized to parquet
-    (matcache.materialize) and EVERY RDD this call persisted — the
-    pairs/edges caches and each iteration's lineage-truncating
-    localCheckpoint — is released before returning, so a long-lived
-    session accumulates no storage. That is also the 100-TB shape: the
-    group table is a real table every downstream consumer reads, not
-    driver-session cache state. ``cache_key`` keys the parquet (reused
-    across identical calls); without one a per-call key is generated."""
-    import uuid
-
-    from elb_pipeline.matcache import lookup, materialize
-
-    if cache_key is not None:
-        # Cache-first: the fixpoint loop below is EAGER driver-side work
-        # (one checkpoint + one changed-count job per round), so a post-hoc
-        # materialize() can't skip it — every consumer of the same groups
-        # table (lsh_groups, leakproof_split, training_corpus,
-        # corpus_sequences) was re-running label propagation from scratch.
-        cached = lookup(
-            pairs.sparkSession, f"dup_groups_{cache_key}", params=algo_params()
-        )
-        if cached is not None:
-            return cached
-
+    The converged label table is written once under ``cache_key``
+    (matcache.cached), so every consumer of the same groups table
+    (lsh_groups, leakproof_split, training_corpus, corpus_sequences)
+    reads the parquet instead of re-running label propagation, and the
+    eager fixpoint loop only runs on a cache miss. EVERY RDD this call
+    persisted — the pairs/edges caches and each iteration's
+    lineage-truncating localCheckpoint — is released after the write,
+    so a long-lived session accumulates no storage. That is also the
+    100-TB shape: the group table is a real table every downstream
+    consumer reads, not driver-session cache state."""
     sc = pairs.sparkSession.sparkContext
     owned_rdd_ids: set = set()  # ids of the RDDs THIS call persists
+    held: list[DataFrame] = []  # the persisted pairs/edges frames
 
     def _lc(df: DataFrame) -> DataFrame:
         """localCheckpoint with the persisted-RDD id recorded as OURS —
@@ -944,59 +928,66 @@ def dup_groups(pairs: DataFrame, cache_key: str | None = None) -> DataFrame:
         owned_rdd_ids.add(out._jdf.queryExecution().analyzed().rdd().id())
         return out
 
-    pairs = pairs.persist()  # read twice (both edge directions) below
-    edges = (
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .unionByName(pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
-        .distinct()
-        .persist()  # every iteration joins against edges — compute once
-    )
-    # seed = the first round from identity labels, label(node) = min(node,
-    # min neighbor); checkpointing it materializes edges, so pairs is done
-    labels = _lc(
-        edges.groupBy("src")
-        .agg(F.least("src", F.min("dst")).alias("label"))
-        .withColumnRenamed("src", "node")
-    )
-    pairs.unpersist()
-    while True:
-        # neighbor-min pass: label(node) ← min(label(node), min over
-        # neighbors' labels), with the node's previous label carried as
-        # min(old) so the fixpoint check is a scan of the checkpoint, not
-        # a join. localCheckpoint truncates the lineage each round —
-        # otherwise iteration k replays all k-1 previous rounds (and the
-        # whole candidate derivation) from scratch. At scale each round is
-        # one shuffle and the loop is a driver-side fixpoint check.
-        nbr = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(edges.src.alias("node"), "label", F.lit(None).alias("old"))
+    def build() -> DataFrame:
+        held.append(pairs.persist())  # read twice (both edge directions)
+        edges = (
+            pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+            .unionByName(
+                pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
+            )
+            .distinct()
+            .persist()  # every iteration joins against edges — compute once
         )
+        held.append(edges)
+        # seed = the first round from identity labels, label(node) =
+        # min(node, min neighbor); checkpointing it materializes edges, so
+        # pairs is done
         labels = _lc(
-            labels.select("node", "label", F.col("label").alias("old"))
-            .unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
+            edges.groupBy("src")
+            .agg(F.least("src", F.min("dst")).alias("label"))
+            .withColumnRenamed("src", "node")
         )
-        # labels only ever decrease, so "changed" is "decreased"
-        if labels.where(F.col("label") < F.col("old")).limit(1).count() == 0:
-            break
-    out = labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("group_id")
-    )
-    out = materialize(
-        out,
-        f"dup_groups_{cache_key or uuid.uuid4().hex[:12]}",
-        params=algo_params(),
-    )
-    edges.unpersist()
-    # release exactly the checkpoint RDDs THIS call created (tracked in
-    # _lc above); the result now reads parquet, so none of them back it.
-    jmap = sc._jsc.getPersistentRDDs()
-    for rdd_id in owned_rdd_ids:
-        jrdd = jmap.get(rdd_id)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-    return out
+        pairs.unpersist()
+        while True:
+            # neighbor-min pass: label(node) ← min(label(node), min over
+            # neighbors' labels), with the node's previous label carried
+            # as min(old) so the fixpoint check is a scan of the
+            # checkpoint, not a join. localCheckpoint truncates the
+            # lineage each round — otherwise iteration k replays all k-1
+            # previous rounds (and the whole candidate derivation) from
+            # scratch. At scale each round is one shuffle and the loop is
+            # a driver-side fixpoint check.
+            nbr = (
+                edges.join(labels, edges.dst == labels.node)
+                .select(edges.src.alias("node"), "label", F.lit(None).alias("old"))
+            )
+            labels = _lc(
+                labels.select("node", "label", F.col("label").alias("old"))
+                .unionByName(nbr)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"), F.min("old").alias("old"))
+            )
+            # labels only ever decrease, so "changed" is "decreased"
+            if labels.where(F.col("label") < F.col("old")).limit(1).count() == 0:
+                break
+        return labels.select(
+            F.col("node").alias("doc_id"), F.col("label").alias("group_id")
+        )
+
+    try:
+        return cached(
+            pairs.sparkSession, f"dup_groups_{cache_key}", algo_params(), build
+        )
+    finally:
+        for df in held:
+            df.unpersist()
+        # release exactly the checkpoint RDDs THIS call created (tracked
+        # in _lc above); the result reads parquet, so none of them back it.
+        jmap = sc._jsc.getPersistentRDDs()
+        for rdd_id in owned_rdd_ids:
+            jrdd = jmap.get(rdd_id)
+            if jrdd is not None:
+                jrdd.unpersist(False)
 
 
 def dup_groups_cte() -> str:

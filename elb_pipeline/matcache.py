@@ -1,13 +1,21 @@
-"""Deterministic parquet materialization for expensive intermediates.
+"""Write-once parquet caching for expensive intermediates.
 
-``materialize(df, key)`` writes ``df`` once to a content-keyed /tmp
-directory (atomic rename — concurrent first runs never observe a
-half-written cache) and returns the read-back frame. This is the
-100-TB shape for reused intermediates: a signature/sketch table is
-computed ONCE, written as a real table, and every downstream join reads
-the parquet — no lingering ``.persist()`` state in a long-lived session
-(Spark's in-memory columnar cache also measured pathological on long
-text columns; see BENCH/BASELINE.md).
+Every materialized intermediate goes through one step, ``write_once``:
+if the directory holds a ``_SUCCESS`` marker nothing is built; otherwise
+the frame is built, written to a private ``<path>.tmp.<pid>`` and
+renamed into place atomically, so concurrent first runs never observe a
+half-written directory and the loser of the rename race drops its copy.
+``cached(spark, key, params, build)`` applies that step under the cache
+root and returns the parquet read-back. ``build`` is a zero-argument
+callable, so an EAGER builder (a driver-side fixpoint loop like
+dedup.dup_groups) runs nothing on a hit, and a lazy one is not even
+planned.
+
+This is the 100-TB shape for reused intermediates: a signature/sketch
+table is computed ONCE, written as a real table, and every downstream
+join reads the parquet — no lingering ``.persist()`` state in a
+long-lived session (Spark's in-memory columnar cache also measured
+pathological on long text columns; see BENCH/BASELINE.md).
 
 ``dir_fingerprint`` keys caches on the INPUT's identity (file names +
 sizes + mtimes), so regenerated test data at the same path can never
@@ -19,6 +27,7 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -62,39 +71,29 @@ def dir_fingerprint(path: str) -> str:
     return h.hexdigest()[:12]
 
 
-def cache_path(key: str, params: tuple = ()) -> str:
+def cache_path(key: str, params: tuple) -> str:
     """Cache directory a (key, params) pair materializes to."""
     return os.path.join(_cache_root(), f"{key}-v{params_token(params)}")
 
 
-def lookup(spark, key: str, params: tuple = ()):
-    """Return the cached frame for (key, params) if it is already
-    materialized, else None. Lets EAGER builders (driver-side fixpoint
-    loops like dedup.dup_groups) skip their whole computation on a cache
-    hit — ``materialize`` alone only helps LAZY inputs, because the caller
-    has already run its Spark jobs by the time materialize() checks the
-    cache (measured: every dup-groups consumer re-ran label propagation
-    from scratch, ~2-3 s per query at sf0.1)."""
-    path = cache_path(key, params)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    return None
-
-
-def materialize(df: DataFrame, key: str, params: tuple = ()) -> DataFrame:
-    """Write ``df`` to the cache under ``key`` (first caller wins the
-    atomic rename race) and return the parquet read-back. ``params`` is
-    the tuple of algorithm constants / kernel source the frame's contents
-    depend on — it is hashed into the directory name, so a logic change
-    always misses the old cache instead of silently reusing it."""
-    root = _cache_root()
-    path = os.path.join(root, f"{key}-v{params_token(params)}")
+def write_once(path: str, build: Callable[[], DataFrame]) -> str:
+    """Write ``build()`` as parquet at ``path`` unless a complete copy is
+    already there, and return ``path``. ``build`` runs only on a miss."""
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(root, exist_ok=True)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp.{os.getpid()}"
-        df.write.mode("overwrite").parquet(tmp)
+        build().write.mode("overwrite").parquet(tmp)
         try:
             os.rename(tmp, path)
         except OSError:  # lost the race — the winner's copy is complete
             shutil.rmtree(tmp, ignore_errors=True)
-    return df.sparkSession.read.parquet(path)
+    return path
+
+
+def cached(spark, key: str, params: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    """The frame ``build()`` returns, written once under ``key`` and read
+    back from parquet. ``params`` is the tuple of algorithm constants /
+    kernel source the frame's contents depend on — it is hashed into the
+    directory name, so a logic change always misses the old cache instead
+    of silently reusing it."""
+    return spark.read.parquet(write_once(cache_path(key, params), build))

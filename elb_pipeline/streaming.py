@@ -3,9 +3,10 @@
 The reference is a bounded batch job over files (SURVEY.md §2.9); our
 parse/route/enrich stages are stateless, so the batch operators run
 under ``readStream`` unchanged. This module adds the streaming source,
-watermarked per-sink window counts, exact dedup within a watermark
-horizon, and event-time sessionization with its batch replay twin. The
-harnesses that drive a stream into a sink live in tests/test_streaming.py.
+exact dedup within a watermark horizon, and event-time sessionization
+with its batch replay twin. The harnesses that drive a stream into a
+sink, and the watermarked per-sink window counts the streaming smoke
+test checks against batch, live in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -32,25 +33,6 @@ def read_transcripts_stream(
     if max_files_per_trigger > 0:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(path)
-
-
-def windowed_sink_counts(
-    routed: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-sink tumbling-window counts tolerant of late turns."""
-    return (
-        routed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "sink")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "sink",
-            "n",
-        )
-    )
 
 
 def dedup_stream(

@@ -66,35 +66,21 @@ def transcripts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 def transcripts_cache_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the transcripts table for ``sf_dir`` (if not already)
     and return its parquet path — for consumers that need the PATH, e.g.
-    ``readStream`` sources."""
-    import hashlib
+    ``readStream`` sources. The path is keyed on a content fingerprint of
+    the events input, so regenerated test data at the same path never
+    serves a stale cache; it lives outside ``ELB_MAT_CACHE``, so a
+    harness that points that at a fresh directory to time queries cold
+    still reads the shared transcripts table."""
     import os
 
-    # Key the cache on a content fingerprint of the events input (file
-    # names + sizes + mtimes), not just the sf_dir basename: regenerated
-    # test data at the same path must not serve a stale cache.
-    ev_dir = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.md5()
-    entries = [ev_dir] if os.path.isfile(ev_dir) else sorted(
-        os.path.join(ev_dir, f) for f in os.listdir(ev_dir)
-    )
-    for f in entries:
-        st = os.stat(f)
-        h.update(f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = f"/tmp/elb_transcripts_cache_v3_{tag}_{h.hexdigest()[:12]}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # Write to a private temp dir, then atomically rename into place so
-        # two concurrent first runs never read a half-written directory.
-        tmp = f"{path}.tmp.{os.getpid()}"
-        transcripts_from_events(spark, sf_dir).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # another process won the race — use its copy
-            import shutil
+    from elb_pipeline.matcache import dir_fingerprint, write_once
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    fp = dir_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    return write_once(
+        f"/tmp/elb_transcripts_cache_v3_{tag}_{fp}",
+        lambda: transcripts_from_events(spark, sf_dir),
+    )
 
 
 def synth_transcripts(

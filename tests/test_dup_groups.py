@@ -48,7 +48,8 @@ def cache(tmp_path, monkeypatch):
 @pytest.mark.parametrize("name", sorted(GRAPHS))
 def test_groups_match_union_find(spark, cache, name):
     pairs = GRAPHS[name]
-    got = {r.doc_id: r.group_id for r in dup_groups(_pairs_df(spark, pairs)).collect()}
+    groups = dup_groups(_pairs_df(spark, pairs), cache_key=name)
+    got = {r.doc_id: r.group_id for r in groups.collect()}
     assert got == _union_find(pairs)
 
 
@@ -60,7 +61,7 @@ def test_path_job_count(spark, cache):
     pairs = _pairs_df(spark, GRAPHS["path16"])
     sc.setLocalProperty("spark.jobGroup.id", "dup_groups-path16")
     try:
-        groups = dup_groups(pairs)
+        groups = dup_groups(pairs, cache_key="path16")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("dup_groups-path16"))

@@ -5,6 +5,8 @@ matcache (parquet write + read-back); the only transient persists
 
 from __future__ import annotations
 
+import pytest
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -64,17 +66,67 @@ def test_matcache_params_token_busts_stale_cache(spark, tmp_path, monkeypatch):
     """Changing the algorithm params must MISS the old cache entry instead
     of serving parquet computed by the previous version of the logic
     (ADVICE r3): same key + different params → different directory."""
-    from elb_pipeline.matcache import materialize
+    from elb_pipeline.matcache import cached
 
     monkeypatch.setenv("ELB_MAT_CACHE", str(tmp_path / "cache"))
-    v1 = spark.range(3).toDF("x")
-    got1 = materialize(v1, "k", params=("threshold", 0.5))
+    got1 = cached(spark, "k", ("threshold", 0.5), lambda: spark.range(3).toDF("x"))
     assert sorted(r["x"] for r in got1.collect()) == [0, 1, 2]
 
-    v2 = spark.range(5).toDF("x")  # "new logic" produces different rows
+    def v2():  # "new logic" produces different rows
+        return spark.range(5).toDF("x")
+
     # same params → cache HIT: still the old 3 rows
-    hit = materialize(v2, "k", params=("threshold", 0.5))
+    hit = cached(spark, "k", ("threshold", 0.5), v2)
     assert hit.count() == 3
     # changed params → MISS: the new frame is materialized
-    miss = materialize(v2, "k", params=("threshold", 0.7))
+    miss = cached(spark, "k", ("threshold", 0.7), v2)
     assert miss.count() == 5
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["doc_pool", "dup_groups"])
+def test_keyed_second_call_is_cache_hit(spark, tmp_path, monkeypatch, name):
+    """A second call with the same key never calls its builder and runs
+    no Spark job beyond reading the cached directory back (parquet schema
+    inference is itself one job) — for the eager dup_groups fixpoint loop
+    as much as for the lazy doc pool."""
+    from elb_pipeline import dedup, matcache
+
+    monkeypatch.setenv("ELB_MAT_CACHE", str(tmp_path / "cache"))
+    builds = []
+
+    def spy(spark_, key, params, build):
+        def counted():
+            builds.append(key)
+            return build()
+
+        return matcache.cached(spark_, key, params, counted)
+
+    monkeypatch.setattr(dedup, "cached", spy)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "a_id long, b_id long")
+
+    def call():
+        if name == "doc_pool":
+            return dedup.materialized_doc_pool(docs, "hit")
+        return dedup.dup_groups(pairs, cache_key="hit")
+
+    out = []
+    group = f"hit-{tmp_path.name}"
+    n_miss = _jobs_in(spark, f"{group}-miss", lambda: out.append(call()))
+    n_hit = _jobs_in(spark, f"{group}-hit", lambda: out.append(call()))
+    path = matcache.cache_path(f"{name}_hit", dedup.algo_params())
+    n_read = _jobs_in(spark, f"{group}-read", lambda: spark.read.parquet(path))
+    assert builds == [f"{name}_hit"]
+    assert n_hit == n_read < n_miss, (n_miss, n_hit, n_read)
+    assert sorted(out[1].collect()) == sorted(out[0].collect())

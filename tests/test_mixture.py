@@ -126,9 +126,10 @@ def test_leakproof_split_no_pair_straddles(spark):
 
     split = entry_mod.q_leakproof_split(spark, SF_DIR)
     pool = doc_pool(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
-    pairs = verified_pairs(
-        materialized_signatures(pool, cache_key=entry_mod._doc_cache_key(SF_DIR))
-    ).select("a_id", "b_id")
+    _, key = entry_mod._doc_pool(spark, SF_DIR)
+    pairs = verified_pairs(materialized_signatures(pool, cache_key=key)).select(
+        "a_id", "b_id"
+    )
     a = split.withColumnRenamed("doc_id", "a_id").withColumnRenamed(
         "split", "a_split"
     )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from elb_pipeline.dialects import parse_line
 from elb_pipeline.enrich import enrich
 from elb_pipeline.parse import routed_json_both, with_sink
-from elb_pipeline.streaming import read_transcripts_stream, windowed_sink_counts
+from elb_pipeline.streaming import read_transcripts_stream
 from elb_pipeline.synth import transcripts_from_events
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -26,6 +26,22 @@ def _drain(df, name, mode):
     finally:
         q.stop()
     return spark.sql(f"SELECT * FROM {name}")
+
+
+def _windowed_sink_counts(routed):
+    """Per-sink 1-hour tumbling-window counts tolerant of turns up to
+    2 hours late."""
+    return (
+        routed.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "sink")
+        .agg(F.count("*").alias("n"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "sink",
+            "n",
+        )
+    )
 
 
 def _run_routed_to_files(spark, input_path, output_dir, checkpoint_dir):
@@ -58,7 +74,7 @@ def test_streaming_counts_match_batch(spark, tmp_path):
     t.write.mode("overwrite").parquet(path)
 
     routed = enrich(with_sink(read_transcripts_stream(spark, path)), spark)
-    out = _drain(windowed_sink_counts(routed), "t_counts", "complete")
+    out = _drain(_windowed_sink_counts(routed), "t_counts", "complete")
     got = collections.Counter()
     for r in out.groupBy("sink").agg(F.sum("n").alias("n")).collect():
         got[r["sink"]] = r["n"]
