@@ -934,7 +934,7 @@ def q_training_corpus(spark, sf_dir):
       (2) near-dup dedup: drop every non-representative member of a
           MinHash-LSH dup component (representative = min id, dedup.py);
       (3) benchmark-contamination: drop docs sharing ANY word-3-gram
-          shingle with the benchmark docs (raw doc_id < 10), and the
+          shingle with the benchmark docs (doc_id < 10), and the
           benchmark docs themselves;
       (4) quality gate: >= 30 tokens AND 2*chars <= 11*tokens (mean token
           length <= 5.5 — integer arithmetic, no float thresholds);
@@ -945,10 +945,9 @@ def q_training_corpus(spark, sf_dir):
     composing the screens adds NO new shuffle beyond the joins on the
     narrow id column. No reference counterpart (curation pipeline op).
 
-    The composition itself lives in elb_pipeline.curation.training_corpus
-    — the SAME builder the corpus-growth bench (BENCH/dedup_scaling.py
-    training_corpus series, VERDICT r4 #7) runs on replica-strided pools,
-    so the oracled query and the scaling evidence cannot drift apart.
+    The composition itself lives in elb_pipeline.curation.training_corpus;
+    its corpus-growth scaling is recorded in BENCH/dedup_scaling_r5.json
+    (the ``corpus`` series, VERDICT r4 #7).
 
     The survivor frame is materialized per (sf_dir fingerprint, curation
     params) — VERDICT r5 #4: ``corpus_sequences`` runs the same five
@@ -961,22 +960,6 @@ def q_training_corpus(spark, sf_dir):
     from elb_pipeline.matcache import cached
 
     pool, key = _doc_pool(spark, sf_dir)
-
-    def build():
-        # both shingle sides are exploded from the materialized signature
-        # table: the benchmark side is its doc_id < 10 slice (the base
-        # documents ARE the pool rows below the planted-dup offset), the
-        # contamination side is the full pool — no re-shingling in either
-        # screen
-        rows, _ = D.shingle_tables(pool, key)
-        return C.training_corpus(
-            pool,
-            rows.where(F.col("doc_id") < C.N_BENCH_DOCS).select("s").distinct(),
-            C.en_base_ids(_read(spark, sf_dir, "documents")),
-            cache_key=key,
-            pool_shingles=rows,
-        )
-
     return cached(
         spark,
         f"curation_surv_{key}",
@@ -989,7 +972,7 @@ def q_training_corpus(spark, sf_dir):
             tuple(C.EN_STOPWORDS),
             inspect.getsource(C.training_corpus),
         ),
-        build,
+        lambda: C.training_corpus(pool, _read(spark, sf_dir, "documents"), key),
     )
 
 
@@ -1220,10 +1203,10 @@ def q_conversation_assembly(spark, sf_dir):
     stays narrow. Runs the CHUNKED two-stage form
     (aggregate.assemble_conversations_chunked — stage 1 pre-assembles
     turn_idx-range chunks so a hot conversation's sort/build work spreads
-    over many tasks; the skew evidence is BENCH/skew_bench.py, VERDICT r4
-    #8) while DuckDB recomputes the DIRECT single-stage string_agg — the
-    oracle therefore proves the salted merge equals the direct
-    aggregation cross-engine. No reference counterpart (the reference
+    over many tasks; the skew evidence is BENCH/skew_bench_r5.json,
+    VERDICT r4 #8) while DuckDB recomputes the DIRECT single-stage
+    string_agg — the oracle therefore proves the salted merge equals the
+    direct aggregation cross-engine. No reference counterpart (the reference
     emits one output line per input line, main.rs:103-177; assembly is a
     training-pipeline op)."""
     from elb_pipeline.aggregate import assemble_conversations_chunked

@@ -82,9 +82,9 @@ def salted_sink_day_bucket_counts(
 # aggregation state is O(rows of the key) (collect_list), so Spark's
 # map-side partial combine does NOT collapse a hot conversation the way it
 # collapses hot count keys (the honest reason the salted COUNT variant
-# shows no wall delta under skew — see BENCH/skew_bench.py). The chunked
-# two-stage form below is the salting analog that actually helps here:
-# stage 1 groups on (conv_id, turn_idx range chunk), so a hot
+# shows no wall delta under skew — see BENCH/skew_bench_r5.json). The
+# chunked two-stage form below is the salting analog that actually helps
+# here: stage 1 groups on (conv_id, turn_idx range chunk), so a hot
 # conversation's sort/assembly work spreads over n_chunks tasks and
 # per-task aggregation state is bounded by the chunk size; stage 2 merges
 # the few pre-assembled chunk strings in chunk order. Results are provably

@@ -2,13 +2,10 @@
 
 One function owns the composition — (1) exact dedup keep-min, (2)
 MinHash-LSH near-dup representative filter, (3) benchmark-contamination
-anti-join, (4) integer quality gate, (5) language/stopword gate — so the
-oracled driver query (__spark_entry__.q_training_corpus) and the
-corpus-growth bench (BENCH/dedup_scaling.py's training_corpus series,
-VERDICT r4 #7) run the IDENTICAL plan and cannot drift. The bench feeds
-replica-strided doc ids, so everything that interprets an id (the
-benchmark `< 10` screen, the planted-copy base_id unwrap) goes through a
-caller-supplied ``raw_id`` column; the default is the id itself.
+anti-join, (4) integer quality gate, (5) language/stopword gate — run by
+the oracled driver query (__spark_entry__.q_training_corpus). Its
+corpus-growth scaling is recorded in BENCH/dedup_scaling_r5.json (the
+``corpus`` series, VERDICT r4 #7).
 
 Scale shape (unchanged from the r4 flagship): every screen is a semi/anti
 join on the narrow doc_id or a pushed-down predicate; candidate
@@ -28,7 +25,7 @@ from elb_pipeline import dedup as D
 MIN_TOKENS = 30
 MAX_CHARS_PER_TOKEN_X2 = 11  # 2*chars <= 11*tokens, i.e. mean len <= 5.5
 MIN_STOPWORDS = 2
-N_BENCH_DOCS = 10  # raw doc_id < 10 are the held-out benchmark docs
+N_BENCH_DOCS = 10  # doc_id < 10 are the held-out benchmark docs
 
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "it", "for", "on"]
 
@@ -41,39 +38,22 @@ def n_tokens_col() -> Column:
 
 
 def training_corpus(
-    pool: DataFrame,
-    bench_sh: DataFrame,
-    en_base_ids: DataFrame,
-    cache_key: str,
-    pool_shingles: DataFrame,
-    raw_id: Column | None = None,
+    pool: DataFrame, documents: DataFrame, cache_key: str
 ) -> DataFrame:
     """Survivors (doc_id, n_tokens) of the five curation screens.
 
-    ``pool``        — (doc_id, text) candidate docs (dedup.doc_pool shape).
-    ``bench_sh``    — one column ``s``: the distinct word-3-gram shingles
-                      of the held-out benchmark docs (caller builds it so
-                      the bench can use per-replica marked benchmarks).
-    ``en_base_ids`` — one column ``base_id``: ids of docs tagged en (the
-                      lang tag lives on the BASE row; planted copies at
-                      base_id + offset inherit it through the unwrap).
-    ``pool_shingles`` — (doc_id, s) rows for the contamination screen's
-                      pool side. The driver query projects them from the
-                      materialized signature table; the scaling bench
-                      needs its own because its in-text replica markers
-                      turn every 3-gram into (2 real words + marker) —
-                      matching on MARKED shingles contaminates
-                      ~everything (3-word phrase matching degrades to
-                      2-word, measured 5820 of 5840 docs at sf0.1) — so
-                      it supplies DEMARKED, replica-prefixed shingles
-                      that restore the true 3-original-word semantics per
-                      replica.
-    ``raw_id``      — expression recovering the un-replicated id from
-                      ``doc_id`` (identity by default; the scaling bench
-                      passes ``doc_id % REPLICA_STRIDE``).
+    ``pool``      — (doc_id, text) candidate docs (dedup.doc_pool shape).
+    ``documents`` — the base table the pool was planted from; the lang tag
+                    lives on the BASE row, and planted copies at
+                    base_id + offset inherit it through the unwrap.
+    ``cache_key`` — key of the pool's materialized signature, pair and
+                    group tables. Both sides of the contamination screen
+                    are projected from the signature table
+                    (dedup.shingle_tables): the pool side is every row,
+                    the benchmark side the rows of the base docs with
+                    doc_id < N_BENCH_DOCS.
     """
-    if raw_id is None:
-        raw_id = F.col("doc_id")
+    rows, _ = D.shingle_tables(pool, cache_key)
     sigs = D.materialized_signatures(pool, cache_key=cache_key)
     groups = D.dup_groups(
         D.materialized_verified_pairs(sigs, cache_key=cache_key),
@@ -88,11 +68,18 @@ def training_corpus(
     near_drop = (
         groups.where(F.col("doc_id") != F.col("group_id")).select("doc_id")
     )
+    bench_sh = (
+        rows.where(F.col("doc_id") < N_BENCH_DOCS).select("s").distinct()
+    )
     contaminated = (
-        pool_shingles.distinct()
+        rows.distinct()
         .join(F.broadcast(bench_sh), "s")
         .select("doc_id")
         .distinct()
+    )
+
+    en_base_ids = documents.where(F.col("lang") == "en").select(
+        F.col("doc_id").alias("base_id")
     )
 
     n_tokens = n_tokens_col()
@@ -102,18 +89,11 @@ def training_corpus(
         pool.join(exact_keep, "doc_id", "semi")
         .join(near_drop, "doc_id", "anti")
         .join(contaminated, "doc_id", "anti")
-        .where(raw_id >= N_BENCH_DOCS)
+        .where(F.col("doc_id") >= N_BENCH_DOCS)
         .where(n_tokens >= MIN_TOKENS)
         .where(2 * F.length("text") <= MAX_CHARS_PER_TOKEN_X2 * n_tokens)
         .where(n_sw >= MIN_STOPWORDS)
-        .withColumn("base_id", raw_id % D.EXACT_OFFSET)
+        .withColumn("base_id", F.col("doc_id") % D.EXACT_OFFSET)
         .join(en_base_ids, "base_id", "semi")
         .select("doc_id", n_tokens.cast("int").alias("n_tokens"))
-    )
-
-
-def en_base_ids(documents: DataFrame) -> DataFrame:
-    return (
-        documents.where(F.col("lang") == "en")
-        .select(F.col("doc_id").alias("base_id"))
     )

@@ -424,9 +424,10 @@ def incremental_dedup(pool: DataFrame, sigs: DataFrame, split_id: int) -> DataFr
 
     100-TB shape: the exact layer joins on the narrow (md5, length) key —
     a semi-join against the corpus key set plus a partial-combining
-    min-per-key over the batch; the near layer is the SAME banded-LSH
-    machinery as verified_pairs but with the band join's probe side
-    restricted to the batch, so the work is |batch| band rows probing the
+    min-per-key over the batch; the near layer IS verified_pairs, kept to
+    pairs whose larger id is a batch doc. The optimizer pushes that filter
+    onto the probe side of the band join and of the verify join
+    (tests/test_plans.py), so the work is |batch| band rows probing the
     corpus index — NO corpus x corpus pairs are generated (at refresh
     scale corpus >> batch, so that asymmetry is the whole game). Jaccard
     verify touches candidates only. ``sigs`` is the materialized signature
@@ -449,44 +450,14 @@ def incremental_dedup(pool: DataFrame, sigs: DataFrame, split_id: int) -> DataFr
         .select("doc_id", F.lit(True).alias("x_batch"))
     )
 
-    keyed = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.concat(F.lit(f"{b}:"), _band_key(b)) for b in range(N_BANDS)
-            ])
-        ).alias("bk"),
-    )
-    index_side = keyed.select(F.col("doc_id").alias("other_id"), "bk")
-    probe_side = keyed.where(is_batch).select(F.col("doc_id").alias("b_id"), "bk")
-    cands = (
-        index_side.join(probe_side, "bk")
-        .where(
-            # a partner counts if it is corpus, or an earlier batch doc
-            (F.col("other_id") < F.lit(split_id))
-            | (F.col("other_id") < F.col("b_id"))
-        )
-        .select("other_id", "b_id")
-        .distinct()
-    )
-    a = sigs.select(F.col("doc_id").alias("other_id"), F.col("sh").alias("a_sh"))
-    b = sigs.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    sa, sb = F.array_distinct("a_sh"), F.array_distinct("b_sh")
-    jac = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
+    # a_id < b_id, so a batch doc's partner is corpus or an earlier batch doc
     near = (
-        cands.join(a, "other_id")
-        .join(b, "b_id")
-        .where(F.round(jac, 4) >= JACCARD_THRESHOLD)
+        verified_pairs(sigs)
+        .where(F.col("b_id") >= F.lit(split_id))
         .groupBy("b_id")
-        .agg(
-            F.max((F.col("other_id") < F.lit(split_id)).cast("int")).alias(
-                "near_corpus"
-            )
-        )
+        .agg(F.max(F.col("a_id") < F.lit(split_id)).alias("n_corpus"))
         .select(
-            F.col("b_id").alias("doc_id"),
-            (F.col("near_corpus") == 1).alias("n_corpus"),
-            F.lit(True).alias("n_any"),
+            F.col("b_id").alias("doc_id"), "n_corpus", F.lit(True).alias("n_any")
         )
     )
 
@@ -575,20 +546,14 @@ def incremental_dedup_sql(split_id: int) -> str:
 RARE_DF_MAX = 4  # doc-frequency cap on blocking shingles
 
 
-def shingle_tables(
-    pool: DataFrame, cache_key: str | None = None
-) -> tuple[DataFrame, DataFrame]:
+def shingle_tables(pool: DataFrame, cache_key: str) -> tuple[DataFrame, DataFrame]:
     """``(doc_id, s)`` rows of each doc's DISTINCT word-3-gram shingles and
     ``(doc_id, hs)`` the same set as 8-byte ``xxhash64`` values (the
-    verify-side operand of _jaccard_verify). With ``cache_key`` both are
-    narrow projections of the materialized signature table's ``sh``
-    column, so the shingles are computed once per input fingerprint and
-    no extra table is written; without one they are shingled from
-    ``pool.text``. Same values either way."""
-    if cache_key is not None:
-        sh = materialized_signatures(pool, cache_key=cache_key)
-    else:
-        sh = pool.select("doc_id", _shingles().alias("sh"))
+    verify-side operand of _jaccard_verify). Both are narrow projections
+    of the materialized signature table's ``sh`` column, so the shingles
+    are computed once per input fingerprint and no extra table is
+    written."""
+    sh = materialized_signatures(pool, cache_key=cache_key)
     distinct = F.array_distinct("sh")
     return (
         sh.select("doc_id", F.explode(distinct).alias("s")),
@@ -596,9 +561,7 @@ def shingle_tables(
     )
 
 
-def rare_shingle_pairs(
-    pool: DataFrame, cache_key: str | None = None
-) -> DataFrame:
+def rare_shingle_pairs(pool: DataFrame, cache_key: str) -> DataFrame:
     """Near-duplicate pairs (exact shingle-set Jaccard >= JACCARD_THRESHOLD)
     blocked on shingles with document frequency in [2, RARE_DF_MAX].
 
@@ -613,8 +576,8 @@ def rare_shingle_pairs(
     dup cliques wider than RARE_DF_MAX are invisible (see module comment;
     prefix_jaccard_pairs is the exact-recall variant).
 
-    ``cache_key``: take the shingle rows and verify sets from the
-    materialized signature table (``shingle_tables``)."""
+    Shingle rows and verify sets come from the signature table
+    materialized under ``cache_key`` (``shingle_tables``)."""
     sh, sets_ = shingle_tables(pool, cache_key)
     rare = (
         sh.groupBy("s")
@@ -642,9 +605,9 @@ def _jaccard_verify(cands: DataFrame, sets_: DataFrame) -> DataFrame:
     would surface as an oracle mismatch). The byte win is the scale story:
     the candidate join's intermediates carry ~8 B/shingle instead of the
     ~30 B/shingle strings — at 233k docs the string form's verify stage
-    spilled >65 GB and died on ENOSPC; the hashed form fits (measured,
-    BENCH/dedup_scaling.py prefix). ``sets_`` is the ``(doc_id, hs)``
-    table of ``shingle_tables``."""
+    spilled >65 GB and died on ENOSPC; the hashed form fits (recorded in
+    BENCH/dedup_scaling_r5.json ``prefix``). ``sets_`` is the
+    ``(doc_id, hs)`` table of ``shingle_tables``."""
     a = sets_.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("a_sh"))
     b = sets_.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("b_sh"))
     jac = F.size(F.array_intersect("a_sh", "b_sh")) / F.size(
@@ -703,7 +666,7 @@ def rare_shingle_pairs_sql() -> str:
 # CTEs) — the capped form's sole remaining advantage is the worst-case
 # df^2 <= 16 bound.
 #
-# SCALE LESSON (measured, BENCH/dedup_scaling.py prefix at 233k docs): on
+# SCALE LESSON (BENCH/dedup_scaling_r5.json ``prefix``, 233k docs): on
 # an ORGANIC corpus the length filter alone is nearly vacuous — same-length
 # docs sharing one mid-rarity shingle produced 407k candidates per 5,840
 # docs (2.4% of all pairs), and verifying them by shipping ~1.5 KB
@@ -720,9 +683,7 @@ def rare_shingle_pairs_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def prefix_jaccard_pairs(
-    pool: DataFrame, cache_key: str | None = None
-) -> DataFrame:
+def prefix_jaccard_pairs(pool: DataFrame, cache_key: str) -> DataFrame:
     """Exact near-duplicate pairs (shingle-set Jaccard >= JACCARD_THRESHOLD)
     via the AllPairs prefix filter — deterministic AND recall-complete.
 
@@ -736,8 +697,8 @@ def prefix_jaccard_pairs(
     hashed shingle sets. All shuffles are on doc_id or shingle; no
     all-pairs stage exists at any width.
 
-    ``cache_key``: take the shingle rows and verify sets from the
-    materialized signature table (``shingle_tables``)."""
+    Shingle rows and verify sets come from the signature table
+    materialized under ``cache_key`` (``shingle_tables``)."""
     t = JACCARD_THRESHOLD
     sh, sets_ = shingle_tables(pool, cache_key)
     dfs = sh.groupBy("s").agg(F.count("*").alias("df"))

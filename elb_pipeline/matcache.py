@@ -9,7 +9,9 @@ half-written directory and the loser of the rename race drops its copy.
 root and returns the parquet read-back. ``build`` is a zero-argument
 callable, so an EAGER builder (a driver-side fixpoint loop like
 dedup.dup_groups) runs nothing on a hit, and a lazy one is not even
-planned.
+planned. A miss also deletes the key's entries under other params
+tokens: they were built by a previous version of the logic and no
+current caller can reach them.
 
 This is the 100-TB shape for reused intermediates: a signature/sketch
 table is computed ONCE, written as a real table, and every downstream
@@ -26,6 +28,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 from collections.abc import Callable
 
@@ -95,5 +98,15 @@ def cached(spark, key: str, params: tuple, build: Callable[[], DataFrame]) -> Da
     back from parquet. ``params`` is the tuple of algorithm constants /
     kernel source the frame's contents depend on — it is hashed into the
     directory name, so a logic change always misses the old cache instead
-    of silently reusing it."""
-    return spark.read.parquet(write_once(cache_path(key, params), build))
+    of silently reusing it, and that miss deletes the old entry."""
+    path = cache_path(key, params)
+    stale = re.compile(re.escape(key) + r"-v[0-9a-f]{10}")
+
+    def build_fresh() -> DataFrame:
+        root = os.path.dirname(path)
+        for name in os.listdir(root):
+            if stale.fullmatch(name) and name != os.path.basename(path):
+                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        return build()
+
+    return spark.read.parquet(write_once(path, build_fresh))

@@ -27,7 +27,8 @@ per-sequence rollup) is one hash shuffle on seq_id.
 ``lang_quota`` — keep at most QUOTA docs per language by a deterministic
 priority order. The naive worry: ``row_number`` over
 ``partitionBy(lang)`` shuffles every row of a hot language into one task
-— the windowed analog of the skewed aggregation (BENCH/skew_bench.py).
+— the windowed analog of the skewed aggregation
+(BENCH/skew_bench_r5.json).
 Measured finding (this round): Spark 4's ``WindowGroupLimit`` rule
 already solves it for rank-limit filters — the optimizer inserts a
 PARTIAL WindowGroupLimit below the exchange, pruning each map task to

@@ -48,10 +48,28 @@ def _brute_force_sql() -> str:
     )
 
 
+@pytest.fixture(scope="module", autouse=True)
+def cache(tmp_path_factory):
+    """Every path here writes its materialized tables into a fresh cache."""
+    mp = pytest.MonkeyPatch()
+    path = tmp_path_factory.mktemp("cache")
+    mp.setenv("ELB_MAT_CACHE", str(path))
+    yield path
+    mp.undo()
+
+
 @pytest.fixture(scope="module")
 def pool(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     return doc_pool(docs)
+
+
+def _assert_reads_signature_table(cache):
+    """The exact paths project their shingle rows and verify sets from the
+    materialized signature table and write no shingle table of their own."""
+    entries = sorted(os.listdir(cache))
+    assert any(e.startswith("minhash_sigs_parity-v") for e in entries), entries
+    assert not [e for e in entries if e.startswith(("shingle_rows_", "shingle_sets_"))]
 
 
 @pytest.fixture(scope="module")
@@ -62,17 +80,23 @@ def truth(duck):
     return pairs
 
 
-def test_prefix_filter_is_exact(pool, truth):
-    got = {(r.a_id, r.b_id, r.jaccard) for r in prefix_jaccard_pairs(pool).collect()}
+def _pairs(df) -> set:
+    return {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
+
+
+def test_prefix_filter_is_exact(pool, truth, cache):
+    got = _pairs(prefix_jaccard_pairs(pool, cache_key="parity"))
     assert got == truth, (
         f"prefix filter diverges from brute force: "
         f"missing={sorted(truth - got)[:5]} extra={sorted(got - truth)[:5]}"
     )
+    _assert_reads_signature_table(cache)
 
 
-def test_rare_path_is_sound_subset(pool, truth):
-    got = {(r.a_id, r.b_id, r.jaccard) for r in rare_shingle_pairs(pool).collect()}
+def test_rare_path_is_sound_subset(pool, truth, cache):
+    got = _pairs(rare_shingle_pairs(pool, cache_key="parity"))
     assert got <= truth, f"rare path emitted false pairs: {sorted(got - truth)[:5]}"
+    _assert_reads_signature_table(cache)
     # the documented blind spot: any miss must be inside a dup clique wider
     # than RARE_DF_MAX — i.e. both endpoints of a missed pair appear in
     # OTHER true pairs (no isolated pair is ever missed)
@@ -84,26 +108,5 @@ def test_rare_path_is_sound_subset(pool, truth):
 def test_lsh_path_is_sound_subset(spark, truth):
     import __spark_entry__ as entry_mod
 
-    got = {
-        (r.a_id, r.b_id, r.jaccard)
-        for r in entry_mod.queries()["minhash_lsh_pairs"](spark, SF_DIR).collect()
-    }
+    got = _pairs(entry_mod.queries()["minhash_lsh_pairs"](spark, SF_DIR))
     assert got <= truth, f"LSH emitted false pairs: {sorted(got - truth)[:5]}"
-
-
-def test_cached_paths_equal_uncached(spark, pool, tmp_path, monkeypatch):
-    """With a ``cache_key`` both exact-Jaccard paths take their shingle
-    rows and verify sets from the materialized signature table; they must
-    return the same pairs as the uncached paths and write no shingle table
-    of their own."""
-    cache = tmp_path / "cache"
-    monkeypatch.setenv("ELB_MAT_CACHE", str(cache))
-
-    def rows(df):
-        return {(r.a_id, r.b_id, r.jaccard) for r in df.collect()}
-
-    for path in (prefix_jaccard_pairs, rare_shingle_pairs):
-        assert rows(path(pool, cache_key="parity")) == rows(path(pool)), path.__name__
-    entries = sorted(os.listdir(cache))
-    assert any(e.startswith("minhash_sigs_parity") for e in entries), entries
-    assert not [e for e in entries if e.startswith(("shingle_rows_", "shingle_sets_"))]

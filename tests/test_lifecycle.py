@@ -5,6 +5,8 @@ matcache (parquet write + read-back); the only transient persists
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -65,8 +67,9 @@ def test_dup_groups_leaves_foreign_caches_alone(spark):
 def test_matcache_params_token_busts_stale_cache(spark, tmp_path, monkeypatch):
     """Changing the algorithm params must MISS the old cache entry instead
     of serving parquet computed by the previous version of the logic
-    (ADVICE r3): same key + different params → different directory."""
-    from elb_pipeline.matcache import cached
+    (ADVICE r3): same key + different params → different directory, and
+    the miss deletes the superseded directory of that key only."""
+    from elb_pipeline.matcache import cache_path, cached
 
     monkeypatch.setenv("ELB_MAT_CACHE", str(tmp_path / "cache"))
     got1 = cached(spark, "k", ("threshold", 0.5), lambda: spark.range(3).toDF("x"))
@@ -78,9 +81,16 @@ def test_matcache_params_token_busts_stale_cache(spark, tmp_path, monkeypatch):
     # same params → cache HIT: still the old 3 rows
     hit = cached(spark, "k", ("threshold", 0.5), v2)
     assert hit.count() == 3
+    # an in-flight write of "k" and another key's entry are not "k"'s to drop
+    old = cache_path("k", ("threshold", 0.5))
+    others = [f"{old}.tmp.1", cache_path("kk", ("threshold", 0.5))]
+    for d in others:
+        os.makedirs(d)
     # changed params → MISS: the new frame is materialized
     miss = cached(spark, "k", ("threshold", 0.7), v2)
     assert miss.count() == 5
+    assert not os.path.exists(old)
+    assert all(os.path.isdir(d) for d in others)
 
 
 def _jobs_in(spark, group: str, fn) -> int:

@@ -171,6 +171,20 @@ def test_sessions_batch_single_shuffle_on_conv_id(spark):
     assert p.count("Exchange") == 1, p
 
 
+def test_incremental_dedup_probes_with_the_batch_only(spark):
+    """dedup_incremental's near layer keeps the verified pairs whose b_id
+    is a batch doc. That filter must reach the probe-side signature scans
+    of both the band join (sig columns) and the verify join (sh), so no
+    corpus x corpus candidate is formed; the index sides read every row."""
+    p = plan_of(entry_mod.q_dedup_incremental(spark, SF_DIR), mode="simple")
+    scans = [
+        l for l in p.splitlines() if "FileScan parquet" in l and "minhash_sigs_" in l
+    ]
+    batch = [l for l in scans if "GreaterThanOrEqual(doc_id,100000)" in l]
+    assert len(scans) == 4, p
+    assert sorted("sig0" in l for l in batch) == [False, True], p
+
+
 def test_no_cartesian_anywhere_in_suite(spark):
     """No query may plan a CartesianProduct or BroadcastNestedLoopJoin on
     the fact side (the IVF pivot cross-join is an intentional broadcast
