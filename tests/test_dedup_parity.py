@@ -26,6 +26,7 @@ from elb_pipeline.dedup import (
     doc_pool_cte,
     prefix_jaccard_pairs,
     rare_shingle_pairs,
+    with_signatures,
 )
 from tests.conftest import SF_DIR
 
@@ -110,3 +111,25 @@ def test_lsh_path_is_sound_subset(spark, truth):
 
     got = _pairs(entry_mod.queries()["minhash_lsh_pairs"](spark, SF_DIR))
     assert got <= truth, f"LSH emitted false pairs: {sorted(got - truth)[:5]}"
+
+
+def test_cached_paths_equal_uncached(pool, tmp_path, monkeypatch):
+    """With a ``cache_key`` both exact-Jaccard paths take their shingle
+    rows and verify sets from the materialized signature table; they must
+    return the same pairs as when that table is the lazy, never-written
+    ``with_signatures`` frame, and write no shingle table of their own."""
+    import elb_pipeline.dedup as dedup_mod
+
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("ELB_MAT_CACHE", str(cache))
+    paths = (prefix_jaccard_pairs, rare_shingle_pairs)
+    cached_rows = [_pairs(path(pool, cache_key="parity")) for path in paths]
+    _assert_reads_signature_table(cache)
+
+    written = sorted(os.listdir(cache))
+    monkeypatch.setattr(
+        dedup_mod, "materialized_signatures", lambda pool, cache_key: with_signatures(pool)
+    )
+    for path, got in zip(paths, cached_rows):
+        assert got == _pairs(path(pool, cache_key="parity")), path.__name__
+    assert sorted(os.listdir(cache)) == written
