@@ -113,7 +113,9 @@ def test_job_end_to_end_and_resume(spark, transcripts, oracle_rows, tmp_path):
 
 def test_aggregates_and_lineage_match_written_data(spark, transcripts, tmp_path):
     """Each group's aggregates/group=G equals the aggregate recomputed over
-    its data/group=G, and each manifest's lineage sums to its sink_counts."""
+    its data/group=G, and each manifest's lineage equals, entry by entry,
+    the (src_partition, sink) counts of its data/group=G and sums to its
+    sink_counts."""
     out = str(tmp_path / "agg")
     res = run_job(spark, transcripts, out, mode="skip", n_groups=3)
     assert sorted(res.groups_run) == [0, 1, 2]
@@ -127,6 +129,13 @@ def test_aggregates_and_lineage_match_written_data(spark, transcripts, tmp_path)
         assert got == want and len(got) > 0
 
         manifest = checkpoint.read_manifest(out, g)
+        direct = sorted(
+            (r["src_partition"], r["sink"], r["count"])
+            for r in data.groupBy("src_partition", "sink").count().collect()
+        )
+        assert [
+            (e["partition_id"], e["sink"], e["n"]) for e in manifest["lineage"]
+        ] == direct
         lineage = collections.Counter()
         for entry in manifest["lineage"]:
             lineage[entry["sink"]] += entry["n"]
