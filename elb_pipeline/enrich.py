@@ -4,8 +4,10 @@ The reference has no joins (single input, main.rs:103-177); this stage is
 the target-mandated enrich step: every transcript row is left-joined
 against the role and tool dimensions. Both dims are tiny (4 / 5 rows), so
 ``F.broadcast`` pins a broadcast hash join — zero shuffle of the fact side
-regardless of scale. Left joins are total (every fact key present in the
-dim) so enrichment never drops rows.
+regardless of scale. The dims are inline VALUES tables, planned in the JVM
+as ``LocalTableScan``s, so building the broadcast crosses no Python
+boundary. Left joins are total (every fact key present in the dim) so
+enrichment never drops rows.
 """
 
 from __future__ import annotations
@@ -34,16 +36,23 @@ TOOL_DIM_ROWS: list[tuple[str, str, bool]] = [
 ]
 
 
+def _values(
+    spark: SparkSession, rows: list[tuple[str, str, bool]], columns: str
+) -> DataFrame:
+    """``rows`` as an inline VALUES table, which Spark plans as a JVM
+    ``LocalRelation``: its broadcast scans a ``LocalTableScan`` and starts
+    no Python worker (``createDataFrame(list)`` plans a Python-backed RDD,
+    so every broadcast of it ran a Python task)."""
+    values = ", ".join(f"('{a}', '{b}', {str(c).lower()})" for a, b, c in rows)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({columns})")
+
+
 def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ROLE_DIM_ROWS, "role string, role_group string, is_human boolean"
-    )
+    return _values(spark, ROLE_DIM_ROWS, "role, role_group, is_human")
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOL_DIM_ROWS, "tool string, tool_family string, is_io boolean"
-    )
+    return _values(spark, TOOL_DIM_ROWS, "tool, tool_family, is_io")
 
 
 def enrich(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -37,19 +37,23 @@ Scale design (the parts the reference cannot express):
   semantics) runs only on the malformed minority inside that same pass —
   the reference's error fast-path asymmetry (alb.rs:199-203 allocates
   only on failure).
-- aggregates and per-partition lineage are computed from the written
-  output (parquet footer statistics make the counts metadata-cheap), so
-  the manifest reflects what is actually on disk, not what was planned.
+- aggregates and per-partition lineage come from ONE scan of the
+  written output: its fine (group, sink, conv_bucket, ts_day,
+  src_partition) counts roll up into the aggregates/ append, and an
+  observation on the same frame returns the per-partition rows to the
+  driver, so no second action reads data/ again. The manifest reflects
+  what is actually on disk, not what was planned.
 """
 
 from __future__ import annotations
 
+import collections
 import os
 import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -218,8 +222,9 @@ def _commit(
     pending: list[int],
     diag_positions: bool,
 ) -> None:
-    """Commit every pending group in one pass: a data write, an aggregate
-    write and a lineage collect, then one manifest per group."""
+    """Commit every pending group in one pass: a data write, then one scan
+    of the written rows that appends the aggregates and observes the
+    lineage, then one manifest per group."""
     # crc32 is stable across Spark versions (unlike hash/xxhash64 seeds in
     # principle) — resume manifests stay valid across upgrades.
     group = F.pmod(F.crc32(F.col("conv_id").cast("binary")), F.lit(n_groups))
@@ -273,28 +278,47 @@ def _commit(
             raise StrictModeError(f"Invalid log line: {line}") from None
         raise
 
-    # ---- metrics from what actually landed on disk (footer-cheap counts).
-    # Explicit schema: with no part files a schema-less read would raise
-    # UNABLE_TO_INFER_SCHEMA — with the schema it is just an empty frame.
-    written = (
+    # ---- metrics from what actually landed on disk, in ONE scan of five
+    # narrow columns: the fine (group, sink, conv_bucket, ts_day, src_partition)
+    # counts roll up into the aggregates/ append, and the same frame's
+    # observed rows carry the per-partition lineage back to the driver, so
+    # no second read of data/ runs. Explicit schema: with no part files a
+    # schema-less read would raise UNABLE_TO_INFER_SCHEMA — with the schema
+    # it is just an empty frame.
+    fine = (
         spark.read.schema(_WRITTEN_SCHEMA)
         .parquet(f"{output_dir}/data")
         .where(F.col("group").isin(pending))
-        .select("group", "sink", "conv_id", "ts_day", "src_partition")
+        .groupBy("group", "sink", conv_bucket(), "ts_day", "src_partition")
+        .agg(F.count("*").alias("n"))
     )
-    agg = written.groupBy("group", "sink", conv_bucket(), "ts_day").agg(
-        F.count("*").alias("n")
+    observed = Observation()
+    fine = fine.observe(
+        observed,
+        F.collect_list(F.struct("group", "src_partition", "sink", "n")).alias("rows"),
     )
-    agg.write.mode("append").partitionBy("group").parquet(f"{output_dir}/aggregates")
+    (
+        fine.groupBy("group", "sink", "conv_bucket", "ts_day")
+        # coalesce keeps n non-nullable, as the count it sums was
+        .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n"))
+        .write.mode("append")
+        .partitionBy("group")
+        .parquet(f"{output_dir}/aggregates")
+    )
 
-    lineage_rows = written.groupBy(
-        "group", F.col("src_partition").alias("partition_id"), "sink"
-    ).agg(F.count("*").alias("n")).collect()
+    # A scan that finds no rows is planned away together with its
+    # observation (adaptive execution propagates the empty relation), so
+    # there is nothing to get when no pending group wrote a row; a group
+    # directory exists only if the write put a row in it.
+    wrote = any(os.path.isdir(f"{output_dir}/data/group={g}") for g in pending)
+    per_partition: collections.Counter = collections.Counter()
+    for r in observed.get["rows"] if wrote else []:
+        per_partition[(r["group"], r["src_partition"], r["sink"])] += r["n"]
     counts = {g: dict.fromkeys(_SINKS, 0) for g in pending}
     lineage: dict[int, list[dict]] = {g: [] for g in pending}
-    for r in sorted(lineage_rows, key=lambda r: (r["partition_id"], r["sink"])):
-        counts[r["group"]][r["sink"]] += r["n"]
-        lineage[r["group"]].append({k: r[k] for k in ("partition_id", "sink", "n")})
+    for (g, part, sink), n in sorted(per_partition.items()):
+        counts[g][sink] += n
+        lineage[g].append({"partition_id": part, "sink": sink, "n": n})
 
     malformed = [g for g in pending if mode == "strict" and counts[g][SINK_MALFORMED]]
     for g in pending:

@@ -6,12 +6,13 @@ the frame is built, written to a private ``<path>.tmp.<pid>`` and
 renamed into place atomically, so concurrent first runs never observe a
 half-written directory and the loser of the rename race drops its copy.
 ``cached(spark, key, params, build)`` applies that step under the cache
-root and returns the parquet read-back. ``build`` is a zero-argument
+root and returns the parquet read-back, whose schema comes from a part
+file's footer, so a hit runs no Spark job. ``build`` is a zero-argument
 callable, so an EAGER builder (a driver-side fixpoint loop like
 dedup.dup_groups) runs nothing on a hit, and a lazy one is not even
-planned. A miss also deletes the key's entries under other params
-tokens: they were built by a previous version of the logic and no
-current caller can reach them.
+planned. The first call per key in a process also deletes the key's
+entries under other params tokens: they were built by a previous version
+of the logic and no current caller can reach them.
 
 This is the 100-TB shape for reused intermediates: a signature/sketch
 table is computed ONCE, written as a real table, and every downstream
@@ -27,12 +28,15 @@ serve a stale cache.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import shutil
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 # Bump when the on-disk layout/meaning of cached frames changes in a way
 # not captured by callers' params tuples.
@@ -93,20 +97,37 @@ def write_once(path: str, build: Callable[[], DataFrame]) -> str:
     return path
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Cache directories whose key has been swept of other-token entries by
+# this process.
+_swept: set[str] = set()
+
+
+def _read_back(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from one part
+    file's footer, where Spark's writer stores it: an inferred schema costs
+    a Spark job per read. Every cached write leaves at least one part file,
+    an empty frame's included."""
+    part = min(f for f in os.listdir(path) if f.startswith("part-"))
+    meta = pq.read_schema(os.path.join(path, part)).metadata
+    schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
+
+
 def cached(spark, key: str, params: tuple, build: Callable[[], DataFrame]) -> DataFrame:
     """The frame ``build()`` returns, written once under ``key`` and read
     back from parquet. ``params`` is the tuple of algorithm constants /
     kernel source the frame's contents depend on — it is hashed into the
     directory name, so a logic change always misses the old cache instead
-    of silently reusing it, and that miss deletes the old entry."""
+    of silently reusing it. The first call per key in a process deletes
+    the key's entries under other tokens, hit or miss."""
     path = cache_path(key, params)
-    stale = re.compile(re.escape(key) + r"-v[0-9a-f]{10}")
-
-    def build_fresh() -> DataFrame:
+    if path not in _swept:
+        stale = re.compile(re.escape(key) + r"-v[0-9a-f]{10}")
         root = os.path.dirname(path)
-        for name in os.listdir(root):
+        for name in os.listdir(root) if os.path.isdir(root) else []:
             if stale.fullmatch(name) and name != os.path.basename(path):
                 shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-        return build()
-
-    return spark.read.parquet(write_once(path, build_fresh))
+        _swept.add(path)
+    return _read_back(spark, write_once(path, build))

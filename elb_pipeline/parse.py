@@ -107,6 +107,10 @@ def _as_string_array(text: pa.Array) -> pa.Array:
         text = text.combine_chunks()
     if text.type != pa.string():
         text = text.cast(pa.string())
+    if text.offset:
+        # a zero-copy slice: some kernels (pyarrow 16's if_else on strings)
+        # emit invalid offsets for it, so copy it to its own buffers once
+        text = pa.concat_arrays([text])
     return text
 
 

@@ -182,7 +182,9 @@ def test_strict_mode_commits_clean_groups_and_names_lowest_malformed(
 
 def test_job_count_independent_of_n_groups(spark, transcripts, tmp_path):
     """All pending groups commit in one pass, so a run_job call submits the
-    same Spark jobs whether it has one bucket group or four."""
+    same Spark jobs whether it has one bucket group or four — six, since
+    the aggregates and the lineage come from one scan of the written
+    rows (reading them back once for each ran seven)."""
     sc = spark.sparkContext
     counts = {}
     for n_groups in (1, 4):
@@ -194,7 +196,7 @@ def test_job_count_independent_of_n_groups(spark, transcripts, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(f"run_job-{n_groups}")
         counts[n_groups] = len(jobs)
-    assert counts[1] == counts[4] > 0
+    assert counts[1] == counts[4] == 6, counts
 
 
 def test_ndjson_export_matches_parquet_json(spark, transcripts, tmp_path):
@@ -233,6 +235,17 @@ def test_job_empty_groups_survive(spark, transcripts, tmp_path):
     res = run_job(spark, one_conv, str(tmp_path / "onecnv"), mode="skip", n_groups=4)
     assert sorted(res.groups_run) == [0, 1, 2, 3]
     assert sum(res.sink_counts.values()) == one_conv.count()
+
+
+def test_job_empty_input_commits_empty_manifests(spark, transcripts, tmp_path):
+    """An input with no rows writes no part files, so the post-write scan
+    is empty and observes nothing; every group still commits a manifest
+    with zero counts and no lineage."""
+    out = str(tmp_path / "empty")
+    res = run_job(spark, transcripts.where(F.lit(False)), out, n_groups=2)
+    assert res.groups_run == [0, 1]
+    assert res.sink_counts == {"alb": 0, "classic_lb": 0, "malformed": 0}
+    assert all(checkpoint.read_manifest(out, g)["lineage"] == [] for g in (0, 1))
 
 
 def test_strict_mode_raises(spark, transcripts, tmp_path):

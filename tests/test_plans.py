@@ -78,6 +78,14 @@ def test_enrich_joins_are_broadcast(spark):
     assert "SortMergeJoin" not in p
 
 
+def test_enrich_dims_are_local_tables(spark):
+    """Both dims broadcast a JVM LocalTableScan: no scan of a Python-backed
+    RDD, so building the broadcasts starts no Python worker."""
+    p = plan_of(entry_mod.q_enrich_rollup(spark, SF_DIR), "extended")
+    assert p.count("LocalTableScan") >= 2
+    assert "ExistingRDD" not in p and "applySchemaToPythonRDD" not in p
+
+
 def test_orders_customer_join_is_broadcast(spark):
     p = plan_of(entry_mod.q_orders_customer_join(spark, SF_DIR))
     assert "BroadcastHashJoin" in p
