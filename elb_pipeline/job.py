@@ -278,13 +278,10 @@ def _commit(
             raise StrictModeError(f"Invalid log line: {line}") from None
         raise
 
-    # ---- metrics from what actually landed on disk, in ONE scan of five
-    # narrow columns: the fine (group, sink, conv_bucket, ts_day, src_partition)
-    # counts roll up into the aggregates/ append, and the same frame's
-    # observed rows carry the per-partition lineage back to the driver, so
-    # no second read of data/ runs. Explicit schema: with no part files a
-    # schema-less read would raise UNABLE_TO_INFER_SCHEMA — with the schema
-    # it is just an empty frame.
+    # ---- metrics from what actually landed on disk, in ONE scan: the fine
+    # counts roll up into aggregates/ and their observed rows are the
+    # lineage. Explicit schema: with no part files a schema-less read would
+    # raise UNABLE_TO_INFER_SCHEMA — with the schema it is just an empty frame.
     fine = (
         spark.read.schema(_WRITTEN_SCHEMA)
         .parquet(f"{output_dir}/data")

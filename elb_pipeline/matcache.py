@@ -10,9 +10,9 @@ root and returns the parquet read-back, whose schema comes from a part
 file's footer, so a hit runs no Spark job. ``build`` is a zero-argument
 callable, so an EAGER builder (a driver-side fixpoint loop like
 dedup.dup_groups) runs nothing on a hit, and a lazy one is not even
-planned. The first call per key in a process also deletes the key's
-entries under other params tokens: they were built by a previous version
-of the logic and no current caller can reach them.
+planned. Every call also deletes the key's entries under other params
+tokens, on a hit as well as a miss: they were built by a previous
+version of the logic and no current caller can reach them.
 
 This is the 100-TB shape for reused intermediates: a signature/sketch
 table is computed ONCE, written as a real table, and every downstream
@@ -99,10 +99,6 @@ def write_once(path: str, build: Callable[[], DataFrame]) -> str:
 
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-# Cache directories whose key has been swept of other-token entries by
-# this process.
-_swept: set[str] = set()
-
 
 def _read_back(spark, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the schema taken from one part
@@ -120,14 +116,12 @@ def cached(spark, key: str, params: tuple, build: Callable[[], DataFrame]) -> Da
     back from parquet. ``params`` is the tuple of algorithm constants /
     kernel source the frame's contents depend on — it is hashed into the
     directory name, so a logic change always misses the old cache instead
-    of silently reusing it. The first call per key in a process deletes
-    the key's entries under other tokens, hit or miss."""
+    of silently reusing it. Every call, hit or miss, deletes the key's
+    entries under other tokens (one directory listing)."""
     path = cache_path(key, params)
-    if path not in _swept:
-        stale = re.compile(re.escape(key) + r"-v[0-9a-f]{10}")
-        root = os.path.dirname(path)
-        for name in os.listdir(root) if os.path.isdir(root) else []:
-            if stale.fullmatch(name) and name != os.path.basename(path):
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-        _swept.add(path)
+    root, current = os.path.split(path)
+    stale = re.compile(re.escape(key) + r"-v[0-9a-f]{10}")
+    for name in os.listdir(root) if os.path.isdir(root) else ():
+        if stale.fullmatch(name) and name != current:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
     return _read_back(spark, write_once(path, build))

@@ -69,8 +69,8 @@ def test_matcache_params_token_busts_stale_cache(spark, tmp_path, monkeypatch):
     """Changing the algorithm params must MISS the old cache entry instead
     of serving parquet computed by the previous version of the logic
     (ADVICE r3): same key + different params → different directory, and
-    the first call per key deletes the superseded directories of that key
-    only, on a miss or a hit."""
+    every call deletes the superseded directories of that key only, on a
+    miss or a hit."""
     from elb_pipeline.matcache import cache_path, cached, write_once
 
     monkeypatch.setenv("ELB_MAT_CACHE", str(tmp_path / "cache"))
@@ -94,9 +94,9 @@ def test_matcache_params_token_busts_stale_cache(spark, tmp_path, monkeypatch):
     assert not os.path.exists(old)
     assert all(os.path.isdir(d) for d in others)
 
-    # the first call per key in a process sweeps on a HIT as well: an
-    # entry an earlier process left under another token goes, the current
-    # one is served without a build, and other dirs stay
+    # a HIT sweeps as well: an entry an earlier process left under
+    # another token goes, the current one is served without a build, and
+    # other dirs stay
     current = write_once(cache_path("h", ("threshold", 0.5)), v2)
     older = cache_path("h", ("threshold", 0.3))
     shutil.copytree(current, older)

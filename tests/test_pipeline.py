@@ -182,9 +182,9 @@ def test_strict_mode_commits_clean_groups_and_names_lowest_malformed(
 
 def test_job_count_independent_of_n_groups(spark, transcripts, tmp_path):
     """All pending groups commit in one pass, so a run_job call submits the
-    same Spark jobs whether it has one bucket group or four — six, since
-    the aggregates and the lineage come from one scan of the written
-    rows (reading them back once for each ran seven)."""
+    same Spark jobs whether it has one bucket group or four — six, with
+    the aggregates and the lineage taken from one scan of the written
+    rows."""
     sc = spark.sparkContext
     counts = {}
     for n_groups in (1, 4):
