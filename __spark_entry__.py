@@ -1421,7 +1421,6 @@ def _training_corpus_ctes() -> str:
     """CTE chain (sans WITH RECURSIVE prefix) of the five-screen curation
     oracle — shared by `training_corpus` and the packed `corpus_sequences`
     so the two DuckDB twins cannot drift apart."""
-    sh = D._SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
     return (
         f"{D.doc_pool_cte()}, {D.signatures_cte()}, "
         f"{D.lsh_candidates_cte()}, {D.verified_pairs_cte()}, "
@@ -1429,9 +1428,10 @@ def _training_corpus_ctes() -> str:
         "exact_keep AS (SELECT min(doc_id) AS doc_id FROM doc_pool "
         "GROUP BY md5(text), length(text)), "
         "near_drop AS (SELECT doc_id FROM groups WHERE doc_id != group_id), "
-        f"pool_sh AS (SELECT DISTINCT doc_id, unnest({sh}) AS s "
-        "FROM doc_pool), "
-        f"bench AS (SELECT DISTINCT s FROM (SELECT unnest({sh}) AS s "
+        "pool_sh AS (SELECT DISTINCT doc_id, "
+        f"unnest({D._TEXT_SHINGLES_SQL}) AS s FROM doc_pool), "
+        "bench AS (SELECT DISTINCT s FROM "
+        f"(SELECT unnest({D._TEXT_SHINGLES_SQL}) AS s "
         "FROM documents WHERE doc_id < 10)), "
         "contaminated AS (SELECT DISTINCT p.doc_id FROM pool_sh p "
         "JOIN bench b ON p.s = b.s), "
@@ -1725,7 +1725,7 @@ def oracle_sql() -> dict[str, str]:
             "count(*) AS n_distinct_words, max(c) AS top_word_n "
             "FROM wc GROUP BY doc_id), "
             "g AS (SELECT doc_id, "
-            + D._SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
+            + D._TEXT_SHINGLES_SQL
             + " AS gs FROM documents), "
             "gs AS (SELECT doc_id, length(gs) AS n_3grams, "
             "length(list_distinct(gs)) AS n_distinct_3grams FROM g) "
@@ -1816,7 +1816,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "contamination_check": (
             "WITH shingled AS (SELECT DISTINCT doc_id, unnest("
-            + D._SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
+            + D._TEXT_SHINGLES_SQL
             + ") AS s FROM documents), "
             "bench AS (SELECT DISTINCT s FROM shingled WHERE doc_id < 10) "
             "SELECT a.doc_id, count(*) AS n_overlap FROM shingled a "

@@ -40,7 +40,7 @@ import regex as _regex
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from elb_pipeline.dialects import ALB, CLASSIC, Dialect
+from elb_pipeline.dialects import ALB, CLASSIC, Dialect, _rewrite_capture_groups
 from elb_pipeline.parse import _arrow_map, _per_distinct
 
 DIAG_SCHEMA = [
@@ -98,43 +98,14 @@ def fields_ok_arrow(text: pa.Array, d: Dialect) -> np.ndarray:
     return lo
 
 
-def _greedy_prefix_end(line: bytes, d: Dialect, k: int) -> int:
-    """Byte offset where the greedy match of prefix k ends (alive lower
-    bound for the dead-byte bisection). k = 0 → 0."""
-    if k <= 0:
-        return 0
-    m = _regex.match(("^(?:" + "".join(d.parts[:k]) + ")").encode(), line)
-    return m.end() if m else 0
-
-
-def _noncapturing(pattern: str) -> str:
-    """Rewrite unnamed capture groups to ``(?:...)`` (RE2's extract_regex
-    rejects unnamed groups; same scan as dialects.named_pattern)."""
-    out: list[str] = []
-    j = 0
-    while j < len(pattern):
-        c = pattern[j]
-        if c == "\\":
-            out.append(pattern[j : j + 2])
-            j += 2
-            continue
-        if c == "(" and pattern[j + 1 : j + 2] != "?":
-            out.append("(?:")
-            j += 1
-            continue
-        out.append(c)
-        j += 1
-    return "".join(out)
-
-
 def greedy_prefix_ends_arrow(
     text: pa.Array, d: Dialect, ks: np.ndarray, rows: np.ndarray
 ) -> np.ndarray:
-    """Vectorized ``_greedy_prefix_end``: for every row index in ``rows``
-    (whose fields_ok is ``ks[row]``), the BYTE offset where the greedy
-    match of its k-field prefix ends. One RE2 extract pass per distinct k
-    over just that k's subset; the matched prefix's byte length is the end
-    offset (``binary_length`` counts bytes on utf8 arrays). Any consumed
+    """For every row index in ``rows`` (whose fields_ok is ``ks[row]``),
+    the BYTE offset where the greedy match of its k-field prefix ends (0
+    when k = 0). One RE2 extract pass per distinct k over just that k's
+    subset; the matched prefix's byte length is the end offset
+    (``binary_length`` counts bytes on utf8 arrays). Any consumed
     prefix is a proven-alive lower bound for the dead-byte bisection, so
     RE2-vs-backtracker greedy-end differences cannot change the result."""
     n = len(text)
@@ -144,7 +115,9 @@ def greedy_prefix_ends_arrow(
         sel = np.zeros(n, dtype=bool)
         sel[rows_pos[ks[rows_pos] == k]] = True
         sub = text.filter(pa.array(sel))
-        pat = "^(?P<p>" + _noncapturing("(?:" + "".join(d.parts[: int(k)]) + ")") + ")"
+        # RE2's extract_regex rejects unnamed groups: only ``p`` captures
+        prefix = _rewrite_capture_groups("".join(d.parts[: int(k)]), lambda: "(?:")
+        pat = "^(?P<p>(?:" + prefix + "))"
         ext = pc.extract_regex(sub, pattern=pat)
         lens = pc.fill_null(
             pc.binary_length(pc.struct_field(ext, "p")), 0

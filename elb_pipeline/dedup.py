@@ -187,6 +187,8 @@ _SHINGLES_SQL = (
     "[ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] "
     "FOR i IN range(1, greatest(length(ws) - 2, 0) + 1)]"
 )
+# the same list straight off a ``text`` column
+_TEXT_SHINGLES_SQL = _SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
 
 
 def _flatten_counts(lists) -> tuple[list, "object"]:
@@ -344,36 +346,86 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     )
 
 
+def _band_match_sql(b: int) -> str:
+    """SQL twin of ``_band_key``: ``a`` and ``b`` agree on all of band b."""
+    rows = range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)
+    keys = ["md5(" + " || ".join(f"{s}.sig{i}" for i in rows) + ")" for s in "ab"]
+    return " = ".join(keys)
+
+
 def lsh_candidates_cte() -> str:
-    parts = []
-    for b in range(N_BANDS):
-        cols_a = " || ".join(
-            f"a.sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
-        cols_b = " || ".join(
-            f"b.sig{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
-        parts.append(
-            f"SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM sigs a "
-            f"JOIN sigs b ON md5({cols_a}) = md5({cols_b}) "
-            "AND a.doc_id < b.doc_id"
-        )
+    parts = [
+        f"SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM sigs a "
+        f"JOIN sigs b ON {_band_match_sql(b)} AND a.doc_id < b.doc_id"
+        for b in range(N_BANDS)
+    ]
     return "cands AS (" + " UNION ".join(parts) + ")"
 
 
-def verified_pairs(sigs: DataFrame) -> DataFrame:
-    """LSH candidates that pass the exact shingle-set Jaccard check."""
-    cands = lsh_candidate_pairs(sigs)
-    a = sigs.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    b = sigs.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    sa = F.array_distinct(F.col("a_sh"))
-    sb = F.array_distinct(F.col("b_sh"))
-    jac = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
+def _jaccard_sql(col: str, is_set: bool) -> str:
+    """Exact Jaccard of the ``a.<col>`` and ``b.<col>`` shingle lists
+    (SQL twin of ``_jaccard_verify``); lists that may repeat a shingle
+    (``is_set`` False) are made distinct first."""
+    a, b = f"a.{col}", f"b.{col}"
+    sa, sb = (a, b) if is_set else (f"list_distinct({a})", f"list_distinct({b})")
     return (
-        cands.join(a, "a_id").join(b, "b_id")
+        f"CAST(length(list_intersect({sa}, {sb})) AS DOUBLE) / "
+        f"length(list_distinct({a} || {b}))"
+    )
+
+
+def _verify_sql(table: str, col: str, is_set: bool) -> str:
+    """The verify step over ``cands``: each candidate joined to both sides'
+    shingle lists in ``table`` and kept when its rounded Jaccard passes."""
+    jac = _jaccard_sql(col, is_set)
+    return (
+        f"SELECT c.a_id, c.b_id, round({jac}, 4) AS jaccard FROM cands c "
+        f"JOIN {table} a ON a.doc_id = c.a_id JOIN {table} b ON b.doc_id = c.b_id "
+        f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD}"
+    )
+
+
+def _shingle_sets(sigs: DataFrame) -> DataFrame:
+    """``(doc_id, hs)``: each doc's DISTINCT shingles as 8-byte ``xxhash64``
+    values, projected from a signature frame's ``sh`` column."""
+    return sigs.select(
+        "doc_id",
+        F.transform(F.array_distinct("sh"), lambda x: F.xxhash64(x)).alias("hs"),
+    )
+
+
+def _jaccard_verify(cands: DataFrame, sets_: DataFrame) -> DataFrame:
+    """The exact-Jaccard verify of every Spark pair path (LSH
+    ``verified_pairs``, ``rare_shingle_pairs``, ``prefix_jaccard_pairs``):
+    ``cands(a_id, b_id)`` checked against the docs' shingle SETS, shipped
+    as 8-byte ``xxhash64`` arrays instead of the raw shingle strings. Set
+    sizes (hence Jaccard) are identical to the string form absent an
+    intra-pair 64-bit collision (~|union|^2 / 2^65 ≈ 1e-16 per pair — the
+    DuckDB twins verify on plain strings, so any collision would surface
+    as an oracle mismatch). The byte win is the scale story:
+    the candidate join's intermediates carry ~8 B/shingle instead of the
+    ~30 B/shingle strings — at 233k docs the string form's verify stage
+    spilled >65 GB and died on ENOSPC; the hashed form fits (recorded in
+    BENCH/dedup_scaling_r5.json ``prefix``). ``sets_`` is a
+    ``_shingle_sets`` frame."""
+    a = sets_.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("a_sh"))
+    b = sets_.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("b_sh"))
+    jac = F.size(F.array_intersect("a_sh", "b_sh")) / F.size(
+        F.array_union("a_sh", "b_sh")
+    )
+    return (
+        cands.join(a, "a_id")
+        .join(b, "b_id")
         .select("a_id", "b_id", F.round(jac, 4).alias("jaccard"))
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
+
+
+def verified_pairs(sigs: DataFrame) -> DataFrame:
+    """LSH candidates that pass the exact shingle-set Jaccard check —
+    ``_jaccard_verify`` over the signature table's hashed shingle sets,
+    the one verify every Spark pair path shares."""
+    return _jaccard_verify(lsh_candidate_pairs(sigs), _shingle_sets(sigs))
 
 
 def materialized_verified_pairs(sigs: DataFrame, cache_key: str) -> DataFrame:
@@ -393,16 +445,7 @@ def materialized_verified_pairs(sigs: DataFrame, cache_key: str) -> DataFrame:
 
 
 def verified_pairs_cte() -> str:
-    jac = (
-        "CAST(length(list_intersect(list_distinct(a.sh), list_distinct(b.sh)))"
-        " AS DOUBLE) / length(list_distinct(a.sh || b.sh))"
-    )
-    return (
-        "pairs AS (SELECT c.a_id, c.b_id, round(" + jac + ", 4) AS jaccard "
-        "FROM cands c JOIN sigs a ON a.doc_id = c.a_id "
-        "JOIN sigs b ON b.doc_id = c.b_id "
-        f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD})"
-    )
+    return f"pairs AS ({_verify_sql('sigs', 'sh', is_set=False)})"
 
 
 # ---------------------------------------------------------------------------
@@ -479,24 +522,13 @@ def incremental_dedup(pool: DataFrame, sigs: DataFrame, split_id: int) -> DataFr
 
 def incremental_dedup_sql(split_id: int) -> str:
     """Full DuckDB twin (standalone statement; same greedy semantics)."""
-    jac = (
-        "CAST(length(list_intersect(list_distinct(a.sh), list_distinct(b.sh)))"
-        " AS DOUBLE) / length(list_distinct(a.sh || b.sh))"
-    )
-    band_joins = []
-    for bnd in range(N_BANDS):
-        cols_a = " || ".join(
-            f"a.sig{bnd * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
-        cols_b = " || ".join(
-            f"b.sig{bnd * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-        )
-        band_joins.append(
-            f"SELECT a.doc_id AS other_id, b.doc_id AS b_id FROM sigs a "
-            f"JOIN sigs b ON md5({cols_a}) = md5({cols_b}) "
-            f"WHERE b.doc_id >= {split_id} "
-            f"AND (a.doc_id < {split_id} OR a.doc_id < b.doc_id)"
-        )
+    band_joins = [
+        f"SELECT a.doc_id AS other_id, b.doc_id AS b_id FROM sigs a "
+        f"JOIN sigs b ON {_band_match_sql(bnd)} "
+        f"WHERE b.doc_id >= {split_id} "
+        f"AND (a.doc_id < {split_id} OR a.doc_id < b.doc_id)"
+        for bnd in range(N_BANDS)
+    ]
     return (
         f"WITH {doc_pool_cte()}, {signatures_cte()}, "
         "bd AS (SELECT doc_id, md5(text) AS h, length(text) AS l "
@@ -511,7 +543,8 @@ def incremental_dedup_sql(split_id: int) -> str:
         "FROM (SELECT DISTINCT other_id, b_id FROM icands) c "
         "JOIN sigs a ON a.doc_id = c.other_id "
         "JOIN sigs b ON b.doc_id = c.b_id "
-        f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD} GROUP BY c.b_id) "
+        f"WHERE round({_jaccard_sql('sh', is_set=False)}, 4) >= {JACCARD_THRESHOLD} "
+        "GROUP BY c.b_id) "
         "SELECT batch.doc_id, "
         "CASE WHEN EXISTS (SELECT 1 FROM corpus_keys ck "
         "WHERE ck.h = batch.h AND ck.l = batch.l) THEN 'exact_corpus' "
@@ -548,16 +581,14 @@ RARE_DF_MAX = 4  # doc-frequency cap on blocking shingles
 
 def shingle_tables(pool: DataFrame, cache_key: str) -> tuple[DataFrame, DataFrame]:
     """``(doc_id, s)`` rows of each doc's DISTINCT word-3-gram shingles and
-    ``(doc_id, hs)`` the same set as 8-byte ``xxhash64`` values (the
-    verify-side operand of _jaccard_verify). Both are narrow projections
-    of the materialized signature table's ``sh`` column, so the shingles
-    are computed once per input fingerprint and no extra table is
-    written."""
-    sh = materialized_signatures(pool, cache_key=cache_key)
-    distinct = F.array_distinct("sh")
+    the ``(doc_id, hs)`` hashed sets of ``_shingle_sets``. Both are narrow
+    projections of the materialized signature table's ``sh`` column, so
+    the shingles are computed once per input fingerprint and no extra
+    table is written."""
+    sigs = materialized_signatures(pool, cache_key=cache_key)
     return (
-        sh.select("doc_id", F.explode(distinct).alias("s")),
-        sh.select("doc_id", F.transform(distinct, lambda x: F.xxhash64(x)).alias("hs")),
+        sigs.select("doc_id", F.explode(F.array_distinct("sh")).alias("s")),
+        _shingle_sets(sigs),
     )
 
 
@@ -596,51 +627,26 @@ def rare_shingle_pairs(pool: DataFrame, cache_key: str) -> DataFrame:
     return _jaccard_verify(cands, sets_)
 
 
-def _jaccard_verify(cands: DataFrame, sets_: DataFrame) -> DataFrame:
-    """Exact-Jaccard verify of ``cands(a_id, b_id)`` against the docs'
-    shingle SETS, shipped as 8-byte ``xxhash64`` arrays instead of the raw
-    shingle strings. Set sizes (hence Jaccard) are identical to the string
-    form absent an intra-pair 64-bit collision (~|union|^2 / 2^65 ≈ 1e-16
-    per pair — the DuckDB twins verify on plain strings, so any collision
-    would surface as an oracle mismatch). The byte win is the scale story:
-    the candidate join's intermediates carry ~8 B/shingle instead of the
-    ~30 B/shingle strings — at 233k docs the string form's verify stage
-    spilled >65 GB and died on ENOSPC; the hashed form fits (recorded in
-    BENCH/dedup_scaling_r5.json ``prefix``). ``sets_`` is the
-    ``(doc_id, hs)`` table of ``shingle_tables``."""
-    a = sets_.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("a_sh"))
-    b = sets_.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("b_sh"))
-    jac = F.size(F.array_intersect("a_sh", "b_sh")) / F.size(
-        F.array_union("a_sh", "b_sh")
-    )
-    return (
-        cands.join(a, "a_id")
-        .join(b, "b_id")
-        .select("a_id", "b_id", F.round(jac, 4).alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+# shared by the rare-shingle and prefix-filter twins: doc_pool's shingle
+# rows, and the verify of ``cands`` against each doc's shingle set
+_SHINGLE_ROWS_CTE = (
+    f"sh AS (SELECT DISTINCT doc_id, unnest({_TEXT_SHINGLES_SQL}) AS s FROM doc_pool), "
+)
+_SETS_VERIFY_TAIL_SQL = (
+    f"sets AS (SELECT doc_id, list_distinct({_TEXT_SHINGLES_SQL}) AS shs "
+    "FROM doc_pool) " + _verify_sql("sets", "shs", is_set=True)
+)
 
 
 def rare_shingle_pairs_sql() -> str:
     """Full DuckDB twin (standalone statement over doc_pool)."""
-    sh_expr = _SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
-    jac = (
-        "CAST(length(list_intersect(a.shs, b.shs)) AS DOUBLE) / "
-        "length(list_distinct(a.shs || b.shs))"
-    )
     return (
-        f"WITH {doc_pool_cte()}, "
-        f"sh AS (SELECT DISTINCT doc_id, unnest({sh_expr}) AS s FROM doc_pool), "
+        f"WITH {doc_pool_cte()}, {_SHINGLE_ROWS_CTE}"
         "rare AS (SELECT s FROM sh GROUP BY s "
         f"HAVING count(*) BETWEEN 2 AND {RARE_DF_MAX}), "
         "cands AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id "
         "FROM sh a JOIN rare USING (s) JOIN sh b USING (s) "
-        "WHERE a.doc_id < b.doc_id), "
-        f"sets AS (SELECT doc_id, list_distinct({sh_expr}) AS shs "
-        "FROM doc_pool) "
-        f"SELECT c.a_id, c.b_id, round({jac}, 4) AS jaccard FROM cands c "
-        "JOIN sets a ON a.doc_id = c.a_id JOIN sets b ON b.doc_id = c.b_id "
-        f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD}"
+        "WHERE a.doc_id < b.doc_id), " + _SETS_VERIFY_TAIL_SQL
     )
 
 
@@ -758,14 +764,8 @@ def prefix_jaccard_pairs(pool: DataFrame, cache_key: str) -> DataFrame:
 def prefix_jaccard_pairs_sql() -> str:
     """Full DuckDB twin (standalone statement over doc_pool)."""
     t = JACCARD_THRESHOLD
-    sh_expr = _SHINGLES_SQL.replace("ws", "string_split(text, ' ')")
-    jac = (
-        "CAST(length(list_intersect(a.shs, b.shs)) AS DOUBLE) / "
-        "length(list_distinct(a.shs || b.shs))"
-    )
     return (
-        f"WITH {doc_pool_cte()}, "
-        f"sh AS (SELECT DISTINCT doc_id, unnest({sh_expr}) AS s FROM doc_pool), "
+        f"WITH {doc_pool_cte()}, {_SHINGLE_ROWS_CTE}"
         "dfs AS (SELECT s, count(*) AS df FROM sh GROUP BY s), "
         "ranked AS (SELECT doc_id, sh.s, "
         "row_number() OVER (PARTITION BY doc_id ORDER BY df, sh.s) AS pos, "
@@ -776,12 +776,7 @@ def prefix_jaccard_pairs_sql() -> str:
         "cands AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id "
         "FROM pre a JOIN pre b USING (s) "
         "WHERE a.doc_id < b.doc_id "
-        f"AND {t} * a.n <= b.n AND {t} * b.n <= a.n), "
-        f"sets AS (SELECT doc_id, list_distinct({sh_expr}) AS shs "
-        "FROM doc_pool) "
-        f"SELECT c.a_id, c.b_id, round({jac}, 4) AS jaccard FROM cands c "
-        "JOIN sets a ON a.doc_id = c.a_id JOIN sets b ON b.doc_id = c.b_id "
-        f"WHERE round({jac}, 4) >= {JACCARD_THRESHOLD}"
+        f"AND {t} * a.n <= b.n AND {t} * b.n <= a.n), " + _SETS_VERIFY_TAIL_SQL
     )
 
 
@@ -805,10 +800,12 @@ def _simhash32_batch(text: pd.Series) -> pd.Series:
     preserved — each occurrence votes), and the majority threshold + bit
     packing are pure numpy. Values identical to the per-row form (bit k =
     majority of md5-hex-digit-k high bits across shingles) and to the
-    DuckDB oracle recomputation."""
+    DuckDB oracle recomputation. It splits the text by the ``_shingles()``
+    rule itself: taking ``_shingles()`` lists over Arrow measured ~13%
+    slower on ``q_simhash_near_dup`` (sf0.01, 4 vCPUs, 12 rounds)."""
     import numpy as np
 
-    from elb_pipeline.md5vec import dict_encode_bytes, md5_digests_cat
+    from elb_pipeline.md5vec import dict_encode_bytes, md5_seeded_digests_cat
 
     n_rows = len(text)
     lists: list = [None] * n_rows
@@ -824,7 +821,7 @@ def _simhash32_batch(text: pd.Series) -> pd.Series:
     if not flat:
         return pd.Series(out)
     codes, cat, u_starts, u_lens = dict_encode_bytes(flat)
-    d = md5_digests_cat(cat, u_starts, u_lens)  # (n_u, 16) uint8
+    d = md5_seeded_digests_cat(cat, u_starts, u_lens, [b""])[0]  # (n_u, 16) uint8
     bits_u = np.empty((len(u_lens), 32), dtype=np.uint8)
     bits_u[:, 0::2] = (d >> 7) & 1  # high nibble's high bit → odd digits
     bits_u[:, 1::2] = (d >> 3) & 1  # low nibble's high bit → even digits

@@ -224,6 +224,23 @@ class Dialect:
         ]
 
 
+def _rewrite_capture_groups(pattern: str, opener) -> str:
+    """``pattern`` with each unnamed capture group's ``(`` replaced by
+    ``opener()``, left to right. Escaped characters (``\\(`` included)
+    and ``(?...`` groups are copied verbatim."""
+    out: list[str] = []
+    j = 0
+    while j < len(pattern):
+        c = pattern[j]
+        if c == "\\":
+            out.append(pattern[j : j + 2])
+            j += 2
+            continue
+        out.append(opener() if c == "(" and pattern[j + 1 : j + 2] != "?" else c)
+        j += 1
+    return "".join(out)
+
+
 def named_pattern(pattern: str, fields: list[str] | tuple[str, ...]) -> str:
     """Rewrite unnamed capture groups to named groups ``(?P<field>...)``.
 
@@ -233,24 +250,11 @@ def named_pattern(pattern: str, fields: list[str] | tuple[str, ...]) -> str:
     ``fields`` order.
     """
     it = iter(fields)
-    out: list[str] = []
-    j = 0
-    while j < len(pattern):
-        c = pattern[j]
-        if c == "\\":  # escaped char (incl. \( ) — copy verbatim
-            out.append(pattern[j : j + 2])
-            j += 2
-            continue
-        if c == "(" and pattern[j + 1 : j + 2] != "?":
-            out.append(f"(?P<{next(it)}>")
-            j += 1
-            continue
-        out.append(c)
-        j += 1
+    out = _rewrite_capture_groups(pattern, lambda: f"(?P<{next(it)}>")
     remaining = list(it)
     if remaining:
         raise ValueError(f"pattern has fewer groups than fields: {remaining}")
-    return "".join(out)
+    return out
 
 
 ALB_NAMED_PATTERN = None  # filled below, after field lists exist

@@ -9,6 +9,10 @@ per item, and at real corpus shapes unique shingles dominate batches
 cost is O(block-length groups), not O(messages): all same-block-count
 messages run the 64 MD5 rounds together as (n,)-wide uint32 numpy ops.
 
+One kernel, ``md5_seeded_digests_cat``, serves both sketches: minhash
+hashes every unique shingle under its 8 seeds, simhash hashes it once
+under the empty seed ``b""``.
+
 The digest bytes are EXACTLY standard MD5 (round-trip parity-tested
 against hashlib over random lengths 0..200 in tests/test_md5vec.py), so
 the DuckDB oracle twins — which recompute ``md5(...)`` in SQL — are
@@ -156,43 +160,6 @@ def _chunk_src(cat, starts, lens, sub, whole: bool) -> np.ndarray:
     )
 
 
-def md5_digests_cat(
-    cat: np.ndarray, starts: np.ndarray, lens: np.ndarray
-) -> np.ndarray:
-    """(n, 16) uint8 MD5 digests of the n messages whose bytes live at
-    ``cat[starts[i] : starts[i]+lens[i]]`` — the zero-copy face used with
-    Arrow string-array buffers (offsets/data straight out of a
-    ``dictionary_encode`` result; no per-unique ``str.encode``).
-
-    Messages are grouped by padded block count (shingles are almost
-    always one 64-byte block) and each group runs vectorized in
-    cache-sized chunks."""
-    n = len(lens)
-    out = np.empty((n, 16), dtype=np.uint8)
-    if n == 0:
-        return out
-    nblocks = (lens + 8) // 64 + 1
-    groups = np.unique(nblocks)
-    for nb in groups:
-        idx = np.flatnonzero(nblocks == nb)
-        stride = int(nb) * 64
-        whole = len(groups) == 1
-        for c0 in range(0, len(idx), _CHUNK):
-            sub = idx[c0 : c0 + _CHUNK]
-            g = len(sub)
-            glens = lens[sub]
-            buf = np.zeros((g, stride), dtype=np.uint8)
-            if glens.sum():
-                _fill(buf, _chunk_src(cat, starts, lens, sub, whole), glens)
-            buf[np.arange(g), glens] = 0x80
-            # bit length, little-endian u64, in the final 8 bytes
-            buf[:, stride - 8 : stride].view("<u8")[:, 0] = (
-                glens * 8
-            ).astype(np.uint64)
-            out[sub] = _digest_blocks(_as_words(buf, g, int(nb)))
-    return out
-
-
 def md5_seeded_digests_cat(
     cat: np.ndarray,
     starts: np.ndarray,
@@ -200,15 +167,19 @@ def md5_seeded_digests_cat(
     seeds: list[bytes],
 ) -> np.ndarray:
     """(n_seeds, n, 16) uint8 digests of ``msg + seed`` for every message
-    × seed — hashlib-identical to ``md5(m + seed)`` — over the same
-    zero-copy (cat, starts, lens) message layout as
-    :func:`md5_digests_cat`.
+    × seed — hashlib-identical to ``md5(m + seed)`` — of the n messages
+    whose bytes live at ``cat[starts[i] : starts[i]+lens[i]]``: the
+    zero-copy face used with Arrow string-array buffers (offsets/data
+    straight out of a ``dictionary_encode`` result; no per-unique
+    ``str.encode``). Plain ``md5(m)`` is the single empty seed ``[b""]``.
 
-    All seeds must share one length: the padded-message scatter (the
-    non-round cost) is built ONCE per chunk and only the seed bytes, the
-    0x80 terminator and the length field change between seeds — the
-    64-round compute is the only per-seed work. This is the minhash
-    shape: 8 seeds per unique shingle."""
+    Messages are grouped by padded block count (shingles are almost
+    always one 64-byte block) and each group runs vectorized in
+    cache-sized chunks. All seeds must share one length: the
+    padded-message scatter (the non-round cost) is built ONCE per chunk
+    and only the seed bytes, the 0x80 terminator and the length field
+    change between seeds — the 64-round compute is the only per-seed
+    work. This is the minhash shape: 8 seeds per unique shingle."""
     slen = len(seeds[0])
     assert all(len(s) == slen for s in seeds), "seeds must share a length"
     n = len(lens)

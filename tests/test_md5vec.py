@@ -14,12 +14,7 @@ import random
 
 import numpy as np
 
-from elb_pipeline.md5vec import (
-    hex32,
-    lex_ranks,
-    md5_digests_cat,
-    md5_seeded_digests_cat,
-)
+from elb_pipeline.md5vec import hex32, lex_ranks, md5_seeded_digests_cat
 
 
 def _layout(msgs):
@@ -31,6 +26,11 @@ def _layout(msgs):
     return cat, starts, lens
 
 
+def _digests(msgs):
+    """Plain md5 of every message: the kernel under the one empty seed."""
+    return md5_seeded_digests_cat(*_layout(msgs), [b""])[0]
+
+
 def _ref(msgs):
     return [hashlib.md5(m).digest() for m in msgs]
 
@@ -39,7 +39,7 @@ def test_boundary_lengths_match_hashlib():
     msgs = []
     for n in (0, 1, 7, 8, 54, 55, 56, 57, 63, 64, 65, 119, 120, 121, 200):
         msgs.append(bytes((i * 31 + n) % 256 for i in range(n)))
-    got = md5_digests_cat(*_layout(msgs))
+    got = _digests(msgs)
     want = _ref(msgs)
     for i, w in enumerate(want):
         assert bytes(got[i]) == w, f"len {len(msgs[i])}"
@@ -51,14 +51,14 @@ def test_random_mixed_batch_matches_hashlib():
         bytes(rng.randrange(256) for _ in range(rng.randrange(0, 200)))
         for _ in range(500)
     ]
-    got = md5_digests_cat(*_layout(msgs))
+    got = _digests(msgs)
     want = _ref(msgs)
     assert all(bytes(g) == w for g, w in zip(got, want))
 
 
 def test_hex32_matches_hexdigest():
     msgs = [b"", b"abc", b"the quick brown fox", b"x" * 150]
-    hx = hex32(md5_digests_cat(*_layout(msgs)))
+    hx = hex32(_digests(msgs))
     assert [h.decode() for h in hx] == [
         hashlib.md5(m).hexdigest() for m in msgs
     ]
@@ -67,7 +67,7 @@ def test_hex32_matches_hexdigest():
 def test_lex_ranks_order_hexdigest_order():
     rng = random.Random(7)
     msgs = [f"shingle {i} {rng.random()}".encode() for i in range(300)]
-    d = md5_digests_cat(*_layout(msgs))
+    d = _digests(msgs)
     ranks = lex_ranks(d)
     hexes = [hashlib.md5(m).hexdigest() for m in msgs]
     by_rank = [h for _, h in sorted(zip(ranks, hexes))]
@@ -89,5 +89,5 @@ def test_seeded_digests_match_hashlib():
 
 def test_unicode_shingle_round_trip():
     msgs = [s.encode() for s in ["héllo wörld ümlaut", "日本語 の テキスト", "a b c"]]
-    got = md5_digests_cat(*_layout(msgs))
+    got = _digests(msgs)
     assert [bytes(g) for g in got] == _ref(msgs)

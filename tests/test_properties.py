@@ -216,6 +216,12 @@ def test_simhash32_kernel_matches_naive():
         None,               # null → 0
         "one two three",    # exactly one shingle
         "rep rep rep rep rep",  # repeated shingle occurrences
+        # the _shingles() edge cases of tests/test_shingles.py
+        "",
+        "a b",
+        "a  b c",
+        " a b c ",
+        " ".join(f"w{i % 37}" for i in range(300)),
     ]
     got = _simhash32_batch(pd.Series(texts, dtype=object))
     want = [_naive_simhash32(t) for t in texts]
