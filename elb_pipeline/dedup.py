@@ -402,10 +402,10 @@ def _jaccard_verify(cands: DataFrame, sets_: DataFrame) -> DataFrame:
     sizes (hence Jaccard) are identical to the string form absent an
     intra-pair 64-bit collision (~|union|^2 / 2^65 ≈ 1e-16 per pair — the
     DuckDB twins verify on plain strings, so any collision would surface
-    as an oracle mismatch). The byte win is the scale story:
-    the candidate join's intermediates carry ~8 B/shingle instead of the
-    ~30 B/shingle strings — at 233k docs the string form's verify stage
-    spilled >65 GB and died on ENOSPC; the hashed form fits (recorded in
+    as an oracle mismatch). The byte win is the scale story: the candidate
+    join's intermediates carry ~8 B/shingle instead of the ~30 B/shingle
+    strings — at 233k docs the string form's verify stage spilled >65 GB
+    and died on ENOSPC; the hashed form fits (recorded in
     BENCH/dedup_scaling_r5.json ``prefix``). ``sets_`` is a
     ``_shingle_sets`` frame."""
     a = sets_.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("a_sh"))
