@@ -71,3 +71,52 @@ def test_public_names_have_production_callers():
     }
     assert orphans - ALLOWED == set(), "top-level names only tests use"
     assert ALLOWED <= orphans, "allowlisted names now have callers"
+
+
+# defaulted parameters that production never sets but a test must
+DEFAULT_ALLOWED = {
+    # test_aggregate_assembly needs a small chunk to reach the multi-chunk merge
+    "aggregate.assemble_conversations_chunked.chunk",
+    # bench.py passes 2.0 through _pool_map, which the call scan cannot see
+    "bench_kernel.cpu_probe_rate.seconds",
+}
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(name, positional index or None for keyword-only) of each parameter
+    that carries a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _sets(call: ast.Call, name: str, index: int | None) -> bool:
+    """Whether ``call`` passes the parameter, by keyword or by position (a
+    ``*args``/``**kwargs`` splat counts as passing every parameter it could)."""
+    if any(k.arg in (name, None) for k in call.keywords):
+        return True
+    if index is None:
+        return False
+    return len(call.args) > index or any(isinstance(x, ast.Starred) for x in call.args)
+
+
+def test_defaulted_parameters_have_production_values():
+    calls: dict[str, list[ast.Call]] = {}
+    for f in PRODUCTION:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                callee = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                calls.setdefault(callee, []).append(node)
+    unset = {
+        f"{f.stem}.{fn.name}.{name}"
+        for f in sorted(PACKAGE.glob("*.py"))
+        for fn in ast.parse(f.read_text()).body
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for name, index in _defaulted(fn)
+        if not any(_sets(c, name, index) for c in calls.get(fn.name, []))
+    }
+    assert unset - DEFAULT_ALLOWED == set(), "defaults no production call overrides"
+    assert DEFAULT_ALLOWED <= unset, "allowlisted defaults now have production values"
