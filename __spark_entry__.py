@@ -38,6 +38,7 @@ from elb_pipeline.dialects import (
 )
 from elb_pipeline.deadletter import with_diagnosis
 from elb_pipeline.enrich import enrich
+from elb_pipeline.job import N_ORDERED_SHARDS
 from elb_pipeline.parse import (
     alb_field,
     classic_field,
@@ -47,6 +48,7 @@ from elb_pipeline.parse import (
     routed_struct,
     with_sink,
 )
+from elb_pipeline.streaming import SESSION_GAP_SECONDS
 from elb_pipeline.synth import transcripts_cached, transcripts_from_events
 
 
@@ -354,9 +356,7 @@ def q_dedup_exact(spark, sf_dir):
 
 def q_doc_quality(spark, sf_dir):
     d = _read(spark, sf_dir, "documents")
-    n_tokens = (
-        F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))) + 1
-    )
+    n_tokens = P.n_tokens_expr()
     return d.select(
         "doc_id",
         "lang",
@@ -707,20 +707,10 @@ def q_sequence_pack(spark, sf_dir):
     prefix over shard subtotals broadcast back) — no corpus-wide
     Exchange SinglePartition, plan-asserted in tests/test_plans.py. The
     DuckDB twin recomputes the DIRECT single-stream cumsum, so the oracle
-    proves the decomposition equals the direct form cross-engine. The
-    max-doc_id keyspace bound is one O(1) scalar off a pruned scan (the
-    sharded-export pattern, not a 1-row cross join)."""
+    proves the decomposition equals the direct form cross-engine."""
     from elb_pipeline.packing import sequence_pack
 
-    d = _read(spark, sf_dir, "documents")
-    # empty-table guard (ADVICE r5): max() is None on an empty table; 0
-    # keeps _arith_shard's arithmetic valid (any upper bound works)
-    max_id = d.agg(F.max("doc_id")).first()[0] or 0
-    # shard count follows the session's parallelism (the oracle twin is
-    # invariant to the decomposition width; 8 would cap the cumsum stage)
-    return sequence_pack(
-        d, max_doc_id=max_id, n_shards=spark.sparkContext.defaultParallelism
-    )
+    return sequence_pack(_read(spark, sf_dir, "documents"))
 
 
 def q_lang_quota(spark, sf_dir):
@@ -982,23 +972,14 @@ def q_corpus_sequences(spark, sf_dir):
     concat-and-chunk sequence packer — the final artifact a pretraining
     data pipeline ships: the 512-token training-sequence manifest of the
     CURATED corpus. The packer reuses the survivors' n_tokens column (no
-    re-tokenization scan) and its two-phase distributed prefix sum; the
-    doc_id keyspace bound comes from the raw table (an upper bound keeps
-    the arithmetic shard monotone over any survivor subset — O(1) scalar
-    off a pruned scan). The DuckDB twin composes the SAME curation CTE
-    chain with the direct single-stream cumsum pack, so parity proves the
-    whole curate→pack pipeline cross-engine in one check."""
+    re-tokenization scan) and its two-phase distributed prefix sum, bounded
+    by the survivors' own max doc_id (a scan of the materialized survivor
+    table). The DuckDB twin composes the SAME curation CTE chain with the
+    direct single-stream cumsum pack, so parity proves the whole
+    curate→pack pipeline cross-engine in one check."""
     from elb_pipeline.packing import sequence_pack
 
-    surv = q_training_corpus(spark, sf_dir)
-    max_id = (
-        _read(spark, sf_dir, "documents").agg(F.max("doc_id")).first()[0] or 0
-    )
-    return sequence_pack(
-        surv,
-        max_doc_id=max_id,
-        n_shards=spark.sparkContext.defaultParallelism,
-    )
+    return sequence_pack(q_training_corpus(spark, sf_dir))
 
 
 def q_streaming_dedup(spark, sf_dir):
@@ -1121,10 +1102,6 @@ def _both_json_lines(spark, sf_dir):
     )
 
 
-N_ORDERED_SHARDS = 8
-SESSION_GAP_SECONDS = 30 * 60
-
-
 def q_ndjson_sharded_lines(spark, sf_dir):
     """SCALE-OUT ordered NDJSON export (VERDICT r3 #5): the single-stream
     variant's global total order, reproduced with NO single-partition
@@ -1192,8 +1169,7 @@ def q_conversation_sessions_batch(spark, sf_dir):
     no global ordering anywhere."""
     from elb_pipeline.streaming import batch_session_replay
 
-    t = transcripts_cached(spark, sf_dir)
-    return batch_session_replay(t, SESSION_GAP_SECONDS)
+    return batch_session_replay(transcripts_cached(spark, sf_dir))
 
 
 def q_conversation_assembly(spark, sf_dir):

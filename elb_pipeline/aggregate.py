@@ -12,7 +12,7 @@ target-mandated aggregate stages. Design notes for scale:
   per-(sink, bucket, day) partials cross the wire.
 - ``salted_sink_day_bucket_counts`` demonstrates the two-stage salted
   pattern for pathologically hot conversations at 10^12-turn scale: stage 1
-  aggregates on (keys + salt) spreading one hot key over ``n_salts``
+  aggregates on (keys + salt) spreading one hot key over ``N_SALTS``
   reducers, stage 2 re-aggregates without the salt. Results are provably
   identical to the direct aggregation (asserted by the oracle).
 """
@@ -26,16 +26,16 @@ N_BUCKETS = 16
 N_SALTS = 8
 
 
-def conv_bucket(col: str = "conv_id", n_buckets: int = N_BUCKETS) -> Column:
+def conv_bucket() -> Column:
     # substring(conv_id, 6) strips the 'conv-' prefix; 1-indexed in both
     # Spark SQL and DuckDB, so the oracle expression is textually identical.
-    return (F.expr(f"CAST(substring({col}, 6) AS INT)") % n_buckets).alias(
+    return (F.expr("CAST(substring(conv_id, 6) AS INT)") % N_BUCKETS).alias(
         "conv_bucket"
     )
 
 
-def ts_day(col: str = "ts") -> Column:
-    return F.to_date(F.col(col)).alias("ts_day")
+def ts_day() -> Column:
+    return F.to_date(F.col("ts")).alias("ts_day")
 
 
 def sink_counts(routed: DataFrame) -> DataFrame:
@@ -43,29 +43,22 @@ def sink_counts(routed: DataFrame) -> DataFrame:
     return routed.groupBy("sink").agg(F.count("*").alias("n"))
 
 
-def sink_day_bucket_counts(
-    routed: DataFrame, n_buckets: int = N_BUCKETS
-) -> DataFrame:
+def sink_day_bucket_counts(routed: DataFrame) -> DataFrame:
     """Counts per (sink, conv_id bucket, ts day)."""
-    return routed.groupBy(
-        "sink", conv_bucket(n_buckets=n_buckets), ts_day()
-    ).agg(F.count("*").alias("n"))
+    return routed.groupBy("sink", conv_bucket(), ts_day()).agg(
+        F.count("*").alias("n")
+    )
 
 
-def salted_sink_day_bucket_counts(
-    routed: DataFrame, n_buckets: int = N_BUCKETS, n_salts: int = N_SALTS
-) -> DataFrame:
+def salted_sink_day_bucket_counts(routed: DataFrame) -> DataFrame:
     """Two-stage salted aggregation — identical result, skew-resistant.
 
     Stage 1 groups by (sink, bucket, day, salt) where salt spreads each hot
-    conversation across ``n_salts`` partitions; stage 2 sums the partials.
+    conversation across ``N_SALTS`` partitions; stage 2 sums the partials.
     """
-    salt = F.pmod(F.crc32(F.concat_ws("#", "conv_id", "turn_idx")), F.lit(n_salts))
+    salt = F.pmod(F.crc32(F.concat_ws("#", "conv_id", "turn_idx")), F.lit(N_SALTS))
     stage1 = routed.groupBy(
-        "sink",
-        conv_bucket(n_buckets=n_buckets),
-        ts_day(),
-        salt.alias("_salt"),
+        "sink", conv_bucket(), ts_day(), salt.alias("_salt")
     ).agg(F.count("*").alias("partial_n"))
     return stage1.groupBy("sink", "conv_bucket", "ts_day").agg(
         F.sum("partial_n").alias("n")

@@ -16,10 +16,11 @@ broadcast of the distinct benchmark shingles. No reference counterpart
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from elb_pipeline import dedup as D
+from elb_pipeline.packing import n_tokens_expr
 
 # quality/language screen constants (shared with the oracle SQL twins)
 MIN_TOKENS = 30
@@ -28,13 +29,6 @@ MIN_STOPWORDS = 2
 N_BENCH_DOCS = 10  # doc_id < 10 are the held-out benchmark docs
 
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "it", "for", "on"]
-
-
-def n_tokens_col() -> Column:
-    """Whitespace token count via pure length arithmetic (no split array)."""
-    return (
-        F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))) + 1
-    )
 
 
 def training_corpus(
@@ -82,7 +76,7 @@ def training_corpus(
         F.col("doc_id").alias("base_id")
     )
 
-    n_tokens = n_tokens_col()
+    n_tokens = n_tokens_expr()
     sw = F.array(*[F.lit(w) for w in EN_STOPWORDS])
     n_sw = F.size(F.array_intersect(F.split(F.col("text"), " "), sw))
     return (

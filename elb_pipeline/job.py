@@ -65,6 +65,7 @@ from elb_pipeline.parse import PARSE_ABORT_SENTINEL, routed_json_both
 
 
 _SINKS = (SINK_ALB, SINK_CLASSIC, SINK_MALFORMED)
+N_ORDERED_SHARDS = 8  # range shards of the ordered NDJSON export
 
 
 class StrictModeError(RuntimeError):
@@ -186,9 +187,7 @@ def export_ndjson_ordered(spark: SparkSession, output_dir: str) -> str:
     return path
 
 
-def export_ndjson_sharded(
-    spark: SparkSession, output_dir: str, n_shards: int = 8
-) -> str:
+def export_ndjson_sharded(spark: SparkSession, output_dir: str) -> str:
     """PARALLEL order-preserving NDJSON export (VERDICT r3 #5 — the
     executable scale-out story for :func:`export_ndjson_ordered`):
     ``repartitionByRange`` on the stable turn key assigns ascending,
@@ -198,13 +197,14 @@ def export_ndjson_sharded(
     partition id — so concatenating the shard files in name order
     reproduces the single-stream export's exact line sequence with NO
     single-partition stage anywhere in the plan. At 100 TB each shard is
-    an independent writer task; n_shards scales with the cluster."""
+    an independent writer task; ``N_ORDERED_SHARDS`` shards here, the
+    same count the oracled line-numbering query uses."""
     data = spark.read.parquet(f"{output_dir}/data")
     path = f"{output_dir}/ndjson_sharded"
     (
         data.where(F.col("sink").isin(SINK_ALB, SINK_CLASSIC))
         .select("conv_id", "turn_idx", "json")
-        .repartitionByRange(n_shards, "conv_id", "turn_idx")
+        .repartitionByRange(N_ORDERED_SHARDS, "conv_id", "turn_idx")
         .sortWithinPartitions("conv_id", "turn_idx")
         .select("json")
         .write.mode("overwrite")

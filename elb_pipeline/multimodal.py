@@ -29,6 +29,8 @@ from pyspark.sql import types as T
 
 MEDIA_KINDS = ["image", "audio", "video"]
 N_FEATURES = 8
+MAX_SIDE = 256  # longest side of a resized image
+FRAME_STEP = 5  # every FRAME_STEP-th video frame is sampled
 
 try:  # real decoders, if the environment ever provides them
     import PIL.Image  # noqa: F401
@@ -111,12 +113,13 @@ def decode_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(gen, FEATURES_SCHEMA)
 
 
-def resize_meta(media: DataFrame, max_side: int = 256) -> DataFrame:
+def resize_meta(media: DataFrame) -> DataFrame:
     """Resize planning (pure metadata arithmetic — no decode needed):
-    scale factor and target dims for image rows."""
+    scale factor and target dims for image rows, longest side capped at
+    ``MAX_SIDE``."""
     w, h = F.col("meta.width"), F.col("meta.height")
     longest = F.greatest(w, h)
-    scale = F.when(longest > max_side, max_side / longest).otherwise(F.lit(1.0))
+    scale = F.when(longest > MAX_SIDE, MAX_SIDE / longest).otherwise(F.lit(1.0))
     return media.where(F.col("kind") == "image").select(
         "media_id",
         w.alias("width"),
@@ -127,16 +130,16 @@ def resize_meta(media: DataFrame, max_side: int = 256) -> DataFrame:
     )
 
 
-def sample_frames(media: DataFrame, every_n: int = 5) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video rows: one output row per sampled frame
-    index (0, every_n, 2·every_n, … < n_frames)."""
+    index (0, FRAME_STEP, 2·FRAME_STEP, … < n_frames)."""
     nf = F.col("meta.n_frames")
     return (
         media.where(F.col("kind") == "video")
         .select(
             "media_id",
             nf.alias("n_frames"),
-            F.explode(F.sequence(F.lit(0), nf - 1, F.lit(every_n))).alias(
+            F.explode(F.sequence(F.lit(0), nf - 1, F.lit(FRAME_STEP))).alias(
                 "frame_idx"
             ),
         )

@@ -64,12 +64,12 @@ def with_prelude(body: str) -> str:
     return f"WITH {pool_cte()},\n{transcripts_cte()},\n{routed_cte()}\n{body}"
 
 
-def conv_bucket_sql(col: str = "conv_id", n_buckets: int = N_BUCKETS) -> str:
+def conv_bucket_sql() -> str:
     # textually identical expression to aggregate.conv_bucket
-    return f"CAST(substring({col}, 6) AS INT) % {n_buckets}"
+    return f"CAST(substring(conv_id, 6) AS INT) % {N_BUCKETS}"
 
 
-def fields_ok_sql(dialect, text: str = "text") -> str:
+def fields_ok_sql(dialect) -> str:
     """Leading-well-formed-field count as pure SQL: the cumulative prefix
     predicates are monotone (prefix k ⇒ prefix k-1), so summing the 0/1
     matches equals the max matching k — the same quantity
@@ -78,7 +78,7 @@ def fields_ok_sql(dialect, text: str = "text") -> str:
     terms = []
     for k in range(1, len(dialect.parts) + 1):
         pat = "^(?:" + "".join(dialect.parts[:k]) + ")"
-        terms.append(f"(CASE WHEN regexp_matches({text}, {_sq(pat)}) THEN 1 ELSE 0 END)")
+        terms.append(f"(CASE WHEN regexp_matches(text, {_sq(pat)}) THEN 1 ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
 
 

@@ -4,7 +4,7 @@ Two curation-pipeline operators downstream of dedup/quality screens:
 
 ``sequence_pack`` — concat-and-chunk packing, the canonical pretraining
 step: documents are concatenated in stable doc_id order into one token
-stream, then chunked into fixed-length training sequences of ``seq_len``
+stream, then chunked into fixed-length training sequences of ``SEQ_LEN``
 tokens (documents may straddle a boundary — exactly how pretraining data
 loaders pack). The hard part at scale is the global running token offset:
 a naive ``Window.orderBy(doc_id)`` cumsum plans an
@@ -14,18 +14,20 @@ computes it as the classic two-phase distributed prefix sum instead:
   phase 1  shard docs by an order-preserving arithmetic range partition
            of the doc_id keyspace (monotone in the sort key — the same
            device as the sharded NDJSON export); per-shard cumsum via a
-           window PARTITIONED by shard (parallel, one shard per task);
+           window PARTITIONED by shard (parallel, one shard per task).
+           The shard count S follows the session (``defaultParallelism``)
+           and the keyspace bound is the input's own ``max(doc_id)``;
   phase 2  per-shard subtotals (a partial-first groupBy down to S rows)
            → exclusive prefix over the S-row aggregate (the only
-           single-partition window, over S≈8 rows — O(shards), the same
+           single-partition window, over S rows — O(shards), the same
            shape AQE itself uses for statistics) → broadcast-joined back.
 
 ``global_start = shard_prefix + within_shard_cumsum - n_tokens`` then
 never needed a global sort. Everything downstream (sequence spans, the
 per-sequence rollup) is one hash shuffle on seq_id.
 
-``lang_quota`` — keep at most QUOTA docs per language by a deterministic
-priority order. The naive worry: ``row_number`` over
+``lang_quota`` — keep at most LANG_QUOTA docs per language by a
+deterministic priority order. The naive worry: ``row_number`` over
 ``partitionBy(lang)`` shuffles every row of a hot language into one task
 — the windowed analog of the skewed aggregation
 (BENCH/skew_bench_r5.json).
@@ -54,7 +56,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SEQ_LEN = 512  # tokens per packed training sequence
-N_PACK_SHARDS = 8  # prefix-sum shards (≈ tasks for the cumsum phase)
 LANG_QUOTA = 40  # max docs kept per language
 
 
@@ -77,16 +78,20 @@ def _arith_shard(key: Column, max_key: int, n_shards: int) -> Column:
     ).cast("int")
 
 
-def doc_token_spans(
-    docs: DataFrame, max_doc_id: int, n_shards: int = N_PACK_SHARDS
-) -> DataFrame:
+def doc_token_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, start, fin): each doc's half-open token interval
     [start, fin] in the concatenated doc_id-ordered token stream, via the
     two-phase prefix sum described in the module docstring. If ``docs``
     already carries an ``n_tokens`` column (e.g. the curated-corpus
     survivors), it is used as-is; otherwise it is derived from ``text``.
-    ``max_doc_id`` only needs to be an UPPER BOUND on the keyspace — the
-    arithmetic shard stays monotone for any subset of ids."""
+    There is one shard per core of the session (``defaultParallelism``),
+    and the keyspace bound is ``max(doc_id)`` of ``docs`` — one scalar
+    job. Any upper bound would do: the arithmetic shard stays monotone
+    for every subset of ids."""
+    # empty-frame guard: max() is None on no rows; 0 keeps the shard
+    # arithmetic valid
+    max_doc_id = docs.agg(F.max("doc_id")).first()[0] or 0
+    n_shards = docs.sparkSession.sparkContext.defaultParallelism
     nt = (
         F.col("n_tokens").cast("long")
         if "n_tokens" in docs.columns
@@ -129,37 +134,30 @@ def doc_token_spans(
     )
 
 
-def sequence_pack(
-    docs: DataFrame,
-    max_doc_id: int,
-    seq_len: int = SEQ_LEN,
-    n_shards: int = N_PACK_SHARDS,
-) -> DataFrame:
+def sequence_pack(docs: DataFrame) -> DataFrame:
     """Per-sequence packing manifest: (seq_id, n_docs, n_tokens, first_doc,
     last_doc). A doc spanning a boundary contributes to every sequence it
-    touches; every sequence holds exactly ``seq_len`` tokens except the
-    last. The explode is bounded by ceil(doc_len/seq_len) rows per doc."""
+    touches; every sequence holds exactly ``SEQ_LEN`` tokens except the
+    last. The explode is bounded by ceil(doc_len/SEQ_LEN) rows per doc."""
     # n_tokens > 0 guard (ADVICE r5): a pre-supplied zero-token row would
     # make fin < start and sequence() default to step -1, silently
     # emitting phantom descending seq_ids; all current callers derive
     # nt >= 1, so this filter drops nothing today — it turns a latent
     # wrong-answer path into a no-op.
-    spans = doc_token_spans(docs, max_doc_id, n_shards=n_shards).where(
-        F.col("n_tokens") > 0
-    )
+    spans = doc_token_spans(docs).where(F.col("n_tokens") > 0)
     # INTEGER division (`div`), not floor(double /): token offsets at
     # 10^12-turn scale can pass 2^53, where double division mis-bins the
     # boundary doc; the DuckDB twin's `//` is integer division already
-    first_seq = F.expr(f"start div {seq_len}")
-    last_seq = F.expr(f"fin div {seq_len}")
+    first_seq = F.expr(f"start div {SEQ_LEN}")
+    last_seq = F.expr(f"fin div {SEQ_LEN}")
     per_seq = spans.select(
         "doc_id",
         "start",
         "fin",
         F.explode(F.sequence(first_seq, last_seq)).alias("seq_id"),
     )
-    seq_lo = F.col("seq_id") * seq_len
-    seq_hi = seq_lo + (seq_len - 1)
+    seq_lo = F.col("seq_id") * SEQ_LEN
+    seq_hi = seq_lo + (SEQ_LEN - 1)
     tok_in_seq = (
         F.least(F.col("fin"), seq_hi) - F.greatest(F.col("start"), seq_lo) + 1
     )
@@ -171,7 +169,22 @@ def sequence_pack(
     )
 
 
-def sequence_pack_sql(seq_len: int = SEQ_LEN) -> str:
+# spans → per-sequence rollup, shared by both DuckDB twins below: the
+# relation ``c`` carries (doc_id, nt, start) in the single-stream order
+_PACK_ROLLUP_SQL = (
+    "e AS (SELECT doc_id, start, start + nt - 1 AS fin FROM c), "
+    "x AS (SELECT doc_id, start, fin, "
+    f"unnest(generate_series(start // {SEQ_LEN}, fin // {SEQ_LEN})) "
+    "AS seq_id FROM e) "
+    "SELECT seq_id, count(*) AS n_docs, "
+    f"CAST(sum(least(fin, (seq_id + 1) * {SEQ_LEN} - 1) - "
+    f"greatest(start, seq_id * {SEQ_LEN}) + 1) AS BIGINT) AS n_tokens, "
+    "min(doc_id) AS first_doc, max(doc_id) AS last_doc "
+    "FROM x GROUP BY seq_id"
+)
+
+
+def sequence_pack_sql() -> str:
     """DuckDB twin: the direct single-stream form (plain cumsum window) —
     proving the two-phase decomposition equals it."""
     return (
@@ -180,20 +193,11 @@ def sequence_pack_sql(seq_len: int = SEQ_LEN) -> str:
         "FROM documents), "
         "c AS (SELECT doc_id, nt, "
         "CAST(sum(nt) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - nt "
-        "AS BIGINT) AS start FROM d), "
-        "e AS (SELECT doc_id, start, start + nt - 1 AS fin FROM c), "
-        "x AS (SELECT doc_id, start, fin, "
-        f"unnest(generate_series(start // {seq_len}, fin // {seq_len})) "
-        "AS seq_id FROM e) "
-        "SELECT seq_id, count(*) AS n_docs, "
-        f"CAST(sum(least(fin, (seq_id + 1) * {seq_len} - 1) - "
-        f"greatest(start, seq_id * {seq_len}) + 1) AS BIGINT) AS n_tokens, "
-        "min(doc_id) AS first_doc, max(doc_id) AS last_doc "
-        "FROM x GROUP BY seq_id"
+        "AS BIGINT) AS start FROM d), " + _PACK_ROLLUP_SQL
     )
 
 
-def sequence_pack_tail_sql(src: str, nt: str, seq_len: int = SEQ_LEN) -> str:
+def sequence_pack_tail_sql(src: str, nt: str) -> str:
     """DuckDB CTE TAIL packing relation ``src`` (must expose ``doc_id``
     and the token-count expression ``nt``) — compose after
     ``WITH ..., {src} AS (...), `` to pack any upstream pipeline stage
@@ -202,21 +206,12 @@ def sequence_pack_tail_sql(src: str, nt: str, seq_len: int = SEQ_LEN) -> str:
     return (
         f"c AS (SELECT doc_id, CAST({nt} AS BIGINT) AS nt, "
         f"CAST(sum({nt}) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) "
-        f"- {nt} AS BIGINT) AS start FROM {src}), "
-        "e AS (SELECT doc_id, start, start + nt - 1 AS fin FROM c), "
-        "x AS (SELECT doc_id, start, fin, "
-        f"unnest(generate_series(start // {seq_len}, fin // {seq_len})) "
-        "AS seq_id FROM e) "
-        "SELECT seq_id, count(*) AS n_docs, "
-        f"CAST(sum(least(fin, (seq_id + 1) * {seq_len} - 1) - "
-        f"greatest(start, seq_id * {seq_len}) + 1) AS BIGINT) AS n_tokens, "
-        "min(doc_id) AS first_doc, max(doc_id) AS last_doc "
-        "FROM x GROUP BY seq_id"
+        f"- {nt} AS BIGINT) AS start FROM {src}), " + _PACK_ROLLUP_SQL
     )
 
 
-def lang_quota(docs: DataFrame, quota: int = LANG_QUOTA) -> DataFrame:
-    """Top-``quota`` docs per language by (n_chars DESC, doc_id) — the
+def lang_quota(docs: DataFrame) -> DataFrame:
+    """Top-``LANG_QUOTA`` docs per language by (n_chars DESC, doc_id) — the
     direct window, which Spark 4's WindowGroupLimit rule makes
     skew-resistant (Partial map-side prune below the exchange,
     plan-asserted in tests/test_plans.py — see module docstring).
@@ -226,14 +221,14 @@ def lang_quota(docs: DataFrame, quota: int = LANG_QUOTA) -> DataFrame:
     return (
         docs.select("lang", "doc_id", "n_chars")
         .withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= quota)
+        .where(F.col("rank") <= LANG_QUOTA)
     )
 
 
-def lang_quota_sql(quota: int = LANG_QUOTA) -> str:
+def lang_quota_sql() -> str:
     return (
         "SELECT lang, doc_id, n_chars, CAST(rn AS INT) AS rank FROM ("
         "SELECT lang, doc_id, n_chars, row_number() OVER ("
         "PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rn "
-        f"FROM documents) WHERE rn <= {quota}"
+        f"FROM documents) WHERE rn <= {LANG_QUOTA}"
     )

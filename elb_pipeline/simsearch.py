@@ -38,6 +38,7 @@ CLONE_DELTA = 0.01
 NEAR_DUP_THRESHOLD = 0.99
 PIVOT_IDS = [5, 76, 147, 218, 289, 360, 431]  # K=7 fixed pivots
 TOPK = 10
+QUERY_ID = 0  # vec_id whose neighbours the ANN scan returns
 
 # deterministic integer projection vectors, shared verbatim by the Spark
 # and SQL builders: r_j[k] = ((k+1)·(2j+3)) mod 97 − 48 ∈ [−48, 48]
@@ -128,12 +129,12 @@ def with_srp_bucket(pool: DataFrame) -> DataFrame:
     return pool.withColumn("bucket", bucket.cast("int"))
 
 
-def srp_bucket_sql(e: str = "e") -> str:
+def srp_bucket_sql() -> str:
     terms = []
     for j in range(N_PROJ):
         vec = "[" + ", ".join(f"{v}.0" for v in PROJECTIONS[j]) + "]"
         terms.append(
-            f"(CASE WHEN list_dot_product({e}, {vec}) >= 0 "
+            f"(CASE WHEN list_dot_product(e, {vec}) >= 0 "
             f"THEN {1 << j} ELSE 0 END)"
         )
     return "CAST((" + " + ".join(terms) + ") AS INT)"
@@ -163,7 +164,7 @@ def near_dup_pairs_sql() -> str:
     cos = cosine_sql("a.e", "b.e")
     return (
         f"WITH {emb_pool_cte()}, "
-        f"bucketed AS (SELECT vec_id, e, {srp_bucket_sql('e')} AS bucket "
+        f"bucketed AS (SELECT vec_id, e, {srp_bucket_sql()} AS bucket "
         "FROM emb_pool) "
         "SELECT a.bucket AS bucket, a.vec_id AS a_id, b.vec_id AS b_id, "
         f"round({cos}, 4) AS cos_sim "
@@ -203,10 +204,8 @@ def with_ivf_assignment(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf_topk(
-    embeddings: DataFrame, query_id: int = 0, n_probes: int = 1
-) -> DataFrame:
-    """Top-k by cosine among vectors in the query's ``n_probes`` nearest
+def ann_ivf_topk(embeddings: DataFrame, n_probes: int = 1) -> DataFrame:
+    """Top-k by cosine among vectors in ``QUERY_ID``'s ``n_probes`` nearest
     pivot cells (the IVF probe — scans ~n_probes·n/K rows instead of n).
 
     Multi-probe (n_probes ≥ 2) recovers the recall lost at cell
@@ -218,10 +217,10 @@ def ann_ivf_topk(
     assigned = with_ivf_assignment(embeddings)
     q = (
         _pivot_scored(embeddings)
-        .where((F.col("vec_id") == query_id) & (F.col("rk") <= n_probes))
+        .where((F.col("vec_id") == QUERY_ID) & (F.col("rk") <= n_probes))
         .select(F.col("e").alias("qe"), F.col("pid").alias("qpid"))
     )
-    cand = assigned.where(F.col("vec_id") != query_id).join(
+    cand = assigned.where(F.col("vec_id") != QUERY_ID).join(
         F.broadcast(q), F.col("pid") == F.col("qpid")
     )
     cos = cosine(F.col("e"), F.col("qe"))
@@ -233,7 +232,7 @@ def ann_ivf_topk(
     )
 
 
-def ann_ivf_sql(query_id: int = 0, n_probes: int = 1) -> str:
+def ann_ivf_sql(n_probes: int = 1) -> str:
     pivots = ", ".join(str(p) for p in PIVOT_IDS)
     pcos = cosine_sql("b.e", "p.pe")
     return (
@@ -245,10 +244,10 @@ def ann_ivf_sql(query_id: int = 0, n_probes: int = 1) -> str:
         "FROM base b CROSS JOIN piv p), "
         "assigned AS (SELECT vec_id, e, pid FROM scored WHERE rk = 1), "
         "q AS (SELECT e AS qe, pid AS qpid FROM scored "
-        f"WHERE vec_id = {query_id} AND rk <= {n_probes}) "
+        f"WHERE vec_id = {QUERY_ID} AND rk <= {n_probes}) "
         "SELECT vec_id, "
         f"round({cosine_sql('a.e', 'q.qe')}, 4) AS cos_sim "
         "FROM assigned a, q "
-        f"WHERE a.vec_id <> {query_id} AND a.pid = q.qpid "
+        f"WHERE a.vec_id <> {QUERY_ID} AND a.pid = q.qpid "
         f"ORDER BY {cosine_sql('a.e', 'q.qe')} DESC, vec_id LIMIT {TOPK}"
     )

@@ -18,6 +18,10 @@ TRANSCRIPTS_DDL = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+# a conversation's session ends at an event-time gap above this; shared by
+# the stream operator, its batch replay and the replay's DuckDB twin
+SESSION_GAP_SECONDS = 30 * 60
+SESSION_WATERMARK = "10 minutes"  # event-time disorder the stream tolerates
 
 
 def read_transcripts_stream(
@@ -35,12 +39,8 @@ def read_transcripts_stream(
     return r.parquet(path)
 
 
-def dedup_stream(
-    stream: DataFrame,
-    watermark: str = "2 hours",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming exact dedup: drop rows whose ``text_col`` already appeared
+def dedup_stream(stream: DataFrame, watermark: str) -> DataFrame:
+    """Streaming exact dedup: drop rows whose ``text`` already appeared
     within the watermark horizon (the streaming face of the batch
     ``dedup_exact`` / training-data ingestion dedup).
 
@@ -56,8 +56,8 @@ def dedup_stream(
     re-admits are the price of bounded state)."""
     return (
         stream.withWatermark("ts", watermark)
-        .withColumn("_fp", F.md5(F.col(text_col)))
-        .withColumn("_fp_len", F.length(F.col(text_col)))
+        .withColumn("_fp", F.md5(F.col("text")))
+        .withColumn("_fp_len", F.length(F.col("text")))
         .dropDuplicatesWithinWatermark(["_fp", "_fp_len"])
         .drop("_fp", "_fp_len")
     )
@@ -181,11 +181,12 @@ def _event_session_update_fn(gap_ms: int):
     return update
 
 
-def batch_session_replay(t: DataFrame, gap_seconds: int) -> DataFrame:
+def batch_session_replay(t: DataFrame) -> DataFrame:
     """BATCH replay of the event-time gap rule: lag/cumsum windows split a
-    conversation at every >gap event-time jump — the same boundaries the
-    eager streaming sessionizer (:func:`conversation_sessions_event_time`)
-    emits when per-conversation arrival order holds. Shared by the oracled
+    conversation at every event-time jump above ``SESSION_GAP_SECONDS`` —
+    the same boundaries the eager streaming sessionizer
+    (:func:`conversation_sessions_event_time`) emits when per-conversation
+    arrival order holds. Shared by the oracled
     driver query (__spark_entry__.q_conversation_sessions_batch) and the
     streaming↔batch cross-validation test, so the two implementations
     cannot drift apart silently.
@@ -200,7 +201,9 @@ def batch_session_replay(t: DataFrame, gap_seconds: int) -> DataFrame:
     order = ["ts", "turn_idx"] if "turn_idx" in t.columns else ["ts"]
     w = Window.partitionBy("conv_id").orderBy(*order)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    new_sess = ((us - F.lag(us).over(w)) > gap_seconds * 1_000_000).cast("int")
+    new_sess = (
+        (us - F.lag(us).over(w)) > SESSION_GAP_SECONDS * 1_000_000
+    ).cast("int")
     run = (
         Window.partitionBy("conv_id")
         .orderBy(*order)
@@ -216,41 +219,25 @@ def batch_session_replay(t: DataFrame, gap_seconds: int) -> DataFrame:
     )
 
 
-def conversation_sessions_event_time(
-    routed: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def conversation_sessions_event_time(routed: DataFrame) -> DataFrame:
     """EVENT-TIME sessionization (``applyInPandasWithState`` with
     ``EventTimeTimeout``): sessions close when the watermark — driven by
-    observed event times, tolerant of ``watermark`` of disorder — passes
-    the session's last event + ``gap``. Unlike a processing-time timeout,
-    replaying a historical stream yields the SAME session boundaries
-    regardless of ingest speed, and a turn
+    observed event times, tolerant of ``SESSION_WATERMARK`` of disorder —
+    passes the session's last event + ``SESSION_GAP_SECONDS``. Unlike a
+    processing-time timeout, replaying a historical stream yields the SAME
+    session boundaries regardless of ingest speed, and a turn
     older than the watermark cannot reopen a closed session (it is dropped
     by the watermark, the documented late-data contract)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    gap_ms = _duration_ms(gap)
     return (
-        routed.withWatermark("ts", watermark)
+        routed.withWatermark("ts", SESSION_WATERMARK)
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _event_session_update_fn(gap_ms),
+            _event_session_update_fn(SESSION_GAP_SECONDS * 1000),
             outputStructType=SESSION_OUTPUT_SCHEMA,
             stateStructType=SESSION_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def _duration_ms(s: str) -> int:
-    n, unit = s.split()
-    mult = {
-        "millisecond": 1,
-        "second": 1000,
-        "minute": 60_000,
-        "hour": 3_600_000,
-    }[unit.rstrip("s")]
-    return int(n) * mult

@@ -22,6 +22,7 @@ from elb_pipeline.enrich import ROLES, TOOLS
 from elb_pipeline.goldens import TEXT_POOL
 
 EPOCH = "2022-11-01 00:00:00"  # fixed; spans 3+ days via per-row offsets
+N_SYNTH_CONVS = 10_000  # conversations the cold 80% of synth rows cycle over
 
 
 def _pick(values: list[str], key) -> F.Column:
@@ -86,7 +87,6 @@ def transcripts_cache_path(spark: SparkSession, sf_dir: str) -> str:
 def synth_transcripts(
     spark: SparkSession,
     n_rows: int,
-    n_convs: int = 10_000,
     partitions: int | None = None,
 ) -> DataFrame:
     """Bench-scale synthetic transcripts from spark.range (no window, no
@@ -98,14 +98,14 @@ def synth_transcripts(
     rng = spark.range(0, n_rows, 1, partitions) if partitions else spark.range(n_rows)
     i = F.col("id")
     conv_num = F.when(i % 5 == 0, (i % 2).cast("int")).otherwise(
-        (i % n_convs).cast("int")
+        (i % N_SYNTH_CONVS).cast("int")
     )
     return rng.select(
         F.concat(F.lit("conv-"), F.lpad(conv_num.cast("string"), 6, "0")).alias(
             "conv_id"
         ),
         # not dense per conv, but unique within it — sufficient for keys
-        (i / F.lit(n_convs)).cast("int").alias("turn_idx"),
+        (i / F.lit(N_SYNTH_CONVS)).cast("int").alias("turn_idx"),
         _pick(ROLES, i).alias("role"),
         _pick(TEXT_POOL, i * 7 + 3).alias("text"),
         _pick(TOOLS, i).alias("tool"),

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from elb_pipeline.multimodal import (
+    FRAME_STEP,
     MEDIA_KINDS,
     N_FEATURES,
     _decode_payload,
@@ -44,11 +45,11 @@ def test_media_schema_and_features(spark):
 
 def test_frame_sampling_bounds(spark):
     m = media_from_documents(spark, SF_DIR)
-    s = sample_frames(m, every_n=5)
+    s = sample_frames(m)
     bad = s.where(
         (F.col("frame_idx") < 0)
         | (F.col("frame_idx") >= F.col("n_frames"))
-        | (F.col("frame_idx") % 5 != 0)
+        | (F.col("frame_idx") % FRAME_STEP != 0)
     ).count()
     assert bad == 0
     assert s.count() > 0

@@ -24,8 +24,7 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def packed(docs):
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    df = sequence_pack(docs, max_doc_id=max_id).cache()
+    df = sequence_pack(docs).cache()
     yield df
     # unpersist, or the session-wide cache substitutes an InMemoryRelation
     # into test_plans' identical plan and doubles its explain output

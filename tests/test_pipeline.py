@@ -368,7 +368,7 @@ def test_export_ndjson_sharded_concatenation_is_globally_ordered(
 
     out = str(tmp_path / "job_sharded")
     run_job(spark, transcripts, out, mode="skip", n_groups=2)
-    path = export_ndjson_sharded(spark, out, n_shards=8)
+    path = export_ndjson_sharded(spark, out)
 
     files = sorted(glob.glob(f"{path}/part-*"))
     assert len(files) > 1  # genuinely parallel writers

@@ -5,7 +5,11 @@ the benchmark (``perfbench/``) or a package module (its own included). A
 name only tests use still has to be read and kept working; move it into
 its test or delete it. References are counted in the syntax tree (``Name``
 loads, ``Attribute`` names and ``from … import`` names), so a docstring
-or comment that mentions a name does not keep it alive. No Spark."""
+or comment that mentions a name does not keep it alive.
+
+A defaulted parameter of a top-level package function is set, by keyword
+or by position, by some production call: a default no caller overrides is
+a knob with one value, so it belongs in a module constant. No Spark."""
 
 from __future__ import annotations
 

@@ -364,9 +364,7 @@ def test_event_time_sessionization_closes_on_watermark(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{path}/b*")
     )
-    sessions = conversation_sessions_event_time(
-        stream, gap="30 minutes", watermark="10 minutes"
-    )
+    sessions = conversation_sessions_event_time(stream)
     q = (
         sessions.writeStream.outputMode("update")
         .format("memory")
@@ -445,9 +443,7 @@ def test_streaming_sessions_equal_batch_replay(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{path}/b*")
     )
-    sessions = conversation_sessions_event_time(
-        stream, gap="30 minutes", watermark="10 minutes"
-    )
+    sessions = conversation_sessions_event_time(stream)
     q = (
         sessions.writeStream.outputMode("update")
         .format("memory")
@@ -472,7 +468,7 @@ def test_streaming_sessions_equal_batch_replay(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     replay = {
         (r["conv_id"], r["n_turns"], r["session_end_us"])
-        for r in batch_session_replay(batch_df, 30 * 60).collect()
+        for r in batch_session_replay(batch_df).collect()
         if r["conv_id"] != "conv-z"
     }
 
